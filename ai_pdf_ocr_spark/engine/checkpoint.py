@@ -22,27 +22,37 @@ from pyspark.sql import functions as F
 
 from ..kernel.extract import KERNEL_VERSION
 from .io import TableStore
-from .partitioning import (DEFAULT_BUCKETS, assign_bins, compute_assignment,
-                           mapping_df, with_bin)
-from .pipeline import extract_documents
+from .partitioning import DEFAULT_BUCKETS, compute_assignment
+from .pipeline import extract_binned
+
+
+def lineage_rows(committed: DataFrame, run_id: str,
+                 wall_time_s: float) -> DataFrame:
+    """CHECKPOINT-shaped lineage + span-count metrics, one 'done' row
+    per bin present in ``committed`` (EXTRACTED rows plus ``bin``)."""
+    return (
+        committed.groupBy("bin")
+        .agg(F.min("doc_id").alias("doc_id_min"),
+             F.max("doc_id").alias("doc_id_max"),
+             F.count("*").alias("doc_count"),
+             F.sum("span_count_in").alias("span_count_in"),
+             F.sum("span_count_out").alias("span_count_out"),
+             F.sum("dedup_removed").alias("dedup_removed"))
+        .select(F.lit(run_id).alias("run_id"), "bin", "doc_id_min",
+                "doc_id_max", "doc_count", "span_count_in",
+                "span_count_out", "dedup_removed",
+                F.lit(KERNEL_VERSION).alias("kernel_version"),
+                F.lit(float(wall_time_s)).alias("wall_time_s"),
+                F.lit("done").alias("status"))
+    )
 
 
 def run_extraction(spark: SparkSession, documents: DataFrame,
                    store: TableStore, run_id: str,
                    num_partitions: int,
-                   buckets: int = DEFAULT_BUCKETS,
-                   _bin_filter: set[int] | None = None) -> dict:
-    """Run (or resume) one extraction job; returns a summary dict.
-
-    ``_bin_filter`` restricts processing to the given bins — used by the
-    kill-and-rerun tests to simulate a job that died mid-corpus."""
+                   buckets: int = DEFAULT_BUCKETS) -> dict:
+    """Run (or resume) one extraction job; returns a summary dict."""
     t0 = time.monotonic()
-
-    # deterministic bins MUST be derived from the full corpus (resume
-    # filtering happens after) so reruns reproduce identical layout
-    assignment = compute_assignment(documents, num_partitions, buckets)
-    binned = assign_bins(documents, num_partitions, buckets,
-                         assignment=assignment)
 
     ckpt = store.read_checkpoint()
     done = {
@@ -50,52 +60,24 @@ def run_extraction(spark: SparkSession, documents: DataFrame,
         ckpt.where((F.col("run_id") == run_id) & (F.col("status") == "done"))
         .select("bin").distinct().collect()
     }
-
-    todo = binned
-    if done:
-        todo = todo.where(~F.col("bin").isin(*done))
-    if _bin_filter is not None:
-        todo = todo.where(F.col("bin").isin(*_bin_filter))
-
-    target_bins = sorted(
-        (set(range(num_partitions)) - done)
-        & (_bin_filter if _bin_filter is not None
-           else set(range(num_partitions))))
+    target_bins = sorted(set(range(num_partitions)) - done)
     if not target_bins:
         return {"run_id": run_id, "bins_done_prior": sorted(done),
                 "bins_processed": [], "docs_processed": 0,
                 "wall_time_s": time.monotonic() - t0}
 
-    part = (todo.repartition(num_partitions, "rep")
-            .sortWithinPartitions("doc_id"))
-    # re-derive bin from doc_id after the UDF via the same broadcast
-    # mapping table (avoids threading bin through the Arrow stage)
-    extracted = with_bin(extract_documents(part),
-                         mapping_df(spark, assignment, num_partitions),
-                         buckets).drop("rep")
-
+    # deterministic bins MUST be derived from the full corpus (resume
+    # filtering happens after) so reruns reproduce identical layout
+    assignment = compute_assignment(documents, num_partitions, buckets)
+    extracted = extract_binned(documents, assignment, num_partitions,
+                               buckets, skip=frozenset(done))
     store.write_extracted(extracted, mode="overwrite")
     wall = time.monotonic() - t0
 
     # lineage + metrics per bin, derived from the committed output
-    new = (
-        store.read_extracted()
-        .where(F.col("bin").isin(*target_bins))
-        .groupBy("bin")
-        .agg(F.min("doc_id").alias("doc_id_min"),
-             F.max("doc_id").alias("doc_id_max"),
-             F.count("*").alias("doc_count"),
-             F.sum("span_count_in").alias("span_count_in"),
-             F.sum("span_count_out").alias("span_count_out"),
-             F.sum("dedup_removed").alias("dedup_removed"))
-        .withColumn("run_id", F.lit(run_id))
-        .withColumn("kernel_version", F.lit(KERNEL_VERSION))
-        .withColumn("wall_time_s", F.lit(float(wall)))
-        .withColumn("status", F.lit("done"))
-        .select("run_id", "bin", "doc_id_min", "doc_id_max", "doc_count",
-                "span_count_in", "span_count_out", "dedup_removed",
-                "kernel_version", "wall_time_s", "status")
-    )
+    new = lineage_rows(
+        store.read_extracted().where(F.col("bin").isin(*target_bins)),
+        run_id, wall)
     rows = new.collect()
     docs_processed = sum(r.doc_count for r in rows)
     # bins that received zero docs still get a 'done' row so resume

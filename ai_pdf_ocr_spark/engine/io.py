@@ -1,9 +1,9 @@
-"""Table writer abstraction: Iceberg when the runtime jar is present,
-parquet emulation otherwise (SURVEY.md §7 step 7 fallback — this
-sandbox has no network, so the Iceberg jar cannot be fetched; the
-writer interface keeps the swap invisible to kernels and tests).
+"""Parquet table store.  Only the parquet writer exists: it emulates
+the Iceberg layout (SURVEY.md §7 step 7 fallback), and callers see
+only this interface, so an Iceberg writer could replace it without
+touching kernels or tests.
 
-Parquet emulation of the Iceberg layout:
+Layout:
  - ``documents_extracted`` partitioned by ``bin`` (the deterministic
    doc_id-derived bucket — the analog of
    ``partitionedBy(bucket(N, doc_id))``)
@@ -17,15 +17,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from . import schemas
-
-
-def iceberg_available(spark: SparkSession) -> bool:
-    try:
-        spark._jvm.java.lang.Class.forName(
-            "org.apache.iceberg.spark.SparkCatalog")
-        return True
-    except Exception:
-        return False
 
 
 class TableStore:

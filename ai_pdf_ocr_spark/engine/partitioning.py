@@ -111,22 +111,12 @@ def with_bin(df: DataFrame, map_df: DataFrame,
     return salted.join(F.broadcast(map_df), "salt", "left").drop("salt")
 
 
-def assign_bins(df: DataFrame, num_partitions: int,
-                buckets: int = DEFAULT_BUCKETS,
-                assignment: dict[int, int] | None = None) -> DataFrame:
-    """Add deterministic ``bin`` (0..P-1) and ``rep`` columns."""
-    spark = df.sparkSession
-    if assignment is None:
-        assignment = compute_assignment(df, num_partitions, buckets)
-    return with_bin(df, mapping_df(spark, assignment, num_partitions),
-                    buckets)
-
-
 def weighted_repartition(df: DataFrame, num_partitions: int,
                          buckets: int = DEFAULT_BUCKETS,
                          assignment: dict[int, int] | None = None
                          ) -> DataFrame:
-    """Repartition documents into P span-count-balanced partitions.
+    """Repartition documents into P span-count-balanced partitions,
+    adding deterministic ``bin`` (0..P-1) and ``rep`` columns.
 
     Partition i receives exactly the docs with bin == i (verified by
     tests/test_pipeline.py).  Rows are sorted by doc_id within each
@@ -135,9 +125,12 @@ def weighted_repartition(df: DataFrame, num_partitions: int,
     ``assignment`` lets callers precompute the weight profile once per
     corpus (it is table-stats metadata — at 100 TB you compute it at
     ingest/registration time, not per query)."""
-    binned = assign_bins(df, num_partitions, buckets, assignment=assignment)
+    if assignment is None:
+        assignment = compute_assignment(df, num_partitions, buckets)
+    map_df = mapping_df(df.sparkSession, assignment, num_partitions)
     return (
-        binned.repartition(num_partitions, "rep")
+        with_bin(df, map_df, buckets)
+        .repartition(num_partitions, "rep")
         .sortWithinPartitions("doc_id")
     )
 

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from ..kernel.extract import extract_record_batch
 from . import schemas
+from .partitioning import mapping_df, weighted_repartition, with_bin
 
 
 def _extract_iter(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -41,6 +42,22 @@ def extract_documents(df: DataFrame) -> DataFrame:
     UDFs are pruning barriers (SURVEY.md §4)."""
     return df.select("doc_id", "spans").mapInArrow(
         _extract_iter, schema=schemas.EXTRACTED)
+
+
+def extract_binned(docs: DataFrame, assignment: dict[int, int],
+                   num_partitions: int, buckets: int,
+                   skip: frozenset[int] = frozenset()) -> DataFrame:
+    """documents -> EXTRACTED rows plus ``bin``: the batch and streaming
+    core.  Weighted repartition by ``assignment``, minus the ``skip``
+    bins (already committed), then the fused extraction.  ``bin`` is
+    re-derived from doc_id after the UDF via the same broadcast mapping
+    (avoids threading it through the Arrow stage)."""
+    part = weighted_repartition(docs, num_partitions, buckets, assignment)
+    if skip:
+        part = part.where(~F.col("bin").isin(*skip))
+    return with_bin(extract_documents(part),
+                    mapping_df(docs.sparkSession, assignment, num_partitions),
+                    buckets).drop("rep")
 
 
 def extracted_spans_flat(extracted: DataFrame) -> DataFrame:

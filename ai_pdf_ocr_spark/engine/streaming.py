@@ -52,12 +52,11 @@ import hashlib
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..kernel.extract import KERNEL_VERSION
 from . import schemas
+from .checkpoint import lineage_rows
 from .io import TableStore
-from .partitioning import (DEFAULT_BUCKETS, assign_bins, compute_assignment,
-                           mapping_df, with_bin)
-from .pipeline import extract_documents
+from .partitioning import DEFAULT_BUCKETS, compute_assignment
+from .pipeline import extract_binned
 
 STREAM_TABLE = "documents_extracted_stream"
 SIG_TABLE = "stream_signatures"
@@ -112,13 +111,7 @@ def _process_epoch(spark: SparkSession, store: TableStore, run_id: str,
     if not batch_df.take(1):
         return False
     assignment = compute_assignment(batch_df, num_partitions, buckets)
-    binned = assign_bins(batch_df, num_partitions, buckets,
-                         assignment=assignment)
-    part = (binned.repartition(num_partitions, "rep")
-            .sortWithinPartitions("doc_id"))
-    extracted = with_bin(extract_documents(part),
-                         mapping_df(spark, assignment, num_partitions),
-                         buckets).drop("rep")
+    extracted = extract_binned(batch_df, assignment, num_partitions, buckets)
 
     # cross-epoch dedup: flag docs already seen in earlier epochs,
     # then append this epoch's signatures (idempotent: dynamic
@@ -159,22 +152,8 @@ def _process_epoch(spark: SparkSession, store: TableStore, run_id: str,
     committed = (spark.read.parquet(store.path(STREAM_TABLE))
                  .where((F.col("stream") == stream_id)
                         & (F.col("epoch") == int(epoch_id))))
-    rows = (committed.groupBy("bin")
-            .agg(F.min("doc_id").alias("doc_id_min"),
-                 F.max("doc_id").alias("doc_id_max"),
-                 F.count("*").alias("doc_count"),
-                 F.sum("span_count_in").alias("span_count_in"),
-                 F.sum("span_count_out").alias("span_count_out"),
-                 F.sum("dedup_removed").alias("dedup_removed"))
-            .withColumn("run_id", F.lit(f"{run_id}{marker}"))
-            .withColumn("kernel_version", F.lit(KERNEL_VERSION))
-            .withColumn("wall_time_s", F.lit(0.0))
-            .withColumn("status", F.lit("done"))
-            .select("run_id", "bin", "doc_id_min", "doc_id_max",
-                    "doc_count", "span_count_in", "span_count_out",
-                    "dedup_removed", "kernel_version", "wall_time_s",
-                    "status"))
-    store.append_checkpoint(rows)
+    store.append_checkpoint(
+        lineage_rows(committed, f"{run_id}{marker}", 0.0))
     return True
 
 

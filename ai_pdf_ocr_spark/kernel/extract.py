@@ -1,4 +1,4 @@
-"""Batch extraction driver: pandas batches of (doc_id, spans) ->
+"""Batch extraction driver: Arrow record batches of (doc_id, spans) ->
 (doc_id, spans_out, per-doc metrics).
 
 This is the body of the engine's single fused Arrow stage (SURVEY.md
@@ -38,7 +38,7 @@ _METRIC_COLS = ("span_count_in", "span_count_out", "malformed",
 
 def _extract_core(n_docs: int, counts: np.ndarray, kinds, texts, mrefs,
                   offs) -> tuple:
-    """Shared core over flat per-span arrays (already doc-concatenated).
+    """Extraction over flat per-span arrays (already doc-concatenated).
 
     Returns (out_counts, flat out_kind/out_text/out_ref/out_order
     lists, metrics dict of int64 arrays).  Output spans are FLAT,
@@ -246,50 +246,3 @@ def extract_record_batch(rb: pa.RecordBatch) -> pa.RecordBatch:
         [pa.array(metrics[c], type=pa.int64()) for c in _METRIC_COLS]
     return pa.RecordBatch.from_arrays(
         cols, names=["doc_id", "spans", *_METRIC_COLS])
-
-
-def extract_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    """pandas adapter (tests / non-Arrow callers): pdf columns doc_id,
-    spans (sequences of {kind,text,media_ref,offset} dicts); returns
-    one row per doc with list-of-dict spans + metrics."""
-    n_docs = len(pdf)
-    spans_col = pdf["spans"].tolist()
-    counts = np.fromiter((0 if s is None else len(s) for s in spans_col),
-                         np.int64, n_docs)
-    total = int(counts.sum())
-    kinds = np.empty(total, object)
-    texts = np.empty(total, object)
-    mrefs = np.empty(total, object)
-    offs = np.empty(total, np.int64)
-    p = 0
-    for s in spans_col:
-        if s is None:
-            continue
-        for d in s:
-            kinds[p] = d["kind"]
-            texts[p] = d["text"]
-            mrefs[p] = d["media_ref"]
-            offs[p] = -1 if d["offset"] is None else d["offset"]
-            p += 1
-
-    out_counts, ok, ot, orf, oo, metrics = _extract_core(
-        n_docs, counts, kinds, texts, mrefs, offs)
-    off_out = np.concatenate(([0], np.cumsum(out_counts)))
-    out_spans = [
-        [{"kind": k, "text": t, "media_ref": r, "order": o}
-         for k, t, r, o in zip(ok[off_out[i]:off_out[i + 1]],
-                               ot[off_out[i]:off_out[i + 1]],
-                               orf[off_out[i]:off_out[i + 1]],
-                               oo[off_out[i]:off_out[i + 1]])]
-        for i in range(n_docs)
-    ]
-    out = pd.DataFrame({"doc_id": pdf["doc_id"].tolist(),
-                        "spans": out_spans})
-    for c in _METRIC_COLS:
-        out[c] = metrics[c]
-    return out
-
-
-def spans_to_tuples(spans: list[dict]) -> list[tuple]:
-    return [(d["kind"], d["text"], d["media_ref"], d["order"])
-            for d in spans]

@@ -4,20 +4,30 @@ equality on golden + randomized corpora (SURVEY.md §5 items 2/3)."""
 from __future__ import annotations
 
 import pandas as pd
+import pyarrow as pa
+from pyspark.sql.pandas.types import to_arrow_schema
 
+from ai_pdf_ocr_spark.engine.schemas import DOCUMENTS
 from ai_pdf_ocr_spark.fixtures.generate import golden_documents, make_documents
-from ai_pdf_ocr_spark.kernel.extract import extract_batch, spans_to_tuples
+from ai_pdf_ocr_spark.kernel.extract import extract_record_batch
 from tests import oracle as O
+
+_DOCUMENTS_PA = to_arrow_schema(DOCUMENTS)
+
+
+def _batch(docs: list[dict]) -> pa.RecordBatch:
+    """The Arrow batch the fused Spark stage hands the kernel."""
+    return pa.RecordBatch.from_pylist(docs, schema=_DOCUMENTS_PA)
+
+
+def _sequences(out: pa.RecordBatch) -> dict[str, list[tuple]]:
+    return {r["doc_id"]: [(s["kind"], s["text"], s["media_ref"], s["order"])
+                          for s in r["spans"]]
+            for r in out.to_pylist()}
 
 
 def _run_kernel(docs: list[dict]) -> dict[str, list[tuple]]:
-    pdf = pd.DataFrame({
-        "doc_id": [d["doc_id"] for d in docs],
-        "spans": [d["spans"] for d in docs],
-    })
-    out = extract_batch(pdf)
-    return {r.doc_id: spans_to_tuples(r.spans)
-            for r in out.itertuples(index=False)}
+    return _sequences(extract_record_batch(_batch(docs)))
 
 
 def _assert_corpus_equal(docs: list[dict]):
@@ -33,7 +43,15 @@ def test_golden_corpus_exact():
 
 
 def test_random_corpus_exact_seed42():
-    _assert_corpus_equal(make_documents(300, seed=42))
+    docs = make_documents(300, seed=42)
+    _assert_corpus_equal(docs)
+    # a sliced batch (non-zero offset into the list and values
+    # buffers) must flatten to exactly the slice's spans
+    rb = _batch(docs)
+    inner = rb.slice(1, rb.num_rows - 2)
+    assert inner.column("spans").offset == 1
+    got = _sequences(extract_record_batch(inner))
+    assert got == O.extract_corpus(docs[1:-1])
 
 
 def test_random_corpus_exact_other_seeds():
@@ -55,22 +73,18 @@ def test_empty_and_all_malformed_docs():
              "offset": 1},
         ]},
     ]
-    got = _run_kernel(docs)
+    out = extract_record_batch(_batch(docs))
+    got = _sequences(out)
     assert got["empty"] == []
     assert got["allbad"] == []
-    pdf = pd.DataFrame({"doc_id": [d["doc_id"] for d in docs],
-                        "spans": [d["spans"] for d in docs]})
-    out = extract_batch(pdf).set_index("doc_id")
+    out = out.to_pandas().set_index("doc_id")
     assert out.loc["allbad", "malformed"] == 2
     assert out.loc["allbad", "span_count_in"] == 2
     assert out.loc["empty", "span_count_out"] == 0
 
 
 def test_metrics_consistency():
-    docs = make_documents(100, seed=3)
-    pdf = pd.DataFrame({"doc_id": [d["doc_id"] for d in docs],
-                        "spans": [d["spans"] for d in docs]})
-    out = extract_batch(pdf)
+    out = extract_record_batch(_batch(make_documents(100, seed=3))).to_pandas()
     # in = out + malformed + merged_away + dedup_removed + filtered + dropped-direction
     slack = (out.span_count_in - out.span_count_out - out.malformed
              - out.merged_away - out.dedup_removed - out.filtered)

@@ -5,8 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ai_pdf_ocr_spark.engine.partitioning import (
-    assign_bins, weighted_repartition)
+from ai_pdf_ocr_spark.engine.partitioning import weighted_repartition
 from ai_pdf_ocr_spark.engine.pipeline import (
     doc_stats, documents_df, extract_documents, extracted_spans_flat)
 from ai_pdf_ocr_spark.fixtures.generate import golden_documents, make_documents
@@ -54,9 +53,8 @@ def test_e2e_with_weighted_repartition_equality(spark):
 def test_bin_placement_exact(spark):
     # every row lands in the partition equal to its assigned bin
     docs = make_documents(150, seed=4)
-    binned = assign_bins(documents_df(spark, docs), 8)
     placed = (
-        binned.repartition(8, "rep")
+        weighted_repartition(documents_df(spark, docs), 8)
         .withColumn("pid", F.spark_partition_id())
         .select("bin", "pid").distinct().collect()
     )
@@ -68,7 +66,7 @@ def test_bin_placement_exact(spark):
 def test_weighted_balance(spark):
     # heavy-tail corpus: max partition weight within 2.5x of mean
     docs = make_documents(300, seed=13, heavy_tail_frac=0.05)
-    binned = assign_bins(documents_df(spark, docs), 8)
+    binned = weighted_repartition(documents_df(spark, docs), 8)
     loads = (
         binned.groupBy("bin").agg(F.sum(F.size("spans")).alias("w"))
         .collect()

@@ -5,11 +5,14 @@ recompute done bins."""
 
 from __future__ import annotations
 
+import shutil
+
 from pyspark.sql import functions as F
 
 from ai_pdf_ocr_spark.engine.checkpoint import run_extraction
 from ai_pdf_ocr_spark.engine.io import TableStore
 from ai_pdf_ocr_spark.engine.pipeline import documents_df
+from ai_pdf_ocr_spark.engine.schemas import CHECKPOINT
 from ai_pdf_ocr_spark.fixtures.generate import make_documents
 
 
@@ -32,18 +35,24 @@ def test_resume_content_identical(spark, tmp_path):
     assert s1["docs_processed"] == 120
     want = _content(full)
 
-    # killed run: only bins {0,1,2} complete
+    # killed run: only bins {0,1,2} committed their checkpoint rows.
+    # The other bins' data is stale (written but never checkpointed)
+    # or, for one bin, missing; the resume must overwrite / fill both.
     part = TableStore(spark, str(tmp_path / "part"))
-    s2 = run_extraction(spark, df, part, "run-A", P,
-                        _bin_filter={0, 1, 2})
-    assert set(s2["bins_processed"]) <= {0, 1, 2}
+    run_extraction(spark, df, part, "run-A", P)
+    ckpt = part.read_checkpoint().collect()
+    kept = [r for r in ckpt if r.bin < 3]
+    shutil.rmtree(part.path("checkpoint"))
+    part.append_checkpoint(spark.createDataFrame(kept, schema=CHECKPOINT))
+    lost = next(r.bin for r in ckpt if r.bin >= 3 and r.doc_count)
+    shutil.rmtree(part.path(f"documents_extracted/bin={lost}"))
     interim = part.read_extracted().count()
     assert 0 < interim < 120
 
     # resume: processes exactly the remaining bins
     s3 = run_extraction(spark, df, part, "run-A", P)
-    assert set(s3["bins_processed"]) == set(range(P)) - set(s2["bins_processed"])
-    assert s2["docs_processed"] + s3["docs_processed"] == 120
+    assert set(s3["bins_processed"]) == set(range(P)) - {0, 1, 2}
+    assert sum(r.doc_count for r in kept) + s3["docs_processed"] == 120
     assert _content(part) == want
 
     # idempotent: a third run is a no-op

@@ -16,8 +16,8 @@ import pandas as pd
 import pyarrow as pa
 
 from .decode import decode_flat
-from .layout import (MERGE_THRESHOLD, REMOVE_THRESHOLD, SMALL_PAGE,
-                     process_page, process_page_fast)
+from .layout import (SMALL_PAGE, pair_predicates, process_page,
+                     process_page_fast)
 
 KERNEL_VERSION = "1.2.0"
 
@@ -93,10 +93,9 @@ def _extract_core(n_docs: int, counts: np.ndarray, kinds, texts, mrefs,
 
         # ---- batched pairwise candidates over all small pages --------
         # The O(n^2) merge (J3) and dedupe (J2) PREDICATES are pure
-        # float math -> computed here once for every (i<j) pair of every
-        # small page as flat numpy arrays (same expressions as
-        # layout._ratio_smaller_matrix/_ratio_own_matrix).  Only the
-        # order-dependent greedy STATE MACHINES stay per-page
+        # float math -> evaluated here once (layout.pair_predicates) for
+        # every (i<j) pair of every small page as flat numpy arrays.
+        # Only the order-dependent greedy STATE MACHINES stay per-page
         # (process_page_fast), walking the candidate pairs; pairs whose
         # geometry the merge stage changed are recomputed there around
         # the merged blocks only.
@@ -116,62 +115,33 @@ def _extract_core(n_docs: int, counts: np.ndarray, kinds, texts, mrefs,
             PI = np.concatenate(pi_parts); PJ = np.concatenate(pj_parts)
             LI = np.concatenate(li_parts); LJ = np.concatenate(lj_parts)
             pair_off = np.concatenate(([0], np.cumsum(n_pairs)))
-
-            area = (x1 - x0) * (y1 - y0)
-            is_text = okind == "text"
-            dcode = pd.factorize(direction)[0]
-
-            il = np.maximum(x0[PI], x0[PJ]); it = np.maximum(y0[PI], y0[PJ])
-            ir = np.minimum(x1[PI], x1[PJ]); ib = np.minimum(y1[PI], y1[PJ])
-            strict = (il < ir) & (it < ib)
-            inter = (ir - il) * (ib - it)
-            ai = area[PI]; aj = area[PJ]
-            smaller = np.minimum(ai, aj)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                ratio_sm = np.where(strict & (smaller > 0),
-                                    inter / smaller, 0.0)
-                own_i = np.where(strict & (ai != 0), inter / ai, 0.0)
-                own_j = np.where(strict & (aj != 0), inter / aj, 0.0)
-            merge_cand = ((ratio_sm >= MERGE_THRESHOLD) & is_text[PI]
-                          & is_text[PJ] & (dcode[PI] == dcode[PJ]))
-            dd_ij = (own_i >= REMOVE_THRESHOLD) & (ai < aj)
-            dd_ji = (own_j >= REMOVE_THRESHOLD) & (aj < ai)
+            mg, dd, small, large = pair_predicates(
+                PI, PJ, x0, y0, x1, y1, okind == "text",
+                pd.factorize(direction)[0])
 
             # group candidate pairs per page WITHOUT a per-pair Python
-            # loop: hit indices are ascending, so one searchsorted +
-            # split yields each page's slice, and zip(tolist, tolist)
-            # builds the pair lists in C (the per-pair dict-append loop
-            # was the top _extract_core cost once heavy 100-160-span
-            # pages started routing through the batched stage)
+            # loop: hit indices are ascending, so one searchsorted
+            # yields each page's slice, and zip over list slices builds
+            # the pair lists in C (the per-pair dict-append loop was
+            # the top _extract_core cost once heavy 100-160-span pages
+            # started routing through the batched stage)
             def _per_page(hits, firsts, seconds):
+                if not len(hits):
+                    return {}
                 gs = np.searchsorted(pair_off, hits, side="right") - 1
                 cut = np.nonzero(np.diff(gs))[0] + 1
-                pages = gs[np.concatenate(([0], cut))]
-                out = {}
-                for gg, ks in zip(pages, np.split(hits, cut)):
-                    out[int(pairable[gg])] = list(
-                        zip(firsts[ks].tolist(), seconds[ks].tolist()))
-                return out
+                pages = pairable[gs[np.concatenate(([0], cut))]].tolist()
+                bounds = np.concatenate(([0], cut, [len(hits)])).tolist()
+                fl, sl = firsts.tolist(), seconds.tolist()
+                return {g: list(zip(fl[a:b], sl[a:b]))
+                        for g, a, b in zip(pages, bounds, bounds[1:])}
 
-            mg = np.nonzero(merge_cand)[0]
-            if len(mg):
-                merge_map = _per_page(mg, LI, LJ)
+            merge_map = _per_page(mg, LI[mg], LJ[mg])
             # dedupe candidates for EVERY small page (merge-bearing ones
             # included: geometry-untouched pairs stay valid; pairs
             # around merged blocks are recomputed in process_page_fast).
             # Directed (small, large) BATCH-GLOBAL indices.
-            dd = np.nonzero(dd_ij | dd_ji)[0]
-            if len(dd):
-                small = np.where(dd_ij[dd], PI[dd], PJ[dd])
-                large = np.where(dd_ij[dd], PJ[dd], PI[dd])
-                gs = np.searchsorted(pair_off, dd, side="right") - 1
-                cut = np.nonzero(np.diff(gs))[0] + 1
-                pages = gs[np.concatenate(([0], cut))]
-                bounds = np.concatenate(([0], cut, [len(dd)]))
-                for i, gg in enumerate(pages):
-                    dd_map[int(pairable[gg])] = list(
-                        zip(small[bounds[i]:bounds[i + 1]].tolist(),
-                            large[bounds[i]:bounds[i + 1]].tolist()))
+            dd_map = _per_page(dd, small, large)
 
         # one pre-zipped block-tuple list for the whole batch (tuple
         # field 9 = batch-global index, keyed by the dd candidates);

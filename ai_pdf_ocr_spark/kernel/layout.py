@@ -3,11 +3,15 @@ renumber -> dedupe -> sink filters.
 
 Vectorized transcription of ``/root/reference/text_block_sorter.py`` +
 ``/root/reference/data_structures.py:136-176`` +
-``/root/reference/pdf_processor.py:148-150,244-246``: all O(n^2)
-pairwise geometry is computed as numpy float64 matrices; only the
-order-DEPENDENT greedy scans (cluster membership depends on arrival
-order and current seed set — not expressible as a window function,
-SURVEY.md §2.5) remain as loops over precomputed booleans.
+``pdf_processor.py:148-150,244-246`` (the reference's sink filters).
+The pairwise merge/dedupe predicates are pure float math, evaluated by
+``pair_predicates`` over candidate pairs only: the batched upper
+triangle of every small page (extract.py) or a sort-sweep over one
+axis for a large page (``process_page``), so no n x n array is ever
+allocated.  Only the order-DEPENDENT greedy state machines (cluster
+membership depends on arrival order and current seed set — not
+expressible as a window function, SURVEY.md §2.5) remain as Python
+loops, in ``process_page_fast``, over the candidate pairs.
 
 Float parity notes: every arithmetic expression keeps the reference's
 operand order ((right-left)*(bottom-top))/smaller etc.), all math is
@@ -21,6 +25,7 @@ from __future__ import annotations
 from operator import itemgetter
 
 import numpy as np
+import pandas as pd
 
 _KEY_X0 = itemgetter(0)
 _KEY_Y0 = itemgetter(1)
@@ -29,119 +34,111 @@ DPI = 200
 PT_SCALE = 72.0 / DPI
 MERGE_THRESHOLD = 0.5   # /root/reference/text_block_sorter.py:178
 REMOVE_THRESHOLD = 0.6  # /root/reference/data_structures.py:136
+SWEEP_CHUNK = 1 << 18   # candidate pairs per predicate pass on a large page
 
 
-def _pairwise_intersection(x0, y0, x1, y1):
-    il = np.maximum(x0[:, None], x0[None, :])
-    ir = np.minimum(x1[:, None], x1[None, :])
-    it = np.maximum(y0[:, None], y0[None, :])
-    ib = np.minimum(y1[:, None], y1[None, :])
-    return il, ir, it, ib
+def pair_predicates(PI, PJ, x0, y0, x1, y1, is_text, dcode):
+    """Exact merge (J3) and dedupe (J2) predicates over candidate pairs
+    (PI[k], PJ[k]) of indices into the coordinate arrays.
 
-
-def _ratio_smaller_matrix(x0, y0, x1, y1):
-    """Overlap vs smaller area, /root/reference/text_block_sorter.py:161-175."""
+    J3: overlap >= MERGE_THRESHOLD of the SMALLER area, text-only, same
+    direction code (reference text_block_sorter.py:161-175).  J2:
+    overlap >= REMOVE_THRESHOLD of the block's OWN area against a
+    strictly larger block (reference data_structures.py:41-61,
+    136-176).  Returns (mg, dd, small, large): the pair positions
+    passing J3, the pair positions passing J2 in either direction, and
+    those pairs' (smaller, larger) endpoints."""
     area = (x1 - x0) * (y1 - y0)
-    il, ir, it, ib = _pairwise_intersection(x0, y0, x1, y1)
+    il = np.maximum(x0[PI], x0[PJ]); it = np.maximum(y0[PI], y0[PJ])
+    ir = np.minimum(x1[PI], x1[PJ]); ib = np.minimum(y1[PI], y1[PJ])
     strict = (il < ir) & (it < ib)
     inter = (ir - il) * (ib - it)
-    smaller = np.minimum(area[:, None], area[None, :])
+    ai = area[PI]; aj = area[PJ]
+    smaller = np.minimum(ai, aj)
     with np.errstate(divide="ignore", invalid="ignore"):
-        ratio = np.where(strict & (smaller > 0), inter / smaller, 0.0)
-    return ratio
+        ratio_sm = np.where(strict & (smaller > 0), inter / smaller, 0.0)
+        own_i = np.where(strict & (ai != 0), inter / ai, 0.0)
+        own_j = np.where(strict & (aj != 0), inter / aj, 0.0)
+    merge = ((ratio_sm >= MERGE_THRESHOLD) & is_text[PI] & is_text[PJ]
+             & (dcode[PI] == dcode[PJ]))
+    dd_ij = (own_i >= REMOVE_THRESHOLD) & (ai < aj)
+    dd_ji = (own_j >= REMOVE_THRESHOLD) & (aj < ai)
+    dd = np.nonzero(dd_ij | dd_ji)[0]
+    small = np.where(dd_ij[dd], PI[dd], PJ[dd])
+    large = np.where(dd_ij[dd], PJ[dd], PI[dd])
+    return np.nonzero(merge)[0], dd, small, large
 
 
-def _ratio_own_matrix(x0, y0, x1, y1):
-    """ratio[i,j] = intersection / area_i, /root/reference/data_structures.py:41-61."""
-    area = (x1 - x0) * (y1 - y0)
-    il, ir, it, ib = _pairwise_intersection(x0, y0, x1, y1)
-    strict = (il < ir) & (it < ib)
-    inter = np.where(strict, (ir - il) * (ib - it), 0.0)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        ratio = np.where(area[:, None] == 0, 0.0, inter / area[:, None])
-    return ratio, area
+def _sweep_pairs(x0, y0, x1, y1):
+    """Candidate pairs for a page too large for the batched upper
+    triangle: stable-sort the boxes by their low edge on one axis; each
+    box pairs with the later boxes whose low edge lies below its high
+    edge (one searchsorted).  Every strictly intersecting pair has
+    il < ir on both axes, so either sweep yields a superset of them; a
+    zero-width, negative-width or NaN box can never satisfy il < ir.
+    Both axes are counted before anything is materialized and the one
+    yielding fewer pairs is swept.  Yields (PI, PJ) chunks of about
+    SWEEP_CHUNK pairs (at least one chunk): a grid's rows or columns
+    still give n * min(rows, cols) / 2 pairs, so only the chunk and the
+    predicate hits are ever resident."""
+    n = len(x0)
+    best = None
+    for lo, hi in ((x0, x1), (y0, y1)):
+        order = np.argsort(lo, kind="stable")
+        cnt = np.searchsorted(lo[order], hi[order], side="left") \
+            - np.arange(1, n + 1)
+        np.maximum(cnt, 0, out=cnt)
+        total = int(cnt.sum())
+        if best is None or total < best[0]:
+            best = (total, order, cnt)
+    _, order, cnt = best
+    start = np.cumsum(cnt) - cnt  # first pair of each sorted position
+    bounds = [0, *(np.flatnonzero(np.diff(start // SWEEP_CHUNK)) + 1)
+              .tolist(), n]
+    for p0, p1 in zip(bounds, bounds[1:]):
+        c = cnt[p0:p1]
+        first = np.repeat(np.arange(p0, p1), c)
+        # pair k of sorted position p has partner p + 1 + (k - start[p])
+        second = np.arange(start[p0], start[p0] + len(first)) + np.repeat(
+            np.arange(p0 + 1, p1 + 1) - start[p0:p1], c)
+        yield order[first], order[second]
 
 
-def _axis_overlap_matrix(lo, hi):
-    """overlap >= 0.5*len_i OR >= 0.5*len_j,
-    /root/reference/text_block_sorter.py:12-23 (symmetric)."""
-    length = hi - lo
-    ov = np.minimum(hi[:, None], hi[None, :]) - np.maximum(lo[:, None], lo[None, :])
-    ov = np.maximum(0.0, ov)
-    return (ov >= length[:, None] * 0.5) | (ov >= length[None, :] * 0.5)
-
-
-def _greedy_groups(ovmat: np.ndarray) -> list[list[int]]:
-    """First-fit clustering against each existing group's SEED (its
-    first block), /root/reference/text_block_sorter.py:33-42,66-74."""
-    groups: list[list[int]] = []
-    seeds: list[int] = []
-    for a in range(ovmat.shape[0]):
-        for gi, s in enumerate(seeds):
-            if ovmat[a, s]:
-                groups[gi].append(a)
-                break
-        else:
-            groups.append([a])
-            seeds.append(a)
-    return groups
-
-
-def _cluster_sort(idx: np.ndarray, ovmat: np.ndarray,
-                  intra_key: np.ndarray, group_key: np.ndarray,
-                  group_desc: bool) -> list[int]:
-    """Shared shape of sort_vertical / sort_horizontal
-    (/root/reference/text_block_sorter.py:26-55,58-87): greedy groups,
-    stable intra-group sort by ``intra_key``, then stable group ordering
-    by ``group_key`` of the POST-sort first member (:47-48 order)."""
-    groups = _greedy_groups(ovmat)
-    sorted_groups = []
-    for g in groups:
-        g_arr = np.asarray(g)
-        order = np.argsort(intra_key[g_arr], kind="stable")
-        sorted_groups.append(g_arr[order])
-    keys = np.array([(-group_key[g[0]] if group_desc else group_key[g[0]])
-                     for g in sorted_groups])
-    g_order = np.argsort(keys, kind="stable")
-    out: list[int] = []
-    for gi in g_order:
-        out.extend(int(idx[a]) for a in sorted_groups[gi])
-    return out
-
-
-# fast-path cutoff: the candidate-driven pure-Python path wins through
+# candidate cutoff: the candidate-driven pure-Python path wins through
 # ~160 blocks/page (r2 A/B/A sweep: 64->3388, 192->3493-3596 docs/s on
-# the heavy-tail corpus whose p99 page is 103, max 163); the numpy
-# matrix path takes over for genuinely huge pages where O(n^2) Python
-# pair walks would dominate
+# the heavy-tail corpus whose p99 page is 103, max 163); larger pages
+# get sort-sweep candidates per page, whose upper triangle would grow
+# as n^2
 SMALL_PAGE = 160
 
 
 def process_page_fast(blocks, merge_cands, dd_cands):
-    """Pure-Python fast path for pages up to SMALL_PAGE blocks,
-    candidate-driven.
+    """Pure-Python page state machines, candidate-driven, for pages of
+    every size (small pages straight from extract.py, large ones via
+    ``process_page``).
 
     At typical page sizes (10-40 blocks) numpy's per-call dispatch on
-    tiny pairwise matrices costs more than tight Python loops over
-    primitive floats (measured ~3x).  Bit-parity with the numpy path
-    and the oracle: identical IEEE doubles, identical expression order,
-    CPython's stable list.sort.
+    tiny pairwise arrays costs more than tight Python loops over
+    primitive floats (measured ~3x).  Bit-parity with the oracle:
+    identical IEEE doubles, identical expression order, CPython's
+    stable list.sort.
 
     ``blocks``: list of 10-tuples (x0, y0, x1, y1, conf, direction,
     kind, text, media_ref, gidx) in arrival order — pre-zipped ONCE per
     Arrow batch by extract.py (one list slice per page instead of nine).
-    ``gidx`` is the batch-global span index; merged blocks get fresh
-    negative ids.
+    ``gidx`` is a unique non-negative block id (batch-global span index
+    for small pages, page-local index for large ones); merged blocks
+    get fresh negative ids.
 
     ``merge_cands``: merge-candidate pairs (i<j LOCAL indices passing
-    the J3 predicate, batch-vectorized in extract.py) or None when the
-    page has none.  The greedy used-state semantics equal the reference
+    the J3 predicate, from ``pair_predicates``) or None when the page
+    has none.  The greedy used-state semantics equal the reference
     nested loop because candidates arrive in the same (i asc, j asc)
     visit order.
 
     ``dd_cands``: duplicate-removal candidate pairs (small_gidx,
     large_gidx with own-ratio >= REMOVE_THRESHOLD and strictly smaller
-    area, batch-vectorized).  Valid for blocks whose geometry the merge
+    area, from ``pair_predicates``).  Valid for blocks whose geometry the merge
     stage did not touch; pairs involving post-merge geometry are
     recomputed here — O(n_merged * k) instead of O(k^2) (round-2 perf:
     the full dedupe rescan was ~30%% of the kernel on merge-bearing
@@ -270,7 +267,9 @@ def process_page_fast(blocks, merge_cands, dd_cands):
                     by_small.setdefault(ps, []).append(pl)
         if new_blocks:
             for b in new_blocks:
-                p = pos_of[b[9]]
+                p = pos_of.get(b[9])
+                if p is None:
+                    continue  # direction dropped by the split
                 bx0, by0, bx1, by1 = b[0], b[1], b[2], b[3]
                 ab = (bx1 - bx0) * (by1 - by0)
                 for q, o in enumerate(final):
@@ -321,124 +320,31 @@ def process_page_fast(blocks, merge_cands, dd_cands):
 
 
 def process_page(x0, y0, x1, y1, conf, direction, kind, text, media_ref):
-    """Run the full page pipeline.  All array args are length-n in
-    arrival (offset) order; direction/kind/text/media_ref are object
-    arrays.  Returns (kinds, texts, refs, orders, stats)."""
-    n = len(x0)
-    stats = {"merged_away": 0, "dedup_removed": 0, "filtered": 0}
-    if n == 0:
-        return [], [], [], [], stats
-
-    # ---- merge (J3): text-only, same-direction, ratio >= 0.5 ----
-    is_text = np.fromiter((k == "text" for k in kind), bool, n)
-    same_dir = np.equal.outer(direction, direction)
-    mergeable = (
-        (_ratio_smaller_matrix(x0, y0, x1, y1) >= MERGE_THRESHOLD)
-        & same_dir & is_text[:, None] & is_text[None, :]
-    )
-    groups: list[list[int]] = []
-    used = np.zeros(n, bool)
-    for i in range(n):
-        if used[i]:
-            continue
-        used[i] = True
-        row = mergeable[i]
-        js = [j for j in range(i + 1, n) if not used[j] and row[j]]
-        for j in js:
-            used[j] = True
-        groups.append([i] + js)
-
-    m = len(groups)
-    stats["merged_away"] = n - m
-    mx0 = np.empty(m); my0 = np.empty(m); mx1 = np.empty(m); my1 = np.empty(m)
-    m_dir = np.empty(m, object)
-    m_kind = np.empty(m, object)
-    m_text = np.empty(m, object)
-    m_ref = np.empty(m, object)
-    for gi, g in enumerate(groups):
-        if len(g) == 1:
-            k = g[0]
-            mx0[gi], my0[gi], mx1[gi], my1[gi] = x0[k], y0[k], x1[k], y1[k]
-            m_dir[gi], m_kind[gi] = direction[k], kind[k]
-            m_text[gi], m_ref[gi] = text[k], media_ref[k]
-        else:
-            # /root/reference/text_block_sorter.py:220-240
-            confs = [float(conf[k]) for k in g]
-            base = g[max(range(len(g)), key=lambda a: confs[a])]
-            mx0[gi] = x0[g].min(); my0[gi] = y0[g].min()
-            mx1[gi] = x1[g].max(); my1[gi] = y1[g].max()
-            m_text[gi] = max((text[k] for k in g), key=len)
-            m_dir[gi] = direction[base]
-            m_kind[gi] = "text"
-            m_ref[gi] = None
-
-    # ---- direction split (non-h/v silently dropped, :113-114) ----
-    v_idx = np.array([i for i in range(m) if m_dir[i] == "vertical"], int)
-    h_idx = np.array([i for i in range(m) if m_dir[i] == "horizontal"], int)
-
-    v_sorted: list[int] = []
-    if len(v_idx):
-        v_sorted = _cluster_sort(
-            v_idx, _axis_overlap_matrix(mx0[v_idx], mx1[v_idx]),
-            intra_key=my0[v_idx],
-            group_key=(mx0[v_idx] + mx1[v_idx]) / 2, group_desc=True)
-    h_sorted: list[int] = []
-    if len(h_idx):
-        h_sorted = _cluster_sort(
-            h_idx, _axis_overlap_matrix(my0[h_idx], my1[h_idx]),
-            intra_key=mx0[h_idx],
-            group_key=(my0[h_idx] + my1[h_idx]) / 2, group_desc=False)
-
-    if len(v_idx) and len(h_idx):
-        # group-bbox tops, tie -> vertical first (:123-137)
-        if my0[v_idx].min() <= my0[h_idx].min():
-            final = v_sorted + h_sorted
-        else:
-            final = h_sorted + v_sorted
-    else:
-        final = v_sorted or h_sorted
-
-    f = np.asarray(final, int)
-    k_out = len(f)
-    block_id = np.arange(1, k_out + 1)  # renumber, :145-146
-
-    # ---- duplicate removal (J2), no renumbering afterwards ----
-    if k_out > 1:
-        ratio_own, areaF = _ratio_own_matrix(mx0[f], my0[f], mx1[f], my1[f])
-        removable = (ratio_own >= REMOVE_THRESHOLD) & \
-            (areaF[:, None] < areaF[None, :])
-        removed = np.zeros(k_out, bool)
-        for i in range(k_out):
-            if removed[i]:
-                continue
-            row = removable[i]
-            for j in range(k_out):
-                if i == j or removed[j]:
-                    continue
-                if row[j]:
-                    removed[i] = True
-                    break
-        stats["dedup_removed"] = int(removed.sum())
-    else:
-        removed = np.zeros(k_out, bool)
-
-    # ---- sink filters: text spans only ----
-    kinds, texts, refs, orders = [], [], [], []
-    for a in range(k_out):
-        if removed[a]:
-            continue
-        i = f[a]
-        if m_kind[i] == "text":
-            t = m_text[i]
-            if not t.strip():
-                stats["filtered"] += 1
-                continue
-            if (mx1[i] - mx0[i]) * PT_SCALE < 1 or \
-               (my1[i] - my0[i]) * PT_SCALE < 1:
-                stats["filtered"] += 1
-                continue
-        kinds.append(m_kind[i])
-        texts.append(m_text[i])
-        refs.append(m_ref[i])
-        orders.append(int(block_id[a]))
-    return kinds, texts, refs, orders, stats
+    """Page pipeline for pages over SMALL_PAGE blocks.  All array args
+    are length-n in arrival (offset) order; direction/kind/text/
+    media_ref are object arrays.  Candidate pairs come from a sort-sweep
+    instead of the batched upper triangle; the predicates and the
+    state machine are the small-page ones.  Returns (kinds, texts,
+    refs, orders, stats)."""
+    is_text = kind == "text"
+    dcode = pd.factorize(direction)[0]
+    mi, mj, small, large = [], [], [], []
+    for PI, PJ in _sweep_pairs(x0, y0, x1, y1):
+        mg, _dd, sm, lg = pair_predicates(PI, PJ, x0, y0, x1, y1,
+                                          is_text, dcode)
+        mi.append(np.minimum(PI[mg], PJ[mg]))
+        mj.append(np.maximum(PI[mg], PJ[mg]))
+        small.append(sm)
+        large.append(lg)
+    # merge pairs as (min, max) local indices in (i asc, j asc) order:
+    # the merge greedy's visit order
+    mi, mj = np.concatenate(mi), np.concatenate(mj)
+    o = np.lexsort((mj, mi))
+    blocks = list(zip(
+        x0.tolist(), y0.tolist(), x1.tolist(), y1.tolist(), conf.tolist(),
+        direction.tolist(), kind.tolist(), text.tolist(),
+        media_ref.tolist(), range(len(x0))))
+    return process_page_fast(
+        blocks, list(zip(mi[o].tolist(), mj[o].tolist())),
+        list(zip(np.concatenate(small).tolist(),
+                 np.concatenate(large).tolist())))

@@ -12,13 +12,20 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_cpus() -> int:
+    """Parallelism when no master is given: $SPARK_GRAFT_CPUS (a
+    deployment setting) if set, else the cores this process may use."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(env) if env else len(os.sched_getaffinity(0))
+
+
 def build_session(app: str = "ai-pdf-ocr-spark", master: str | None = None,
                   shuffle_partitions: int | None = None,
                   arrow_batch: int = 4096) -> SparkSession:
     # arrow_batch=4096: measured sweet spot for the fused extraction
     # stage — 1024-row batches pay ~25% more per-batch JVM<->Arrow
     # overhead, 8k+ batches lose cache locality (exp on 192k-doc corpus)
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         n = master[master.find("[") + 1:master.find("]")] if "[" in master else str(cpus)

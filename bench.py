@@ -1,7 +1,8 @@
 #!/usr/bin/env python
 """Bench harness (driver contract): runs the headline queries at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] and prints ONE JSON line.
+local[$SPARK_GRAFT_CPUS] (default: every core this process may use)
+and prints ONE JSON line.
 
 The extraction benchmark reads a pre-materialized parquet corpus of
 synthetic interleaved documents (generated distributed, cached in
@@ -16,8 +17,10 @@ import os
 import sys
 import time
 
+from ai_pdf_ocr_spark.engine.session import default_cpus
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = default_cpus()
 # extraction corpus size scales with sf; sf0.1 is sized so the measured
 # time is dominated by pipeline throughput, not per-run fixed overhead
 _EXTRACT_DOCS = {"sf0.001": 500, "sf0.01": 4000, "sf0.1": 48000}

@@ -4,9 +4,10 @@ driver's normalization (columns sorted by name, rows sorted, floats
 rounded to 9)."""
 import json
 import math
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 import duckdb
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"

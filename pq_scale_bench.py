@@ -44,8 +44,10 @@ import os
 import sys
 import time
 
+from ai_pdf_ocr_spark.engine.session import default_cpus
+
 N = int(os.environ.get("PQ_BENCH_N", "500000"))
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = default_cpus()
 # bump _v when synth_embeddings changes — the _SUCCESS cache check
 # would otherwise silently reuse a stale corpus (bench.py::ensure_
 # corpus learned the same lesson; r5 code-review)

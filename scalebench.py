@@ -1,536 +1,198 @@
 #!/usr/bin/env python
-"""Scaling-efficiency evidence (north_rule: >=0.8 from N to 4N).
+"""Scaling efficiency of the production extraction path, N -> 4N cores
+(north rule: >= 0.8).  ``python scalebench.py [--update-baseline]``
 
-No multi-node cluster exists in this sandbox, so the same frozen
-extraction job runs at three parallelism levels — local[2], local[8],
-local[32] — on the identical pre-materialized parquet corpus.  Two
-N->4N pairs are reported:
+N is a quarter of the cores this process may use, 4N four times N.
+Each level runs in a fresh ``local[k]`` subprocess that first pins
+itself to k cores, so the JVM and its Python workers inherit the mask
+(unpinned, ``local[1]`` borrows idle cores: 1.4 CPU-s per wall-s on a
+4-vCPU box).  Levels alternate N, 4N, 4N, N, ... over ``PAIRS`` pairs;
+each worker reports its best ``run_extraction`` (write and lineage
+included) with the process-tree CPU it took.  Two efficiencies:
 
- - 2 -> 8: the primary evidence.  A raw-CPU calibration (pure-python
-   multiprocessing, also reported) shows this range scales ~linearly
-   on this box, so the pair measures the ENGINE's scaling.
- - 8 -> 32: crosses the machine's SMT boundary; raw CPU itself only
-   scales ~3.2x/4 here (calibration ~0.79), so the engine number is
-   reported alongside that hardware ceiling.
+ - wall: (docs/s at 4N / docs/s at N) / 4, the north-rule figure;
+ - work: docs per CPU-s at 4N / at N.  Near 1, the engine spends the
+   same CPU per doc at both levels and a wall gap is cores the machine
+   did not deliver; below 1, the engine does more work per doc at 4N.
 
-Each level runs in a fresh subprocess (no JVM/session leakage) and is
-warmed until run times converge before measuring — the JIT/codegen
-warm-up at high thread counts otherwise dominates (measured 65s -> 5s
-over seven runs at local[32]); a 100 TB job amortizes warm-up to zero.
+The last stdout line is one JSON record; ``--update-baseline`` rewrites
+BASELINE.md's scaling section from it.
 """
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
-import subprocess
+import shutil
 import sys
+import tempfile
 import time
+from statistics import median
 
-N_DOCS = int(os.environ.get("SPARK_GRAFT_SCALE_DOCS", "192000"))
-LEVELS = (2, 8, 32)
-PAIRS = ((2, 8), (8, 32))
-# this sandbox shows multi-minute transient load swings (same config
-# varies up to 2x run-over-run); each level therefore takes the best
-# of MEASURE_RUNS spread over a few minutes — the minimum approximates
-# the unloaded machine, which is what a dedicated cluster would see
-MEASURE_RUNS = 8
+from ai_pdf_ocr_spark.engine.session import build_session
+from bench import ensure_corpus
+from perfbench.procs import run_child, tree_cpu_s
 
-
-def _calibrate(n: int) -> float:
-    """Raw-CPU capacity at n processes (counter increments / 2s)."""
-    import multiprocessing as mp
-    with mp.Pool(n) as p:
-        return sum(p.map(_burn, range(n))) / 1e6
+HERE = os.path.dirname(os.path.abspath(__file__))
+DOCS_PER_CORE = 4000
+PAIRS = 3
+MAX_WARM = 4
+MEASURE_RUNS = 4
+WORKER_TIMEOUT_S = 900
+TARGET = 0.8
+SECTION = "## Measured scaling (this engine)"
 
 
-def _burn(_):
-    t0 = time.monotonic()
-    x = 0
-    while time.monotonic() - t0 < 2.0:
-        x += 1
-    return x
+def levels(cores: set[int]) -> tuple[int, int]:
+    """(N, 4N) for an affinity set of cores; N is a quarter of them."""
+    n = len(cores) // 4
+    if n < 1:
+        raise SystemExit(f"scalebench needs at least 4 cores to compare "
+                         f"N with 4N; this process may use {len(cores)}")
+    return n, 4 * n
 
 
-CLUSTER_LEVELS = ((1, 2), (4, 2))  # (executors, cores_each): N -> 4N
-CLUSTER_MEASURE_RUNS = 8
-# same-window mode: warm-up budget before the shared barrier, then a
-# fixed measurement window both levels sample concurrently
-CW_WARMUP_BUDGET_S = 210.0
-CW_WINDOW_S = 240.0
+def _measure(run_once, max_warm: int, measure_runs: int):
+    """Warm until two consecutive runs are within 10 % (at most
+    ``max_warm`` runs), then run ``measure_runs`` more.  Every run
+    samples the same job, so the best is the min-wall tuple over all of
+    them, warm-up included.  ``run_once`` returns (wall_s, *payload).
+    Returns (best, warm-up runs)."""
+    runs: list[tuple] = [run_once()]
+    while len(runs) < max_warm:
+        runs.append(run_once())
+        if abs(runs[-1][0] / runs[-2][0] - 1) < 0.10:
+            break
+    warms = len(runs)
+    runs += [run_once() for _ in range(measure_runs)]
+    return min(runs, key=lambda r: r[0]), warms
 
 
-def worker_cluster(executors: int, cores: int, n_docs: int,
-                   barrier_ts: float | None = None,
-                   window_s: float | None = None) -> None:
-    """Same frozen job on a local-cluster master: SEPARATE executor
-    JVMs with real inter-process (Netty) shuffle and addPyFile code
-    distribution — the in-sandbox stand-in for 'N vs 4N executors on a
-    multi-executor cluster' (north_rule), run in the hardware's linear
-    core range (2 vs 8 total cores)."""
-    import subprocess as sp
+def summarize(n: int, best: dict[int, list[tuple[float, int, float]]]) -> dict:
+    """Per-level medians over the workers' best (wall_s, docs, cpu_s)
+    runs, and the N -> 4N wall and work efficiencies."""
+    rate = {k: median(d / w for w, d, _ in rs) for k, rs in best.items()}
+    work = {k: median(d / c for _, d, c in rs) for k, rs in best.items()}
+    wall_eff = rate[4 * n] / rate[n] / 4
+    return {
+        "levels": {k: {"docs_per_s": round(rate[k], 1),
+                       "docs_per_cpu_s": round(work[k], 1)} for k in best},
+        "wall_efficiency": round(wall_eff, 3),
+        "work_efficiency": round(work[4 * n] / work[n], 3),
+        "target": TARGET,
+        "pass": wall_eff >= TARGET,
+    }
 
-    from pyspark.sql import SparkSession, functions as F
 
-    zip_path = sp.run([sys.executable, os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "package_pyfiles.py")],
-        capture_output=True, text=True, check=True).stdout.strip()
-    if not os.path.exists(zip_path):
-        raise RuntimeError(f"package_pyfiles.py returned {zip_path!r}, "
-                           "not an existing zip")
-    total = executors * cores
-    spark = (
-        SparkSession.builder.appName(f"scalebench-lc-{executors}x{cores}")
-        .master(f"local-cluster[{executors},{cores},3072]")
-        .config("spark.executor.memory", "2g")
-        .config("spark.sql.shuffle.partitions", str(total))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate())
+def worker(k: int, n_docs: int, out_root: str) -> None:
+    """One level: pin to k cores, then time warm ``run_extraction``
+    jobs in a ``local[k]`` session; print the best run as JSON."""
+    os.sched_setaffinity(0, sorted(os.sched_getaffinity(0))[:k])
+    from ai_pdf_ocr_spark.engine.checkpoint import run_extraction
+    from ai_pdf_ocr_spark.engine.io import TableStore
+    from ai_pdf_ocr_spark.engine.sources import read_documents
+
+    spark = build_session(app=f"scalebench-{k}", master=f"local[{k}]")
     spark.sparkContext.setLogLevel("ERROR")
-    spark.sparkContext.addPyFile(zip_path)
-
-    from ai_pdf_ocr_spark.engine.partitioning import (compute_assignment,
-                                                      weighted_repartition)
-    from ai_pdf_ocr_spark.engine.pipeline import extract_documents
-
-    from bench import ensure_corpus
-
     path = ensure_corpus(spark, n_docs)
-    docs = spark.read.parquet(path)
-    docs.count()
-    assignment = compute_assignment(docs, total)
-    base = extract_documents(weighted_repartition(
-        docs, total, assignment=assignment))
+    sid, run_ids = os.getsid(0), itertools.count()
 
-    def run_once():
-        t0 = time.monotonic()
-        out = base.agg(F.count("*").alias("docs")).collect()[0]
-        return time.monotonic() - t0, out.docs
+    def run_once() -> tuple[float, int, float]:
+        run_id = f"run{next(run_ids)}"
+        store = TableStore(spark, os.path.join(out_root, run_id))
+        cpu0, t0 = tree_cpu_s(sid), time.perf_counter()
+        # two bins per core: submit_job.py's default
+        s = run_extraction(spark, read_documents(spark, path), store,
+                           run_id, 2 * k)
+        wall, cpu = time.perf_counter() - t0, tree_cpu_s(sid) - cpu0
+        shutil.rmtree(store.root)
+        if s["docs_processed"] != n_docs:
+            raise RuntimeError(f"extracted {s['docs_processed']} of {n_docs}")
+        return wall, n_docs, cpu
 
-    best, warms, runs = _measure(run_once, 4, CLUSTER_MEASURE_RUNS,
-                                 barrier_ts, window_s)
-    dt, n = best
-    print(json.dumps({"executors": executors, "cores_each": cores,
-                      "total_cores": total, "wall_s": round(dt, 3),
-                      "warmup_runs": warms, "window_runs": runs,
-                      "docs": n,
-                      "docs_per_sec": round(n / dt, 1)}))
+    best, warms = _measure(run_once, MAX_WARM, MEASURE_RUNS)
+    with open(f"/proc/{spark.sparkContext._gateway.proc.pid}/status") as f:
+        jvm_cpus = next(ln.split()[1] for ln in f
+                        if ln.startswith("Cpus_allowed_list:"))
+    print(json.dumps({"level": k, "best": best, "warmup_runs": warms,
+                      "jvm_cpus": jvm_cpus}))
     spark.stop()
 
 
-def _measure(run_once, max_warm: int, measure_runs: int,
-             barrier_ts: float | None, window_s: float | None):
-    """Shared warm-up + measurement discipline for every scaling
-    worker.  Warm until two consecutive runs converge within 10%
-    (bounded by ``max_warm``), then measure:
-
-     - sequential mode (``barrier_ts is None``): best over
-       ``measure_runs`` more runs, warm-up runs included in the best
-       (every completed run samples the same frozen job);
-     - SAME-WINDOW mode: sleep to the shared wall-clock barrier, then
-       best-of over the IDENTICAL [barrier, barrier+window] interval —
-       warm-up bests are DISCARDED (they ran under asymmetric
-       pre-barrier conditions).  This removes the single-level tenancy
-       confound the sequential protocol has (BASELINE.md: two sub-0.8
-       captures where one level matched its quiet wall while the other
-       ran 1.8x slower).
-
-    Returns (best_tuple, warmup_runs, measured_runs); ``run_once``
-    returns (wall_s, *payload) and best is the min-wall tuple."""
-    best = None
-    prev = None
-    warms = 0
-    for _ in range(max_warm):
-        # same-window mode: stop warming in time to make the barrier —
-        # a warm run straddling it would eat into the shared window
-        if barrier_ts is not None and time.time() > barrier_ts - 5.0:
-            break
-        out = run_once()
-        warms += 1
-        if best is None or out[0] < best[0]:
-            best = out
-        if prev is not None and abs(out[0] - prev) / prev < 0.10:
-            break
-        prev = out[0]
-    if barrier_ts is None:
-        for _ in range(measure_runs):
-            out = run_once()
-            if best is None or out[0] < best[0]:
-                best = out
-        return best, warms, measure_runs
-    wait = barrier_ts - time.time()
-    if wait > 0:
-        time.sleep(wait)
-    best = None
-    runs = 0
-    while time.time() < barrier_ts + window_s:
-        out = run_once()
-        runs += 1
-        if best is None or out[0] < best[0]:
-            best = out
-    if best is None:  # window too small for one run — still report
-        best = run_once()
-        runs = 1
-    return best, warms, runs
-
-
-def main_cluster(update_baseline: bool) -> None:
-    from ai_pdf_ocr_spark.engine.session import build_session
-
-    from bench import ensure_corpus
-    s = build_session(app="scalebench-gen", master="local[32]",
-                      shuffle_partitions=32)
-    s.sparkContext.setLogLevel("ERROR")
-    ensure_corpus(s, N_DOCS)
-    s.stop()
-
-    results = {}
-    calib = {}
-    for ex, cores in CLUSTER_LEVELS:
-        total = ex * cores
-        c_before = _calibrate(total)
-        out = subprocess.run(
-            [sys.executable, os.path.abspath(__file__),
-             "--cluster-worker", str(ex), str(cores)],
-            capture_output=True, text=True,
-            cwd=os.path.dirname(os.path.abspath(__file__)))
-        if out.returncode != 0:
-            sys.stderr.write(out.stderr[-4000:])
-            raise SystemExit(f"cluster worker {ex}x{cores} failed")
-        line = [ln for ln in out.stdout.splitlines()
-                if ln.startswith("{")][-1]
-        results[ex] = json.loads(line)
-        calib[total] = round((c_before + _calibrate(total)) / 2, 1)
-
-    (lo, lc), (hi, hc) = CLUSTER_LEVELS
-    eff = (results[hi]["docs_per_sec"] / results[lo]["docs_per_sec"]) \
-        / (hi / lo)
-    hw = (calib[hi * hc] / calib[lo * lc]) / (hi / lo)
-    summary = {
-        "metric": "extraction scaling efficiency (N -> 4N executor JVMs)",
-        "n_docs": N_DOCS,
-        "levels": results,
-        "cpu_calibration_Mops": calib,
-        "scaling_efficiency": round(eff, 3),
-        "hw_ceiling": round(hw, 3),
-        "vs_ceiling": round(eff / hw, 3) if hw else None,
-        "target": 0.8,
-        "pass": eff >= 0.8,
-    }
-    print(json.dumps(summary))
-    if update_baseline:
-        _update_baseline_cluster(summary)
-
-
-def _same_window_capture(jobs, total_cores: int, metric: str) -> None:
-    """Shared same-window orchestrator: pre-materialize the corpus,
-    launch every job CONCURRENTLY (disjoint cores), bracket the whole
-    window with a raw-CPU calibration, and report best-of-window
-    throughput per level plus the N->4N efficiency.
-
-    Sequential capture exposes the two levels to different minutes of
-    this box's documented 2x tenancy swings (two sub-0.8 outliers in
-    BASELINE.md both show one level at its quiet wall and the other
-    1.8x degraded); here a swing hits both levels or neither.  Mutual
-    contention is symmetric and small (10/32 threads) and biases the
-    ratio toward 1 only via the shared straggler tail.
-
-    ``jobs``: [(level_key, argv_suffix), ...] low level first."""
-    from ai_pdf_ocr_spark.engine.session import build_session
-
-    from bench import ensure_corpus
-    s = build_session(app="scalebench-gen", master="local[32]",
-                      shuffle_partitions=32)
-    s.sparkContext.setLogLevel("ERROR")
-    ensure_corpus(s, N_DOCS)
-    s.stop()
-
-    c_before = _calibrate(total_cores)
-    barrier = time.time() + CW_WARMUP_BUDGET_S
-    procs = []
-    for key, argv in jobs:
-        procs.append((key, subprocess.Popen(
-            [sys.executable, os.path.abspath(__file__), *argv,
-             repr(barrier), repr(CW_WINDOW_S)],
-            stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True,
-            cwd=os.path.dirname(os.path.abspath(__file__)))))
-    results = {}
-    for key, p in procs:
-        out, err = p.communicate()
-        if p.returncode != 0:
-            sys.stderr.write(err[-4000:])
-            raise SystemExit(f"same-window worker {key} failed")
-        line = [ln for ln in out.splitlines() if ln.startswith("{")][-1]
-        results[key] = json.loads(line)
-    c_after = _calibrate(total_cores)
-
-    (lo, _), (hi, _) = jobs
-    lo_r, hi_r = results[lo], results[hi]
-    cores_key = "total_cores" if "total_cores" in lo_r else "cpus"
-    factor = hi_r[cores_key] // lo_r[cores_key]
-    eff = (hi_r["docs_per_sec"] / lo_r["docs_per_sec"]) / factor
-    summary = {
-        "metric": metric,
-        "n_docs": N_DOCS,
-        "window_s": CW_WINDOW_S,
-        "levels": results,
-        "calibration_Mops_bracket": [c_before, c_after],
-        "scaling_efficiency": round(eff, 3),
-        "target": 0.8,
-        "pass": eff >= 0.8,
-    }
-    print(json.dumps(summary))
-
-
-def main_cluster_same_window() -> None:
-    """Same-window executor-JVM capture: both cluster sizes (1x2 and
-    4x2 separate executor JVMs) run concurrently on disjoint cores."""
-    _same_window_capture(
-        [(ex, ["--cluster-worker-cw", str(ex), str(c)])
-         for ex, c in CLUSTER_LEVELS],
-        total_cores=sum(ex * c for ex, c in CLUSTER_LEVELS),
-        metric="extraction scaling efficiency "
-               "(N -> 4N executor JVMs, same-window concurrent)")
-
-
-CW_THREAD_LEVELS = (2, 8)  # the hardware's linear core range
-
-
-def main_threads_same_window() -> None:
-    """Same-window thread-level capture: local[2] and local[8] run
-    concurrently on disjoint cores — the 2->8 pair is the primary
-    thread-level evidence (the 8->32 pair crosses the SMT boundary)."""
-    _same_window_capture(
-        [(c, ["--worker-cw", str(c)]) for c in CW_THREAD_LEVELS],
-        total_cores=sum(CW_THREAD_LEVELS),
-        metric="extraction scaling efficiency "
-               "(N -> 4N threads, same-window concurrent)")
-
-
-def _update_baseline_cluster(s: dict) -> None:
-    path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                        "BASELINE.md")
-    with open(path) as f:
-        text = f.read()
-    marker = "## Measured scaling (separate executor JVMs)"
-    lo = s["levels"][str(CLUSTER_LEVELS[0][0])] \
-        if str(CLUSTER_LEVELS[0][0]) in s["levels"] \
-        else s["levels"][CLUSTER_LEVELS[0][0]]
-    hi = s["levels"][str(CLUSTER_LEVELS[1][0])] \
-        if str(CLUSTER_LEVELS[1][0]) in s["levels"] \
-        else s["levels"][CLUSTER_LEVELS[1][0]]
-    block = f"""{marker}
-
-The same frozen job on a ``local-cluster[N,2,3072]`` master — N
-SEPARATE executor JVMs, real inter-process (Netty) shuffle, code
-shipped via addPyFile — the in-sandbox stand-in for the north_rule's
-"N and 4N executors", kept in the hardware's linear core range.
-
-| executors | total cores | wall (s) | docs/sec |
-|---|---|---|---|
-| {CLUSTER_LEVELS[0][0]} | {lo['total_cores']} | {lo['wall_s']} | {lo['docs_per_sec']} |
-| {CLUSTER_LEVELS[1][0]} | {hi['total_cores']} | {hi['wall_s']} | {hi['docs_per_sec']} |
-
-1 -> 4 executor scaling efficiency: **{s['scaling_efficiency']}**
-(hw ceiling {s['hw_ceiling']}, engine/ceiling {s['vs_ceiling']}).
-Target >= 0.8: {'PASS' if s['pass'] else 'FAIL'}.
-"""
-    if marker in text:
-        idx = text.index(marker)
-        nxt = text.find("\n## ", idx + 1)
-        tail = text[nxt:] if nxt != -1 else ""
-        text = text[:idx] + block + tail
-    else:
-        text = text.rstrip() + "\n\n" + block
-    with open(path, "w") as f:
-        f.write(text)
-
-
-def worker(cpus: int, n_docs: int,
-           barrier_ts: float | None = None,
-           window_s: float | None = None) -> None:
-    from pyspark.sql import functions as F
-
-    from ai_pdf_ocr_spark.engine.partitioning import (compute_assignment,
-                                                      extraction_bins,
-                                                      weighted_repartition)
-    from ai_pdf_ocr_spark.engine.pipeline import extract_documents
-    from ai_pdf_ocr_spark.engine.session import build_session
-
-    from bench import ensure_corpus
-
-    spark = build_session(app=f"scalebench-{cpus}",
-                          master=f"local[{cpus}]",
-                          shuffle_partitions=cpus)
-    spark.sparkContext.setLogLevel("ERROR")
-    path = ensure_corpus(spark, n_docs)
-    docs = spark.read.parquet(path)
-    docs.count()
-    # corpus stats = table-registration metadata, excluded from timing
-    bins = extraction_bins(cpus)
-    assignment = compute_assignment(docs, bins)
-    job = extract_documents(weighted_repartition(
-        docs, bins, assignment=assignment))
-
-    def run_once() -> tuple[float, int, int]:
-        t0 = time.monotonic()
-        out = job.agg(F.count("*").alias("docs"),
-                      F.sum("span_count_in").alias("spans_in")).collect()[0]
-        return time.monotonic() - t0, out.docs, out.spans_in
-
-    # warm until converged (two consecutive runs within 10%), bounded;
-    # in sequential mode every completed run is a valid sample of the
-    # same job, so the reported number is the best over ALL runs
-    # (steady state — this sandbox shows ±30% transient load noise and
-    # a multi-run JIT ramp)
-    max_warm = 8 if cpus >= 16 else 4
-    best, warms, runs = _measure(run_once, max_warm, MEASURE_RUNS,
-                                 barrier_ts, window_s)
-    dt, n, spans = best
-    print(json.dumps({"cpus": cpus, "wall_s": round(dt, 3),
-                      "warmup_runs": warms, "window_runs": runs,
-                      "docs": n, "spans_in": spans,
-                      "docs_per_sec": round(n / dt, 1)}))
-    spark.stop()
+def _run_worker(k: int, n_docs: int, tmp: str) -> dict:
+    out = os.path.join(tmp, f"worker-{k}.out")
+    with open(out, "w") as f:
+        rc, _ = run_child([sys.executable, os.path.abspath(__file__),
+                           "--worker", str(k), str(n_docs), tmp],
+                          WORKER_TIMEOUT_S, cwd=HERE, stdout=f)
+    with open(out) as f:
+        lines = [ln for ln in f if ln.startswith("{")]
+    if rc != 0 or not lines:
+        raise SystemExit(f"worker local[{k}] failed (exit {rc})")
+    return json.loads(lines[-1])
 
 
 def main() -> None:
-    if len(sys.argv) >= 3 and sys.argv[1] == "--worker":
-        worker(int(sys.argv[2]), N_DOCS)
-        return
-    if len(sys.argv) >= 4 and sys.argv[1] == "--cluster-worker":
-        worker_cluster(int(sys.argv[2]), int(sys.argv[3]), N_DOCS)
-        return
-    if len(sys.argv) >= 6 and sys.argv[1] == "--cluster-worker-cw":
-        worker_cluster(int(sys.argv[2]), int(sys.argv[3]), N_DOCS,
-                       barrier_ts=float(sys.argv[4]),
-                       window_s=float(sys.argv[5]))
-        return
-    if len(sys.argv) >= 5 and sys.argv[1] == "--worker-cw":
-        worker(int(sys.argv[2]), N_DOCS,
-               barrier_ts=float(sys.argv[3]),
-               window_s=float(sys.argv[4]))
-        return
-    if "--cluster-same-window" in sys.argv:
-        main_cluster_same_window()
-        return
-    if "--threads-same-window" in sys.argv:
-        main_threads_same_window()
-        return
-    if "--cluster" in sys.argv:
-        main_cluster("--update-baseline" in sys.argv)
-        return
+    if sys.argv[1:2] == ["--worker"]:
+        return worker(int(sys.argv[2]), int(sys.argv[3]), sys.argv[4])
+    t0 = time.monotonic()
+    affinity = os.sched_getaffinity(0)
+    n, n4 = levels(affinity)
+    cores = len(affinity)
+    n_docs = DOCS_PER_CORE * cores
+    spark = build_session(app="scalebench-corpus", master=f"local[{cores}]")
+    ensure_corpus(spark, n_docs)
+    jvm = spark.sparkContext._gateway.proc
+    spark.stop()
+    jvm.stdin.close()  # the gateway JVM exits at EOF on its stdin
+    jvm.wait()
 
-    # pre-materialize the corpus at full parallelism so the low-level
-    # workers don't pay generation cost
-    from ai_pdf_ocr_spark.engine.session import build_session
-
-    from bench import ensure_corpus
-    s = build_session(app="scalebench-gen", master="local[32]",
-                      shuffle_partitions=32)
-    s.sparkContext.setLogLevel("ERROR")
-    ensure_corpus(s, N_DOCS)
-    s.stop()
-
-    # raw-CPU calibration is BRACKETED around each level's worker (this
-    # box is shared: one loaded window during a level would otherwise
-    # silently skew the pair ratio); per-level hw capacity = mean of the
-    # before/after probes at that level's parallelism
-    results: dict[int, dict] = {}
-    calib: dict[int, float] = {}
-    for cpus in LEVELS:
-        c_before = _calibrate(cpus)
-        env = dict(os.environ, SPARK_GRAFT_CPUS=str(cpus))
-        out = subprocess.run(
-            [sys.executable, os.path.abspath(__file__), "--worker",
-             str(cpus)],
-            capture_output=True, text=True, env=env,
-            cwd=os.path.dirname(os.path.abspath(__file__)))
-        if out.returncode != 0:
-            sys.stderr.write(out.stderr)
-            raise SystemExit(f"worker local[{cpus}] failed")
-        line = [ln for ln in out.stdout.splitlines()
-                if ln.startswith("{")][-1]
-        results[cpus] = json.loads(line)
-        c_after = _calibrate(cpus)
-        calib[cpus] = round((c_before + c_after) / 2, 1)
-
-    pairs = {}
-    for lo, hi in PAIRS:
-        eff = (results[hi]["docs_per_sec"] / results[lo]["docs_per_sec"]) \
-            / (hi / lo)
-        hw = (calib[hi] / calib[lo]) / (hi / lo)
-        pairs[f"{lo}->{hi}"] = {
-            "scaling_efficiency": round(eff, 3),
-            "hw_ceiling": round(hw, 3),
-            "vs_ceiling": round(min(eff / hw, 9.999), 3) if hw else None,
-        }
-    summary = {
-        "metric": "extraction scaling efficiency (N -> 4N threads)",
-        "n_docs": N_DOCS,
-        "levels": results,
-        "cpu_calibration_Mops": calib,
-        "pairs": pairs,
-        "target": 0.8,
-        "pass_2_to_8": pairs["2->8"]["scaling_efficiency"] >= 0.8,
-    }
-    print(json.dumps(summary))
+    recs: dict[int, list[dict]] = {n: [], n4: []}
+    with tempfile.TemporaryDirectory(prefix="scalebench-") as tmp:
+        for i in range(PAIRS):
+            for k in (n, n4) if i % 2 == 0 else (n4, n):
+                recs[k].append(_run_worker(k, n_docs, tmp))
+    s = summarize(n, {k: [tuple(r["best"]) for r in rs]
+                      for k, rs in recs.items()})
+    for k, lv in s["levels"].items():
+        lv["jvm_cpus"] = sorted({r["jvm_cpus"] for r in recs[k]})
+    record = {"metric": f"extraction scaling, pinned local[{n}] -> "
+                        f"local[{n4}]", "cores": cores, "n_docs": n_docs,
+              "pairs": PAIRS, **s, "total_s": round(time.monotonic() - t0, 1)}
+    print(json.dumps(record, separators=(",", ":")))
     if "--update-baseline" in sys.argv:
-        _update_baseline(summary)
+        _update_baseline(record)
 
 
-def _update_baseline(s: dict) -> None:
-    path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                        "BASELINE.md")
+def _update_baseline(r: dict) -> None:
+    """Rewrite BASELINE.md's scaling section, up to the next "## "."""
+    path = os.path.join(HERE, "BASELINE.md")
     with open(path) as f:
         text = f.read()
-    marker = "## Measured scaling (this engine)"
-    rows = "\n".join(
-        f"| local[{c}] | {r['wall_s']} | {r['docs_per_sec']} | "
-        f"{r['warmup_runs']} |"
-        for c, r in sorted(s["levels"].items(), key=lambda kv: int(kv[0])))
-    p28 = s["pairs"]["2->8"]
-    p832 = s["pairs"]["8->32"]
-    block = f"""{marker}
+    rows = "\n".join(f"| local[{k}] | {lv['docs_per_s']} | "
+                     f"{lv['docs_per_cpu_s']} | {', '.join(lv['jvm_cpus'])} |"
+                     for k, lv in r["levels"].items())
+    block = f"""{SECTION}
 
-Same frozen extraction job, identical pre-materialized parquet input
-({s['n_docs']} synthetic interleaved docs, heavy-tail 2%, 64 files),
-fresh subprocess per level, warmed to convergence before measuring
-(JIT warm-up at high thread counts otherwise dominates; a production
-run amortizes it to zero).  See scalebench.py.
+Generated by `python scalebench.py --update-baseline`: `run_extraction`
+(write and lineage included) on {r['n_docs']} synthetic interleaved docs,
+each level a fresh `local[k]` process pinned to k of {r['cores']} cores,
+{r['pairs']} alternating pairs.  Per level, the median over workers of
+each worker's best run; CPU is the worker's whole process tree.
 
-| parallelism | wall (s) | docs/sec | warm-up runs |
+| level | docs/s | docs per CPU-s | JVM's allowed cores |
 |---|---|---|---|
 {rows}
 
-Raw-CPU calibration (pure-python multiprocessing, Mops/2s):
-{json.dumps(s['cpu_calibration_Mops'])} — the 8->32 pair crosses the
-box's SMT boundary (hardware itself scales only
-{p832['hw_ceiling']}x/4 there).
-
-| pair | engine efficiency | hardware ceiling | engine/ceiling |
-|---|---|---|---|
-| 2 -> 8 (primary, linear region) | **{p28['scaling_efficiency']}** | {p28['hw_ceiling']} | {p28['vs_ceiling']} |
-| 8 -> 32 (SMT-limited) | {p832['scaling_efficiency']} | {p832['hw_ceiling']} | {p832['vs_ceiling']} |
-
-Target >= 0.8 on the N->4N pair in the hardware's linear region:
-{'PASS' if s['pass_2_to_8'] else 'FAIL'}.
+Wall efficiency **{r['wall_efficiency']}** (target >= {r['target']}:
+{'PASS' if r['pass'] else 'FAIL'}); work efficiency
+**{r['work_efficiency']}**; whole capture {r['total_s']} s.
 """
-    if marker in text:
-        # replace ONLY this section — stop at the next "## " header
-        # (truncating to EOF wiped the executor-JVM and headline
-        # sections twice in round 2)
-        idx = text.index(marker)
-        nxt = text.find("\n## ", idx + 1)
-        tail = text[nxt:] if nxt != -1 else ""
-        text = text[:idx] + block + tail
-    else:
-        text = text.rstrip() + "\n\n" + block
+    idx = text.index(SECTION)
+    end = text.find("\n## ", idx + 1)
     with open(path, "w") as f:
-        f.write(text)
+        f.write(text[:idx] + block + (text[end:] if end != -1 else ""))
 
 
 if __name__ == "__main__":

@@ -16,6 +16,7 @@ Mirrors the reference's checkpoint-exists short-circuit
 from __future__ import annotations
 
 import time
+from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -24,13 +25,21 @@ from ..kernel.extract import KERNEL_VERSION
 from .io import TableStore
 from .partitioning import DEFAULT_BUCKETS, compute_assignment
 from .pipeline import extract_binned
+from .schemas import CHECKPOINT, local_frame
+
+_EMPTY_BIN = {"doc_id_min": None, "doc_id_max": None, "doc_count": 0,
+              "span_count_in": 0, "span_count_out": 0, "dedup_removed": 0}
 
 
-def lineage_rows(committed: DataFrame, run_id: str,
-                 wall_time_s: float) -> DataFrame:
-    """CHECKPOINT-shaped lineage + span-count metrics, one 'done' row
-    per bin present in ``committed`` (EXTRACTED rows plus ``bin``)."""
-    return (
+def commit_lineage(store: TableStore, committed: DataFrame, run_id: str,
+                   wall_time_s: float, bins: Iterable[int] = ()) -> int:
+    """Append CHECKPOINT lineage + span-count metrics: one 'done' row
+    per bin present in ``committed`` (EXTRACTED rows plus ``bin``), and
+    a zero row for each of ``bins`` that received no docs, so resume
+    never retargets it.  The per-bin aggregate (<= P rows) is collected
+    once and appended as a local frame.  Returns the docs committed."""
+    agg = {
+        r.bin: r.asDict() for r in
         committed.groupBy("bin")
         .agg(F.min("doc_id").alias("doc_id_min"),
              F.max("doc_id").alias("doc_id_max"),
@@ -38,13 +47,14 @@ def lineage_rows(committed: DataFrame, run_id: str,
              F.sum("span_count_in").alias("span_count_in"),
              F.sum("span_count_out").alias("span_count_out"),
              F.sum("dedup_removed").alias("dedup_removed"))
-        .select(F.lit(run_id).alias("run_id"), "bin", "doc_id_min",
-                "doc_id_max", "doc_count", "span_count_in",
-                "span_count_out", "dedup_removed",
-                F.lit(KERNEL_VERSION).alias("kernel_version"),
-                F.lit(float(wall_time_s)).alias("wall_time_s"),
-                F.lit("done").alias("status"))
-    )
+        .collect()
+    }
+    rows = [{**_EMPTY_BIN, **agg.get(b, {}), "run_id": run_id, "bin": b,
+             "kernel_version": KERNEL_VERSION,
+             "wall_time_s": float(wall_time_s), "status": "done"}
+            for b in sorted(set(agg) | set(bins))]
+    store.append_checkpoint(local_frame(store.spark, rows, CHECKPOINT))
+    return sum(r["doc_count"] for r in rows)
 
 
 def run_extraction(spark: SparkSession, documents: DataFrame,
@@ -54,11 +64,10 @@ def run_extraction(spark: SparkSession, documents: DataFrame,
     """Run (or resume) one extraction job; returns a summary dict."""
     t0 = time.monotonic()
 
-    ckpt = store.read_checkpoint()
     done = {
-        r.bin for r in
-        ckpt.where((F.col("run_id") == run_id) & (F.col("status") == "done"))
-        .select("bin").distinct().collect()
+        r.bin for r in store.read_checkpoint()
+        .where((F.col("run_id") == run_id) & (F.col("status") == "done"))
+        .select("bin").collect()
     }
     target_bins = sorted(set(range(num_partitions)) - done)
     if not target_bins:
@@ -75,21 +84,10 @@ def run_extraction(spark: SparkSession, documents: DataFrame,
     wall = time.monotonic() - t0
 
     # lineage + metrics per bin, derived from the committed output
-    new = lineage_rows(
+    docs_processed = commit_lineage(
+        store,
         store.read_extracted().where(F.col("bin").isin(*target_bins)),
-        run_id, wall)
-    rows = new.collect()
-    docs_processed = sum(r.doc_count for r in rows)
-    # bins that received zero docs still get a 'done' row so resume
-    # never retargets them
-    empty_bins = set(target_bins) - {r.bin for r in rows}
-    if empty_bins:
-        zeros = spark.createDataFrame(
-            [(run_id, b, None, None, 0, 0, 0, 0, KERNEL_VERSION,
-              float(wall), "done") for b in sorted(empty_bins)],
-            schema=new.schema)
-        new = new.unionByName(zeros)
-    store.append_checkpoint(new)
+        run_id, wall, target_bins)
     return {"run_id": run_id, "bins_done_prior": sorted(done),
             "bins_processed": target_bins,
             "docs_processed": docs_processed, "wall_time_s": wall}

@@ -54,7 +54,9 @@ class TableStore:
          .parquet(self.path("documents_extracted")))
 
     def read_extracted(self) -> DataFrame:
-        return self.spark.read.parquet(self.path("documents_extracted"))
+        # fixed schemas on every read: no footer-inference job
+        return (self.spark.read.schema(schemas.EXTRACTED_BINNED)
+                .parquet(self.path("documents_extracted")))
 
     def write_bucketed(self, df: DataFrame, name: str,
                        n_buckets: int = 64,
@@ -85,10 +87,13 @@ class TableStore:
         return name
 
     def append_checkpoint(self, df: DataFrame) -> None:
-        (df.write.mode("append").option("compression", self.codec)
+        # <= P rows per run: one file per append
+        (df.coalesce(1).write.mode("append")
+         .option("compression", self.codec)
          .parquet(self.path("checkpoint")))
 
     def read_checkpoint(self) -> DataFrame:
         if not self.exists("checkpoint"):
-            return self.spark.createDataFrame([], schema=schemas.CHECKPOINT)
-        return self.spark.read.parquet(self.path("checkpoint"))
+            return schemas.local_frame(self.spark, [], schemas.CHECKPOINT)
+        return (self.spark.read.schema(schemas.CHECKPOINT)
+                .parquet(self.path("checkpoint")))

@@ -25,6 +25,8 @@ import heapq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .schemas import MAPPING, local_frame
+
 DEFAULT_BUCKETS = 4096
 
 _REP_CACHE: dict[tuple[str, int], list[int]] = {}
@@ -90,27 +92,6 @@ def compute_assignment(df: DataFrame, num_partitions: int,
     return _lpt_pack(weights, num_partitions)
 
 
-def mapping_df(spark: SparkSession, assignment: dict[int, int],
-               num_partitions: int) -> DataFrame:
-    """(salt, bin, rep) lookup table for broadcast joins.
-
-    NB: a literal ``create_map``/``array`` expression is re-built PER
-    ROW by Spark (measured: a 4096-pair CreateMap cost ~50x the kernel
-    and leaked GC pressure); a broadcast hash join against this tiny
-    table is the scalable form."""
-    reps = partition_representatives(spark, num_partitions)
-    rows = [(salt, b, reps[b]) for salt, b in sorted(assignment.items())]
-    return spark.createDataFrame(rows, "salt int, bin int, rep int")
-
-
-def with_bin(df: DataFrame, map_df: DataFrame,
-             buckets: int = DEFAULT_BUCKETS) -> DataFrame:
-    """Attach deterministic ``bin``+``rep`` via broadcast join."""
-    salted = df.withColumn(
-        "salt", F.pmod(F.xxhash64("doc_id"), F.lit(buckets)).cast("int"))
-    return salted.join(F.broadcast(map_df), "salt", "left").drop("salt")
-
-
 def weighted_repartition(df: DataFrame, num_partitions: int,
                          buckets: int = DEFAULT_BUCKETS,
                          assignment: dict[int, int] | None = None
@@ -127,32 +108,16 @@ def weighted_repartition(df: DataFrame, num_partitions: int,
     ingest/registration time, not per query)."""
     if assignment is None:
         assignment = compute_assignment(df, num_partitions, buckets)
-    map_df = mapping_df(df.sparkSession, assignment, num_partitions)
+    reps = partition_representatives(df.sparkSession, num_partitions)
+    # broadcast-joined local frame: a literal ``create_map``/``array``
+    # lookup measured slower per row (CLAUDE.md)
+    mapping = local_frame(df.sparkSession, [
+        {"salt": salt, "bin": b, "rep": reps[b]}
+        for salt, b in sorted(assignment.items())], MAPPING)
+    salt = F.pmod(F.xxhash64("doc_id"), F.lit(buckets)).cast("int")
     return (
-        with_bin(df, map_df, buckets)
+        df.withColumn("salt", salt)
+        .join(F.broadcast(mapping), "salt", "left").drop("salt")
         .repartition(num_partitions, "rep")
         .sortWithinPartitions("doc_id")
     )
-
-
-def extraction_bins(cpus: int) -> int:
-    """Task-wave policy for the fused extraction stage.
-
-    - at or below ~half the box's hardware threads, ONE task per core
-      wins: local[8] with 32 bins ran 27% SLOWER than with 8 (r2; 4
-      waves add per-task Arrow-stream setup + scheduling overhead with
-      no skew to smooth — the LPT weight packing already balances);
-    - past the contention region, TWO waves win: r3 interleaved A/B
-      (48k-doc sf0.1 corpus, 5 reps per level in ONE load window,
-      raw-CPU calibration bracketed 331->392 Mops) measured local[32]
-      best/median seconds 32 bins 5.51/6.48, 64 bins 2.34/2.57,
-      128 bins 2.90/3.51.  One wave loses to SMT-jitter stragglers
-      (1/32-sized tasks dominate the wall); four waves (the r2 policy)
-      re-pay per-task Arrow setup once the r2-r3 kernel got faster —
-      and the driver's own r2 capture showed 128 bins at 3.94s, the
-      regression that forced this re-measurement (VERDICT r2 #2).
-
-    On a real multi-executor cluster this is the low end of the
-    familiar 2-4x-tasks-per-core rule; the <=8 carve-out is this box's
-    uncontended region."""
-    return cpus if cpus <= 8 else 2 * cpus

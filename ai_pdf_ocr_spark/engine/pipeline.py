@@ -1,12 +1,13 @@
 """The extraction pipeline as one fused Arrow stage.
 
 Spark re-expression of the reference's per-document flow (SURVEY.md
-§3 EP1): ``read -> [resume anti-join] -> weighted repartition ->
-mapInPandas(extract) -> write``.  Decode + layout + dedupe + filters
-are fused into a single ``mapInPandas`` so the heavy span payloads
-cross the JVM<->Arrow boundary exactly once (the reference's analog:
-lazy one-time model init + page-at-a-time streaming,
-/root/reference/ocr_processor.py:47-59, /root/reference/main.py:197-280).
+§3 EP1): ``read -> weighted repartition -> mapInArrow(extract) ->
+write``.  Decode + layout + dedupe + filters are fused into a single
+``mapInArrow`` so the heavy span payloads cross the JVM<->Arrow
+boundary exactly once; the partition column ``bin`` rides through the
+same stage unchanged (the reference's analog: lazy one-time model init
++ page-at-a-time streaming, /root/reference/ocr_processor.py:47-59,
+/root/reference/main.py:197-280).
 """
 
 from __future__ import annotations
@@ -20,28 +21,34 @@ from pyspark.sql import functions as F
 
 from ..kernel.extract import extract_record_batch
 from . import schemas
-from .partitioning import mapping_df, weighted_repartition, with_bin
+from .partitioning import weighted_repartition
 
 
 def _extract_iter(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
     # iterator form: per-task setup happens once, then Arrow batches
     # stream through with bounded memory (S3 streaming analog,
-    # /root/reference/pdf_processor.py:63-83)
+    # /root/reference/pdf_processor.py:63-83).  Input columns after
+    # (doc_id, spans) — ``bin`` — are appended to the output unchanged.
     for rb in batches:
         if rb.num_rows:
-            yield extract_record_batch(rb)
+            out = extract_record_batch(rb)
+            for i in range(2, rb.num_columns):
+                out = out.append_column(rb.schema.field(i), rb.column(i))
+            yield out
+
+
+def _extract(df: DataFrame, schema) -> DataFrame:
+    # mapInArrow, not mapInPandas: the nested spans column stays Arrow
+    # end-to-end (zero-copy flatten in, offsets+flat-arrays out); the
+    # pandas list<struct> marshaling measured ~5x the kernel compute.
+    # Callers prune to the needed columns first — UDFs are pruning
+    # barriers (SURVEY.md §4).
+    return df.mapInArrow(_extract_iter, schema=schema)
 
 
 def extract_documents(df: DataFrame) -> DataFrame:
-    """documents(doc_id, spans) -> EXTRACTED rows (spans + metrics).
-
-    mapInArrow, not mapInPandas: the nested spans column stays Arrow
-    end-to-end (zero-copy flatten in, offsets+flat-arrays out); the
-    pandas list<struct> marshaling measured ~5x the kernel compute.
-    Explicitly prunes to the two needed columns before the UDF —
-    UDFs are pruning barriers (SURVEY.md §4)."""
-    return df.select("doc_id", "spans").mapInArrow(
-        _extract_iter, schema=schemas.EXTRACTED)
+    """documents(doc_id, spans) -> EXTRACTED rows (spans + metrics)."""
+    return _extract(df.select("doc_id", "spans"), schemas.EXTRACTED)
 
 
 def extract_binned(docs: DataFrame, assignment: dict[int, int],
@@ -49,15 +56,13 @@ def extract_binned(docs: DataFrame, assignment: dict[int, int],
                    skip: frozenset[int] = frozenset()) -> DataFrame:
     """documents -> EXTRACTED rows plus ``bin``: the batch and streaming
     core.  Weighted repartition by ``assignment``, minus the ``skip``
-    bins (already committed), then the fused extraction.  ``bin`` is
-    re-derived from doc_id after the UDF via the same broadcast mapping
-    (avoids threading it through the Arrow stage)."""
+    bins (already committed), then the fused extraction, which carries
+    ``bin`` through."""
     part = weighted_repartition(docs, num_partitions, buckets, assignment)
     if skip:
         part = part.where(~F.col("bin").isin(*skip))
-    return with_bin(extract_documents(part),
-                    mapping_df(docs.sparkSession, assignment, num_partitions),
-                    buckets).drop("rep")
+    return _extract(part.select("doc_id", "spans", "bin"),
+                    schemas.EXTRACTED_BINNED)
 
 
 def extracted_spans_flat(extracted: DataFrame) -> DataFrame:

@@ -1,9 +1,14 @@
 """Fixed Spark schemas (SURVEY.md §1.3: fixed StructType, lenient
-defaults applied in the decode stage, not the schema)."""
+defaults applied in the decode stage, not the schema), and the one way
+the engine builds a small driver-side frame from them."""
 
 from __future__ import annotations
 
+import pyarrow as pa
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 RAW_SPAN = T.StructType([
     T.StructField("kind", T.StringType()),
@@ -35,6 +40,10 @@ EXTRACTED = T.StructType([
     T.StructField("filtered", T.LongType()),
 ])
 
+# the extracted table: EXTRACTED plus the partition column
+EXTRACTED_BINNED = T.StructType(
+    EXTRACTED.fields + [T.StructField("bin", T.IntegerType())])
+
 CHECKPOINT = T.StructType([
     T.StructField("run_id", T.StringType(), False),
     T.StructField("bin", T.IntegerType(), False),
@@ -48,3 +57,17 @@ CHECKPOINT = T.StructType([
     T.StructField("wall_time_s", T.DoubleType()),
     T.StructField("status", T.StringType()),
 ])
+
+# weighted repartition's salt -> (bin, representative) lookup
+MAPPING = T.StructType([T.StructField(c, T.IntegerType())
+                        for c in ("salt", "bin", "rep")])
+
+
+def local_frame(spark: SparkSession, rows: list[dict],
+                schema: T.StructType) -> DataFrame:
+    """A driver-side table as a ``LocalRelation``, built through Arrow:
+    collecting it runs no Spark job.  A Python-list ``createDataFrame``
+    runs a PythonRDD job each time it is used, even when empty, and so
+    does an empty pandas frame."""
+    table = pa.Table.from_pylist(rows, schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema)

@@ -48,18 +48,22 @@ behavior.)
 from __future__ import annotations
 
 import hashlib
+import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from . import schemas
-from .checkpoint import lineage_rows
+from .checkpoint import commit_lineage
 from .io import TableStore
 from .partitioning import DEFAULT_BUCKETS, compute_assignment
 from .pipeline import extract_binned
 
 STREAM_TABLE = "documents_extracted_stream"
 SIG_TABLE = "stream_signatures"
+_FLAGS = T.StructType([T.StructField("doc_id", T.StringType())] + [
+    T.StructField(c, T.BooleanType()) for c in ("dup_exact", "dup_near")])
 
 
 def _doc_keys(batch_df: DataFrame) -> DataFrame:
@@ -92,8 +96,7 @@ def _dup_flags(spark: SparkSession, store: TableStore, stream_id: str,
     """(doc_id, dup_exact, dup_near) for docs whose signatures appear
     in STRICTLY EARLIER epochs of this stream's history."""
     if not store.exists(SIG_TABLE):
-        return spark.createDataFrame(
-            [], "doc_id string, dup_exact boolean, dup_near boolean")
+        return schemas.local_frame(spark, [], _FLAGS)
     history = (spark.read.parquet(store.path(SIG_TABLE))
                .where((F.col("stream") == stream_id)
                       & (F.col("epoch") < int(epoch_id))))
@@ -108,6 +111,7 @@ def _dup_flags(spark: SparkSession, store: TableStore, stream_id: str,
 def _process_epoch(spark: SparkSession, store: TableStore, run_id: str,
                    stream_id: str, num_partitions: int, buckets: int,
                    batch_df: DataFrame, epoch_id: int) -> bool:
+    t0 = time.monotonic()
     if not batch_df.take(1):
         return False
     assignment = compute_assignment(batch_df, num_partitions, buckets)
@@ -136,6 +140,7 @@ def _process_epoch(spark: SparkSession, store: TableStore, run_id: str,
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("stream", "epoch", "bin")
         .parquet(store.path(STREAM_TABLE)))
+    wall = time.monotonic() - t0
     # lineage from the COMMITTED files (same discipline as batch).
     # Idempotent under epoch replay: the append-only checkpoint table
     # cannot rewrite rows, so a replayed epoch (same stream-checkpoint
@@ -152,8 +157,7 @@ def _process_epoch(spark: SparkSession, store: TableStore, run_id: str,
     committed = (spark.read.parquet(store.path(STREAM_TABLE))
                  .where((F.col("stream") == stream_id)
                         & (F.col("epoch") == int(epoch_id))))
-    store.append_checkpoint(
-        lineage_rows(committed, f"{run_id}{marker}", 0.0))
+    commit_lineage(store, committed, f"{run_id}{marker}", wall)
     return True
 
 

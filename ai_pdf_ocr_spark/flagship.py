@@ -81,9 +81,7 @@ def extract_spans(spark, sf_dir):
     # as the dedup self-joins).
     docs = (synthetic_documents_distributed(spark, n)
             .localCheckpoint(eager=False))
-    from .engine.partitioning import extraction_bins
-    dp = spark.sparkContext.defaultParallelism
-    parts = max(2, min(extraction_bins(dp), n // 25))
+    parts = max(2, min(2 * spark.sparkContext.defaultParallelism, n // 25))
     extracted = extract_documents(weighted_repartition(docs, parts))
     # no global orderBy: the driver's value-hash compare normalizes row
     # order (VERDICT r2 #4 — keep the presentation sort out of the

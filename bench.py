@@ -4,7 +4,8 @@ $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
 local[$SPARK_GRAFT_CPUS] (default: every core this process may use)
 and prints ONE JSON line.
 
-The extraction benchmark reads a pre-materialized parquet corpus of
+The extraction row times ``run_extraction``, the production path with
+its write and lineage commit, over a pre-materialized parquet corpus of
 synthetic interleaved documents (generated distributed, cached in
 /tmp across runs) so the measured time is the pipeline, not the
 generator.
@@ -85,42 +86,37 @@ def ensure_corpus(spark, n_docs: int) -> str:
 
 
 def bench_extraction(spark, n_docs: int) -> tuple[float, dict]:
-    from pyspark.sql import functions as F
+    """The production path, ``run_extraction`` (weight profile,
+    weighted repartition, fused extraction, partitioned write, lineage
+    commit), into a fresh table store per pass: one untimed warm-up,
+    then best of 3."""
+    import shutil
+    import tempfile
 
-    from ai_pdf_ocr_spark.engine.partitioning import weighted_repartition
-    from ai_pdf_ocr_spark.engine.pipeline import extract_documents
-
-    from ai_pdf_ocr_spark.engine.partitioning import (compute_assignment,
-                                                      extraction_bins)
+    from ai_pdf_ocr_spark.engine.checkpoint import run_extraction
+    from ai_pdf_ocr_spark.engine.io import TableStore
+    from ai_pdf_ocr_spark.engine.sources import read_documents
 
     path = ensure_corpus(spark, n_docs)
-    docs = spark.read.parquet(path)
-    bins = extraction_bins(CPUS)
-    assignment = compute_assignment(docs, bins)  # table-stats, untimed
-    base = extract_documents(weighted_repartition(docs, bins,
-                                                  assignment=assignment))
+    bins = 2 * spark.sparkContext.defaultParallelism
+    root = tempfile.mkdtemp(prefix="bench_extract_")
 
-    def run():
-        # NB: the agg DataFrame must be rebuilt per run — collecting the
-        # SAME DataFrame twice reuses its materialized shuffle output and
-        # skips every stage (measured 0.03s "runs")
-        return base.agg(F.count("*").alias("docs"),
-                        F.sum("span_count_out").alias("spans_out"),
-                        F.sum("span_count_in").alias("spans_in")).collect()[0]
-
-    run()  # warm-up (JIT + python workers), untimed
-    best = None
-    for _ in range(3):
+    def run(i: int) -> tuple[float, int]:
+        store = TableStore(spark, os.path.join(root, str(i)))
         t0 = time.monotonic()
-        out = run()
+        s = run_extraction(spark, read_documents(spark, path), store,
+                           "bench", bins)
         dt = time.monotonic() - t0
-        if best is None or dt < best[0]:
-            best = (dt, out)
-    dt, out = best
-    return dt, {"docs": out.docs, "spans_in": out.spans_in,
-                "spans_out": out.spans_out,
-                "docs_per_sec": round(out.docs / dt, 1),
-                "spans_in_per_sec": round(out.spans_in / dt, 1)}
+        shutil.rmtree(store.root)
+        return dt, s["docs_processed"]
+
+    try:
+        run(0)  # warm-up (JIT + python workers), untimed
+        dt, docs = min(run(i) for i in range(1, 4))
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+    return dt, {"docs": docs, "bins": bins,
+                "docs_per_sec": round(docs / dt, 1)}
 
 
 def _burn(_):

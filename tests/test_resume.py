@@ -11,8 +11,10 @@ from pyspark.sql import functions as F
 
 from ai_pdf_ocr_spark.engine.checkpoint import run_extraction
 from ai_pdf_ocr_spark.engine.io import TableStore
+from ai_pdf_ocr_spark.engine.partitioning import partition_representatives
 from ai_pdf_ocr_spark.engine.pipeline import documents_df
 from ai_pdf_ocr_spark.engine.schemas import CHECKPOINT
+from ai_pdf_ocr_spark.engine.sources import read_documents
 from ai_pdf_ocr_spark.fixtures.generate import make_documents
 
 
@@ -73,5 +75,50 @@ def test_checkpoint_lineage_rows(spark, tmp_path):
     total_in = sum(r.span_count_in for r in ck)
     assert total_in == sum(len(d["spans"]) for d in docs)
     for r in ck:
+        assert r.wall_time_s > 0
         if r.doc_count:
             assert r.doc_id_min <= r.doc_id_max
+
+
+def test_empty_bins_get_zero_rows(spark, tmp_path):
+    """3 docs over 8 bins: every bin gets a 'done' row — the empty ones
+    with doc_count 0 and null doc_id bounds — so a rerun is a no-op."""
+    df = documents_df(spark, make_documents(3, seed=5))
+    store = TableStore(spark, str(tmp_path / "t"))
+    assert run_extraction(spark, df, store, "run-E", 8)["docs_processed"] == 3
+    occupied = {r.bin for r in store.read_extracted().select("bin").collect()}
+    assert len(occupied) <= 3
+    ck = {r.bin: r for r in store.read_checkpoint().collect()}
+    assert sorted(ck) == list(range(8))
+    assert all(r.status == "done" and r.run_id == "run-E" for r in ck.values())
+    assert sum(r.doc_count for r in ck.values()) == 3
+    for b in set(range(8)) - occupied:
+        r = ck[b]
+        assert (r.doc_count, r.span_count_in, r.span_count_out) == (0, 0, 0)
+        assert r.doc_id_min is None and r.doc_id_max is None
+    again = run_extraction(spark, df, store, "run-E", 8)
+    assert again["bins_processed"] == [] and again["docs_processed"] == 0
+    assert store.read_checkpoint().count() == 8
+
+
+def test_run_extraction_job_count(spark, tmp_path, count_jobs):
+    """Fixed cost per run: a fresh run is at most 8 Spark jobs (weight
+    profile 2, broadcast 1, write 2, lineage aggregate 2, checkpoint
+    append 1) and a no-op resume at most 2.  Fixed-schema reads, a local
+    Arrow mapping frame, ``bin`` carried through the Arrow stage and
+    one lineage aggregate keep it there."""
+    src = str(tmp_path / "in")
+    documents_df(spark, make_documents(200, seed=9)).write.parquet(src)
+    partition_representatives(spark, 8)  # cached per session
+    store = TableStore(spark, str(tmp_path / "out"))
+
+    def run():
+        return run_extraction(spark, read_documents(spark, src), store,
+                              "run-J", 8)
+
+    fresh, jobs = count_jobs(run)
+    assert fresh["docs_processed"] == 200
+    assert jobs <= 8, jobs
+    noop, jobs = count_jobs(run)
+    assert noop["bins_processed"] == [] and noop["docs_processed"] == 0
+    assert jobs <= 2, jobs

@@ -5,8 +5,10 @@ from __future__ import annotations
 
 from ai_pdf_ocr_spark.engine.io import TableStore
 from ai_pdf_ocr_spark.engine.pipeline import documents_df, extract_documents
+from ai_pdf_ocr_spark.engine.schemas import DOCUMENTS
 from ai_pdf_ocr_spark.engine.sources import read_documents
 from ai_pdf_ocr_spark.fixtures.generate import make_documents
+from tests import oracle as O
 
 
 def _spans_map(df):
@@ -31,6 +33,21 @@ def test_jsonl_source_equals_parquet(spark, tmp_path):
     out_p = _spans_map(extract_documents(via_parquet))
     out_j = _spans_map(extract_documents(via_jsonl))
     assert out_p == out_j
+
+
+def test_parquet_source_reads_fixed_schema(spark, tmp_path):
+    """Parquet is read with DOCUMENTS, not footer inference: a column
+    outside the schema (a ``span_count`` stats column) is not read."""
+    from pyspark.sql import functions as F
+
+    docs = make_documents(20, seed=8)
+    (documents_df(spark, docs).withColumn("span_count", F.size("spans"))
+     .write.parquet(str(tmp_path / "p")))
+    df = read_documents(spark, str(tmp_path / "p"))
+    assert df.columns == ["doc_id", "spans"]
+    assert [f.dataType for f in df.schema] == \
+        [f.dataType for f in DOCUMENTS]
+    assert _spans_map(extract_documents(df)) == O.extract_corpus(docs)
 
 
 def test_jsonl_rejects_unknown_format(spark, tmp_path):

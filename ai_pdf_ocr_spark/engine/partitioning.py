@@ -70,23 +70,16 @@ def _lpt_pack(weights: list[tuple[int, int]], p: int) -> dict[int, int]:
 
 
 def compute_assignment(df: DataFrame, num_partitions: int,
-                       buckets: int = DEFAULT_BUCKETS,
-                       weight_col: str = "spans") -> dict[int, int]:
+                       buckets: int = DEFAULT_BUCKETS) -> dict[int, int]:
     """salt -> bin map: one tiny aggregation (<= ``buckets`` rows to the
     driver) + deterministic LPT packing.  Pure function of the corpus
     weight profile, so resume re-derives identical bins (SURVEY.md §7
     'weighted repartition correctness under resume')."""
-    # prefer a precomputed span_count stats column: the weight scan then
-    # reads one int64 column instead of the full spans payload
-    if "span_count" in df.columns:
-        w_expr = F.col("span_count")
-    else:
-        w_expr = F.size(F.col(weight_col))
     weights = [
         (r.salt, r.w) for r in
         df.groupBy(F.pmod(F.xxhash64("doc_id"), F.lit(buckets)).cast("int")
                    .alias("salt"))
-        .agg(F.sum(F.greatest(w_expr, F.lit(1))).alias("w"))
+        .agg(F.sum(F.greatest(F.size("spans"), F.lit(1))).alias("w"))
         .collect()
     ]
     return _lpt_pack(weights, num_partitions)

@@ -18,7 +18,9 @@ from __future__ import annotations
 
 from pyspark.sql import Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from ..engine import schemas
 from . import load, register
 from .dedup import _spread, _tokens
 
@@ -210,8 +212,10 @@ def sample_domain_mixture(spark, sf_dir):
         F.sum("n_tok").cast("long").alias("tot_tokens"))
     grand = tot.agg(F.expr("CAST(SUM(tot_tokens) AS BIGINT) DIV 2")
                     .alias("tgt"))
-    w = d.sparkSession.createDataFrame(
-        sorted(_MIX_MILLI.items()), "lang string, w_milli int")
+    w = schemas.local_frame(
+        spark, [{"lang": k, "w_milli": v}
+                for k, v in sorted(_MIX_MILLI.items())],
+        T.StructType.fromDDL("lang string, w_milli int"))
     thr = (tot.join(F.broadcast(w), "lang").crossJoin(F.broadcast(grand))
            .select("lang", "tot_tokens",
                    F.least(

@@ -70,17 +70,12 @@ def ensure_corpus(spark, n_docs: int) -> str:
     path = f"/tmp/spark_graft_bench/docs_{n_docs}_v3"
     marker = os.path.join(path, "_SUCCESS")
     if not os.path.exists(marker):
-        from pyspark.sql import functions as F
-
         from ai_pdf_ocr_spark.flagship import synthetic_documents_distributed
         # 64 files: the scan stage must parallelize fully at EVERY
         # tested cluster size (8 files capped local[32] at 8-way reads)
         (synthetic_documents_distributed(spark, n_docs,
                                          heavy_tail_frac=0.02,
                                          partitions=64)
-         # span_count stats column: lets the weight profile read one
-         # int64 column instead of the nested spans payload
-         .withColumn("span_count", F.size("spans"))
          .write.mode("overwrite").parquet(path))
     return path
 

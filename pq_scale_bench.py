@@ -51,7 +51,7 @@ CPUS = default_cpus()
 # bump _v when synth_embeddings changes — the _SUCCESS cache check
 # would otherwise silently reuse a stale corpus (bench.py::ensure_
 # corpus learned the same lesson; r5 code-review)
-CORPUS_V = 1
+CORPUS_V = 2
 BASE = f"/tmp/spark_graft_pqbench/n{N}_v{CORPUS_V}"
 
 
@@ -63,7 +63,9 @@ def synth_embeddings(spark, n):
     (q + 0.1x-scaled hash noise): sign-quantized recall is only
     meaningful where near-neighbors exist (a uniform corpus's top-10
     gap sits inside one quantization cell — measured round 4), so the
-    A/B also reports a recall the operator is designed to deliver."""
+    A/B also reports a recall the operator is designed to deliver.
+    ``label`` is 1 on the planted rows and 2 elsewhere, as in the
+    tests' planted corpora (the serving functions return it)."""
     from pyspark.sql import functions as F
 
     def comp(i_col, j):
@@ -71,14 +73,16 @@ def synth_embeddings(spark, n):
             ":", i_col.cast("string"), j.cast("string"))),
             F.lit(2001)) - 1000.0) / 1000.0
 
+    planted = (F.col("id") >= 1) & (F.col("id") <= 20)
     vec = F.transform(
         F.sequence(F.lit(0), F.lit(63)),
         lambda j: F.when(
-            (F.col("id") >= 1) & (F.col("id") <= 20),
-            comp(F.lit(0), j) + comp(F.col("id"), j) / 10.0)
+            planted, comp(F.lit(0), j) + comp(F.col("id"), j) / 10.0)
         .otherwise(comp(F.col("id"), j)).cast("float"))
     return (spark.range(n).repartition(64)
-            .select(F.col("id").alias("vec_id"), vec.alias("embedding")))
+            .select(F.col("id").alias("vec_id"), vec.alias("embedding"),
+                    F.when(planted, 1).otherwise(2).cast("int")
+                    .alias("label")))
 
 
 def _bytes(path: str) -> int:
@@ -107,8 +111,10 @@ def _best_of(fn, runs=3):
 
 def main() -> None:
     from bench import _calibrate
+    from ai_pdf_ocr_spark.engine import schemas
     from ai_pdf_ocr_spark.engine.session import build_session
     from pyspark.sql import functions as F
+    from pyspark.sql import types as T
 
     from ai_pdf_ocr_spark.queries.similarity import (PQ_RERANK_R,
                                                      ivfpq_adc_topk,
@@ -163,7 +169,8 @@ def main() -> None:
     codes = spark.read.parquet(codes_path)
 
     q_emb = [float(x) for x in e.where("vec_id = 0").first().embedding]
-    q_row = spark.createDataFrame([(q_emb,)], "qe array<double>")
+    q_row = schemas.local_frame(spark, [{"qe": q_emb}],
+                                T.StructType.fromDDL("qe array<double>"))
 
     # IVF-PQ codes partitioned by list_id: the nprobe filter becomes
     # parquet PARTITION PRUNING — the scan reads only nprobe/IVF_K of

@@ -4,7 +4,7 @@ Mirrors the reference's checkpoint-exists short-circuit
 (``/root/reference/main.py:368-398``: JSON checkpoint written at
 ``:418``, resume skips OCR at ``:429-430``) at partition granularity:
 
- - bins are a deterministic pure function of (corpus, P, buckets)
+ - bins are a deterministic pure function of (corpus, P)
    (see partitioning.py), so a rerun reproduces identical bins;
  - extracted output is written with dynamic partition overwrite, so a
    partially-written bin from a killed run is cleanly replaced;
@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from ..kernel.extract import KERNEL_VERSION
 from .io import TableStore
-from .partitioning import DEFAULT_BUCKETS, compute_assignment
+from .partitioning import compute_assignment
 from .pipeline import extract_binned
 from .schemas import CHECKPOINT, local_frame
 
@@ -59,8 +59,7 @@ def commit_lineage(store: TableStore, committed: DataFrame, run_id: str,
 
 def run_extraction(spark: SparkSession, documents: DataFrame,
                    store: TableStore, run_id: str,
-                   num_partitions: int,
-                   buckets: int = DEFAULT_BUCKETS) -> dict:
+                   num_partitions: int) -> dict:
     """Run (or resume) one extraction job; returns a summary dict."""
     t0 = time.monotonic()
 
@@ -77,9 +76,9 @@ def run_extraction(spark: SparkSession, documents: DataFrame,
 
     # deterministic bins MUST be derived from the full corpus (resume
     # filtering happens after) so reruns reproduce identical layout
-    assignment = compute_assignment(documents, num_partitions, buckets)
+    assignment = compute_assignment(documents, num_partitions)
     extracted = extract_binned(documents, assignment, num_partitions,
-                               buckets, skip=frozenset(done))
+                               skip=frozenset(done))
     store.write_extracted(extracted, mode="overwrite")
     wall = time.monotonic() - t0
 

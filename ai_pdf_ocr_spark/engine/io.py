@@ -18,21 +18,20 @@ from pyspark.sql import DataFrame, SparkSession
 
 from . import schemas
 
+# parquet compression for every write — the S6 compressed-sink analog
+# of the reference's ``garbage=4, deflate`` PDF save; zstd beats snappy
+# ~30% on text-heavy span payloads at similar CPU, which is storage +
+# scan I/O at 100 TB.  Readers are codec-agnostic, so mixed-codec
+# tables from older runs stay valid.
+CODEC = "zstd"
+
 
 class TableStore:
-    """Directory-backed table namespace.
+    """Directory-backed table namespace."""
 
-    ``codec``: parquet compression for every write (default zstd — the
-    S6 compressed-sink analog of the reference's ``garbage=4, deflate``
-    PDF save; zstd beats snappy ~30% on text-heavy span payloads at
-    similar CPU, which is storage + scan I/O at 100 TB).  Readers are
-    codec-agnostic, so mixed-codec tables from older runs stay valid."""
-
-    def __init__(self, spark: SparkSession, root: str,
-                 codec: str = "zstd"):
+    def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
-        self.codec = codec
 
     def path(self, name: str) -> str:
         return os.path.join(self.root, name)
@@ -50,7 +49,7 @@ class TableStore:
         # df are replaced, which is what makes resume/replay idempotent
         (df.write.mode(mode).partitionBy("bin")
          .option("partitionOverwriteMode", "dynamic")
-         .option("compression", self.codec)
+         .option("compression", CODEC)
          .parquet(self.path("documents_extracted")))
 
     def read_extracted(self) -> DataFrame:
@@ -82,14 +81,14 @@ class TableStore:
         (df.write.format("parquet").mode("overwrite")
          .bucketBy(n_buckets, bucket_col).sortBy(bucket_col)
          .option("path", self.path(name))
-         .option("compression", self.codec)
+         .option("compression", CODEC)
          .saveAsTable(name))
         return name
 
     def append_checkpoint(self, df: DataFrame) -> None:
         # <= P rows per run: one file per append
         (df.coalesce(1).write.mode("append")
-         .option("compression", self.codec)
+         .option("compression", CODEC)
          .parquet(self.path("checkpoint")))
 
     def read_checkpoint(self) -> DataFrame:

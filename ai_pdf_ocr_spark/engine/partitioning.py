@@ -6,53 +6,31 @@ spans) is the bottleneck AQE cannot fix (AQE skew handling only covers
 joins/shuffle reads, not Python-UDF compute, SURVEY.md §4).
 
 Strategy — scale-correct, no global sort/window:
- 1. salt  = pmod(xxhash64(doc_id), B) with B >> P buckets (default 4096)
+ 1. salt  = pmod(xxhash64(doc_id), B) with B = max(4096, 16·P)
+    buckets, so every bin gets ~16+ salts to balance at any P
  2. one tiny aggregation computes per-bucket span-count weights
     (<= B rows collected to the driver — constant size regardless of
     corpus size)
  3. driver LPT-packs buckets into P bins by weight (greedy
     longest-processing-time; deterministic: ties broken by salt)
- 4. each bin is mapped to a *representative* int whose
-    murmur3-hash-mod-P equals the bin id, so ``repartition(P, rep)``
-    places every bin in exactly the intended partition — no
-    balls-into-bins collisions.
+ 4. the bin IS the partition id: ``repartitionById(P, bin)`` places
+    every bin in exactly its partition — no balls-into-bins
+    collisions.
 """
 
 from __future__ import annotations
 
 import heapq
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .schemas import MAPPING, local_frame
 
-DEFAULT_BUCKETS = 4096
 
-_REP_CACHE: dict[tuple[str, int], list[int]] = {}
-
-
-def partition_representatives(spark: SparkSession, p: int) -> list[int]:
-    """reps[k] = smallest non-negative int v with
-    pmod(murmur3(v), p) == k (Spark's HashPartitioning placement)."""
-    key = (spark.sparkContext.applicationId, p)
-    if key not in _REP_CACHE:
-        rows = (
-            spark.range(0, max(64 * p, 4096))
-            .select(F.col("id").cast("int").alias("v"))
-            .withColumn("k", F.pmod(F.hash("v"), F.lit(p)))
-            .groupBy("k").agg(F.min("v").alias("v"))
-            .collect()
-        )
-        reps = [0] * p
-        seen = set()
-        for r in rows:
-            reps[r.k] = r.v
-            seen.add(r.k)
-        if len(seen) != p:  # pragma: no cover - astronomically unlikely
-            raise RuntimeError("could not find representatives for all bins")
-        _REP_CACHE[key] = reps
-    return _REP_CACHE[key]
+def _salt(num_partitions: int) -> Column:
+    buckets = max(4096, 16 * num_partitions)
+    return F.pmod(F.xxhash64("doc_id"), F.lit(buckets)).cast("int")
 
 
 def _lpt_pack(weights: list[tuple[int, int]], p: int) -> dict[int, int]:
@@ -69,16 +47,14 @@ def _lpt_pack(weights: list[tuple[int, int]], p: int) -> dict[int, int]:
     return assignment
 
 
-def compute_assignment(df: DataFrame, num_partitions: int,
-                       buckets: int = DEFAULT_BUCKETS) -> dict[int, int]:
-    """salt -> bin map: one tiny aggregation (<= ``buckets`` rows to the
-    driver) + deterministic LPT packing.  Pure function of the corpus
-    weight profile, so resume re-derives identical bins (SURVEY.md §7
+def compute_assignment(df: DataFrame, num_partitions: int) -> dict[int, int]:
+    """salt -> bin map: one tiny aggregation (<= B rows to the driver)
+    + deterministic LPT packing.  Pure function of the corpus weight
+    profile and P, so resume re-derives identical bins (SURVEY.md §7
     'weighted repartition correctness under resume')."""
     weights = [
         (r.salt, r.w) for r in
-        df.groupBy(F.pmod(F.xxhash64("doc_id"), F.lit(buckets)).cast("int")
-                   .alias("salt"))
+        df.groupBy(_salt(num_partitions).alias("salt"))
         .agg(F.sum(F.greatest(F.size("spans"), F.lit(1))).alias("w"))
         .collect()
     ]
@@ -86,11 +62,10 @@ def compute_assignment(df: DataFrame, num_partitions: int,
 
 
 def weighted_repartition(df: DataFrame, num_partitions: int,
-                         buckets: int = DEFAULT_BUCKETS,
                          assignment: dict[int, int] | None = None
                          ) -> DataFrame:
     """Repartition documents into P span-count-balanced partitions,
-    adding deterministic ``bin`` (0..P-1) and ``rep`` columns.
+    adding a deterministic ``bin`` column (0..P-1).
 
     Partition i receives exactly the docs with bin == i (verified by
     tests/test_pipeline.py).  Rows are sorted by doc_id within each
@@ -100,17 +75,15 @@ def weighted_repartition(df: DataFrame, num_partitions: int,
     corpus (it is table-stats metadata — at 100 TB you compute it at
     ingest/registration time, not per query)."""
     if assignment is None:
-        assignment = compute_assignment(df, num_partitions, buckets)
-    reps = partition_representatives(df.sparkSession, num_partitions)
+        assignment = compute_assignment(df, num_partitions)
     # broadcast-joined local frame: a literal ``create_map``/``array``
     # lookup measured slower per row (CLAUDE.md)
     mapping = local_frame(df.sparkSession, [
-        {"salt": salt, "bin": b, "rep": reps[b]}
-        for salt, b in sorted(assignment.items())], MAPPING)
-    salt = F.pmod(F.xxhash64("doc_id"), F.lit(buckets)).cast("int")
+        {"salt": salt, "bin": b} for salt, b in sorted(assignment.items())],
+        MAPPING)
     return (
-        df.withColumn("salt", salt)
+        df.withColumn("salt", _salt(num_partitions))
         .join(F.broadcast(mapping), "salt", "left").drop("salt")
-        .repartition(num_partitions, "rep")
+        .repartitionById(num_partitions, "bin")
         .sortWithinPartitions("doc_id")
     )

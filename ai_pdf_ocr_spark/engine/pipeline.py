@@ -52,13 +52,13 @@ def extract_documents(df: DataFrame) -> DataFrame:
 
 
 def extract_binned(docs: DataFrame, assignment: dict[int, int],
-                   num_partitions: int, buckets: int,
+                   num_partitions: int,
                    skip: frozenset[int] = frozenset()) -> DataFrame:
     """documents -> EXTRACTED rows plus ``bin``: the batch and streaming
     core.  Weighted repartition by ``assignment``, minus the ``skip``
     bins (already committed), then the fused extraction, which carries
     ``bin`` through."""
-    part = weighted_repartition(docs, num_partitions, buckets, assignment)
+    part = weighted_repartition(docs, num_partitions, assignment)
     if skip:
         part = part.where(~F.col("bin").isin(*skip))
     return _extract(part.select("doc_id", "spans", "bin"),

@@ -58,9 +58,9 @@ CHECKPOINT = T.StructType([
     T.StructField("status", T.StringType()),
 ])
 
-# weighted repartition's salt -> (bin, representative) lookup
+# weighted repartition's salt -> bin lookup
 MAPPING = T.StructType([T.StructField(c, T.IntegerType())
-                        for c in ("salt", "bin", "rep")])
+                        for c in ("salt", "bin")])
 
 
 def local_frame(spark: SparkSession, rows: list[dict],

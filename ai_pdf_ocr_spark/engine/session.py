@@ -11,6 +11,11 @@ import os
 
 from pyspark.sql import SparkSession
 
+# rows per Arrow batch: measured sweet spot for the fused extraction
+# stage — 1024-row batches pay ~25% more per-batch JVM<->Arrow
+# overhead, 8k+ batches lose cache locality (exp on 192k-doc corpus)
+ARROW_BATCH = 4096
+
 
 def default_cpus() -> int:
     """Parallelism when no master is given: $SPARK_GRAFT_CPUS (a
@@ -20,11 +25,7 @@ def default_cpus() -> int:
 
 
 def build_session(app: str = "ai-pdf-ocr-spark", master: str | None = None,
-                  shuffle_partitions: int | None = None,
-                  arrow_batch: int = 4096) -> SparkSession:
-    # arrow_batch=4096: measured sweet spot for the fused extraction
-    # stage — 1024-row batches pay ~25% more per-batch JVM<->Arrow
-    # overhead, 8k+ batches lose cache locality (exp on 192k-doc corpus)
+                  shuffle_partitions: int | None = None) -> SparkSession:
     cpus = default_cpus()
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
@@ -46,7 +47,7 @@ def build_session(app: str = "ai-pdf-ocr-spark", master: str | None = None,
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch))
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory",
                 os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))

@@ -57,7 +57,7 @@ from pyspark.sql import types as T
 from . import schemas
 from .checkpoint import commit_lineage
 from .io import TableStore
-from .partitioning import DEFAULT_BUCKETS, compute_assignment
+from .partitioning import compute_assignment
 from .pipeline import extract_binned
 
 STREAM_TABLE = "documents_extracted_stream"
@@ -109,13 +109,13 @@ def _dup_flags(spark: SparkSession, store: TableStore, stream_id: str,
 
 
 def _process_epoch(spark: SparkSession, store: TableStore, run_id: str,
-                   stream_id: str, num_partitions: int, buckets: int,
+                   stream_id: str, num_partitions: int,
                    batch_df: DataFrame, epoch_id: int) -> bool:
     t0 = time.monotonic()
     if not batch_df.take(1):
         return False
-    assignment = compute_assignment(batch_df, num_partitions, buckets)
-    extracted = extract_binned(batch_df, assignment, num_partitions, buckets)
+    assignment = compute_assignment(batch_df, num_partitions)
+    extracted = extract_binned(batch_df, assignment, num_partitions)
 
     # cross-epoch dedup: flag docs already seen in earlier epochs,
     # then append this epoch's signatures (idempotent: dynamic
@@ -167,7 +167,6 @@ def _derive_stream_id(input_path: str) -> str:
 
 def stream_extract(spark: SparkSession, input_path: str, store: TableStore,
                    run_id: str, num_partitions: int,
-                   buckets: int = DEFAULT_BUCKETS,
                    stream_id: str | None = None) -> dict:
     """Process every file currently available in ``input_path`` that
     the stream checkpoint has not seen, then stop (availableNow
@@ -182,7 +181,7 @@ def stream_extract(spark: SparkSession, input_path: str, store: TableStore,
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
         if _process_epoch(spark, store, run_id, sid, num_partitions,
-                          buckets, batch_df, epoch_id):
+                          batch_df, epoch_id):
             seen["n"] += 1  # only epochs that actually produced output
 
     stream = (spark.readStream.schema(schemas.DOCUMENTS)

@@ -57,8 +57,6 @@ def parse_args(argv):
                         "committed bins")
     p.add_argument("--partitions", type=int, default=0,
                    help="extraction bins (default: 2x defaultParallelism)")
-    p.add_argument("--buckets", type=int, default=4096,
-                   help="salt buckets for the weight profile")
     return p.parse_args(argv)
 
 
@@ -71,12 +69,15 @@ def main(argv=None) -> int:
 
     from pyspark.sql import SparkSession
 
+    from ai_pdf_ocr_spark.engine.session import ARROW_BATCH
+
     spark = SparkSession.builder.appName("ai-pdf-ocr-spark-extract") \
         .getOrCreate()
     # runtime-settable scale configs (cluster-level ones — executor
     # memory, shuffle service — belong on the spark-submit line)
     spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch",
+                   str(ARROW_BATCH))
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.sparkContext.setLogLevel("WARN")
 
@@ -88,7 +89,7 @@ def main(argv=None) -> int:
     if args.stream_input:
         from ai_pdf_ocr_spark.engine.streaming import stream_extract
         summary = stream_extract(spark, args.stream_input, store,
-                                 args.run_id, p, buckets=args.buckets)
+                                 args.run_id, p)
         print(json.dumps({"run_id": args.run_id, **summary}))
         spark.stop()
         return 0
@@ -101,8 +102,7 @@ def main(argv=None) -> int:
         from ai_pdf_ocr_spark.engine.sources import read_documents
         documents = read_documents(spark, args.input, args.input_format)
 
-    summary = run_extraction(spark, documents, store, args.run_id, p,
-                             buckets=args.buckets)
+    summary = run_extraction(spark, documents, store, args.run_id, p)
     print(json.dumps(summary))
     spark.stop()
     return 0

@@ -5,7 +5,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ai_pdf_ocr_spark.engine.partitioning import weighted_repartition
+from ai_pdf_ocr_spark.engine.partitioning import (compute_assignment,
+                                                  weighted_repartition)
 from ai_pdf_ocr_spark.engine.pipeline import (
     doc_stats, documents_df, extract_documents, extracted_spans_flat)
 from ai_pdf_ocr_spark.fixtures.generate import golden_documents, make_documents
@@ -61,6 +62,15 @@ def test_bin_placement_exact(spark):
     assert all(r.bin == r.pid for r in placed)
     bins = {r.bin for r in placed}
     assert bins == set(range(8))  # all partitions used
+
+
+def test_every_bin_gets_a_salt_at_large_p(spark):
+    # the salt-bucket count grows with P: at P=6000 a fixed 4096
+    # buckets would leave ~1,900 bins empty
+    docs = spark.range(20000).select(
+        F.format_string("doc-%06d", "id").alias("doc_id"),
+        F.lit(None).cast("array<int>").alias("spans"))
+    assert len(set(compute_assignment(docs, 6000).values())) == 6000
 
 
 def test_weighted_balance(spark):

@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 
 from ai_pdf_ocr_spark.engine.checkpoint import run_extraction
 from ai_pdf_ocr_spark.engine.io import TableStore
-from ai_pdf_ocr_spark.engine.partitioning import partition_representatives
 from ai_pdf_ocr_spark.engine.pipeline import documents_df
 from ai_pdf_ocr_spark.engine.schemas import CHECKPOINT
 from ai_pdf_ocr_spark.engine.sources import read_documents
@@ -106,15 +105,15 @@ def test_run_extraction_job_count(spark, tmp_path, count_jobs):
     profile 2, broadcast 1, write 2, lineage aggregate 2, checkpoint
     append 1) and a no-op resume at most 2.  Fixed-schema reads, a local
     Arrow mapping frame, ``bin`` carried through the Arrow stage and
-    one lineage aggregate keep it there."""
+    one lineage aggregate keep it there.  The run is cold: no other
+    test uses 5 bins, so nothing about P=5 is cached in the session."""
     src = str(tmp_path / "in")
     documents_df(spark, make_documents(200, seed=9)).write.parquet(src)
-    partition_representatives(spark, 8)  # cached per session
     store = TableStore(spark, str(tmp_path / "out"))
 
     def run():
         return run_extraction(spark, read_documents(spark, src), store,
-                              "run-J", 8)
+                              "run-J", 5)
 
     fresh, jobs = count_jobs(run)
     assert fresh["docs_processed"] == 200

@@ -61,7 +61,7 @@ def test_zstd_sink_roundtrip(spark, tmp_path):
 
     from pyspark.sql import functions as F
     docs = documents_df(spark, make_documents(10, seed=3))
-    store = TableStore(spark, str(tmp_path / "store"))  # default zstd
+    store = TableStore(spark, str(tmp_path / "store"))  # writes io.CODEC
     extracted = extract_documents(docs).withColumn("bin", F.lit(0))
     store.write_extracted(extracted)
     back = store.read_extracted()

@@ -93,12 +93,12 @@ def test_epoch_replay_is_idempotent(spark, tmp_path, corpus):
 
     store = TableStore(spark, str(tmp_path / "store"))
     docs = documents_df(spark, corpus[:12])
-    assert _process_epoch(spark, store, "rp", "t1", 4, 4096, docs, 7) \
+    assert _process_epoch(spark, store, "rp", "t1", 4, docs, 7) \
         is True
     first = _spans_by_doc(read_stream_extracted(spark, store))
     n_ckpt = store.read_checkpoint().count()
     # replay (streaming engine re-invokes the same epoch after a crash)
-    assert _process_epoch(spark, store, "rp2", "t1", 4, 4096, docs, 7) \
+    assert _process_epoch(spark, store, "rp2", "t1", 4, docs, 7) \
         is True
     assert _spans_by_doc(read_stream_extracted(spark, store)) == first
     assert store.read_checkpoint().count() == n_ckpt  # no duplicate rows
@@ -106,7 +106,7 @@ def test_epoch_replay_is_idempotent(spark, tmp_path, corpus):
     # must NOT be skipped by the replay guard (ADVICE r2: the old
     # endswith('-e<n>') heuristic cross-matched streams)
     docs2 = documents_df(spark, corpus[12:20])
-    assert _process_epoch(spark, store, "rp", "t2", 4, 4096, docs2, 7) \
+    assert _process_epoch(spark, store, "rp", "t2", 4, docs2, 7) \
         is True
     assert store.read_checkpoint().count() > n_ckpt
 

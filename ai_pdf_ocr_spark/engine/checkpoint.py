@@ -79,7 +79,7 @@ def run_extraction(spark: SparkSession, documents: DataFrame,
     assignment = compute_assignment(documents, num_partitions)
     extracted = extract_binned(documents, assignment, num_partitions,
                                skip=frozenset(done))
-    store.write_extracted(extracted, mode="overwrite")
+    store.write_extracted(extracted)
     wall = time.monotonic() - t0
 
     # lineage + metrics per bin, derived from the committed output

@@ -41,16 +41,21 @@ class TableStore:
         return os.path.isdir(p) and any(
             not f.startswith(("_", ".")) for f in os.listdir(p))
 
-    def write_extracted(self, df: DataFrame, mode: str = "append") -> None:
-        # dynamic overwrite as a PER-WRITE option (never the session
-        # conf, which would silently change later mode('overwrite')
-        # writes in the same session — ADVICE r2 #3; asserted by
-        # tests/test_streaming.py): only the bin= partitions present in
-        # df are replaced, which is what makes resume/replay idempotent
-        (df.write.mode(mode).partitionBy("bin")
+    def overwrite_partitions(self, df: DataFrame, name: str,
+                             *cols: str) -> None:
+        """Replace exactly the ``cols`` partitions of table ``name``
+        present in ``df``, which is what makes resume/replay
+        idempotent.  Dynamic overwrite is a PER-WRITE option, never
+        the session conf, which would silently change later
+        mode('overwrite') writes in the same session (ADVICE r2 #3;
+        asserted by tests/test_streaming.py)."""
+        (df.write.mode("overwrite").partitionBy(*cols)
          .option("partitionOverwriteMode", "dynamic")
          .option("compression", CODEC)
-         .parquet(self.path("documents_extracted")))
+         .parquet(self.path(name)))
+
+    def write_extracted(self, df: DataFrame) -> None:
+        self.overwrite_partitions(df, "documents_extracted", "bin")
 
     def read_extracted(self) -> DataFrame:
         # fixed schemas on every read: no footer-inference job

@@ -58,6 +58,12 @@ CHECKPOINT = T.StructType([
     T.StructField("status", T.StringType()),
 ])
 
+# one stream's signature history: the stream's directory of the
+# signature table, with ``epoch`` its partition column
+SIGNATURES = T.StructType(
+    [T.StructField(c, T.StringType()) for c in ("doc_id", "kind", "key")]
+    + [T.StructField("epoch", T.IntegerType())])
+
 # weighted repartition's salt -> bin lookup
 MAPPING = T.StructType([T.StructField(c, T.IntegerType())
                         for c in ("salt", "bin")])

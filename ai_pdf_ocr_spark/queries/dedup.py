@@ -191,6 +191,7 @@ def dedup_ngram_jaccard(spark, sf_dir):
 N_HASHES = 16
 N_BANDS = 4  # 4 rows per band
 BAND_CAP = 64  # degenerate band-bucket guard: > CAP members -> dropped
+SPLIT_LEVELS = 3  # sub-banding rounds before the residual is emitted
 # 31-bit Mersenne prime keeps a*h+b well inside int64 under ANSI mode
 _MERSENNE = (1 << 31) - 1
 
@@ -225,36 +226,42 @@ def _band_key_exprs(n_hashes, n_bands):
     ]
 
 
-def _minhash_banded(items_df, item_col, n_hashes, n_bands, band_cap):
-    """(doc_id, item) rows -> (doc_id, band, band_key) membership with
-    oversized band buckets dropped.
-
-    Band keys via ONE explode over the signature row (a union of
-    per-band selects re-executed the item aggregation once per band:
-    10 exchanges vs 5 measured in round 1).  The band-size cap bounds
-    the downstream pair join: a degenerate key (e.g. an all-identical
-    corpus) would otherwise go quadratic — capped buckets are dropped,
-    mirrored bit-for-bit by the pure-Python oracle
-    (tests/oracle_sketches.py)."""
-    from pyspark.sql import Window
-
-    sig = _minhash_sig(items_df, item_col, n_hashes)
+def _band_rows(sig, n_hashes, n_bands, cols=("doc_id",)):
+    """Signature rows (``cols`` + mh*) -> (cols..., band, band_key)
+    rows, uncapped: the one place band membership is built.  ONE
+    explode over the signature row (a union of per-band selects
+    re-executed the item aggregation once per band: 10 exchanges vs 5
+    measured in round 1)."""
     band_structs = F.array(*[
         F.struct(F.lit(bi).alias("band"), k.alias("band_key"))
         for bi, k in enumerate(_band_key_exprs(n_hashes, n_bands))
     ])
-    banded = (sig.select("doc_id", F.explode(band_structs).alias("bk"))
-              .select("doc_id", F.col("bk.band").alias("band"),
-                      F.col("bk.band_key").alias("band_key")))
+    return (sig.select(*cols, F.explode(band_structs).alias("bk"))
+            .select(*cols, F.col("bk.band").alias("band"),
+                    F.col("bk.band_key").alias("band_key")))
+
+
+def _minhash_banded(items_df, item_col, n_hashes, n_bands):
+    """(doc_id, item) rows -> (doc_id, band, band_key) membership with
+    band buckets of more than BAND_CAP members dropped.
+
+    The band-size cap bounds the downstream pair join: a degenerate
+    key (e.g. an all-identical corpus) would otherwise go quadratic —
+    capped buckets are dropped, mirrored bit-for-bit by the pure-Python
+    oracle (tests/oracle_sketches.py)."""
+    from pyspark.sql import Window
+
+    banded = _band_rows(_minhash_sig(items_df, item_col, n_hashes),
+                        n_hashes, n_bands)
     w = Window.partitionBy("band", "band_key")
     return (banded.withColumn("bsz", F.count("*").over(w))
-            .where(F.col("bsz") <= band_cap).drop("bsz"))
+            .where(F.col("bsz") <= BAND_CAP).drop("bsz"))
 
 
 def _minhash_banded_split(items_df, item_col, n_hashes, n_bands,
-                          band_cap, max_levels=3, block_col=None):
-    """(doc_id, item) rows -> (doc_id, band, band_key) membership with
-    over-cap band buckets RECURSIVELY SUB-BANDED instead of dropped
+                          band_cap):
+    """(doc_id, lang, item) rows -> (doc_id, band, band_key) membership
+    with over-cap band buckets RECURSIVELY SUB-BANDED instead of dropped
     (VERDICT r3 ask #6 — remediation (a) of the verified-Jaccard
     docstring, now implemented).
 
@@ -262,7 +269,7 @@ def _minhash_banded_split(items_df, item_col, n_hashes, n_bands,
     A bucket with more than ``band_cap`` members is split by appending
     the key of band (b + level) % n_bands — members must now ALSO agree
     on a second (third, ...) band to stay co-bucketed.  Still-over-cap
-    buckets keep descending for ``max_levels`` rounds; the residual is
+    buckets keep descending for SPLIT_LEVELS rounds; the residual is
     emitted regardless: after 3 splits its members agree on 4 of the
     bands (8 of 32 signature rows) — near-identical docs whose pairs
     are overwhelmingly true output, so the quadratic there is
@@ -275,14 +282,13 @@ def _minhash_banded_split(items_df, item_col, n_hashes, n_bands,
     probe bands — the docs-are-near-identical case that the exact-dup
     pass catches anyway.
 
-    ``block_col``: optional blocking column carried per doc (e.g.
-    lang) prefixed into every bucket key, so cross-block docs NEVER
-    co-bucket.  Measured at sf0.1 (r4): without it, cross-lang
-    boilerplate floods the band buckets — 6.53M candidates at 0.614
-    recall; with lang blocking, 2.58M candidates at **0.914** recall
-    (less work AND better recall, because fewer buckets overflow into
-    recall-losing splits).  This mirrors the exact operator's lang
-    blocking.
+    Lang blocking: each doc's ``lang`` is prefixed into every bucket
+    key, so cross-lang docs NEVER co-bucket.  Measured at sf0.1 (r4):
+    without it, cross-lang boilerplate floods the band buckets — 6.53M
+    candidates at 0.614 recall; with lang blocking, 2.58M candidates at
+    **0.914** recall (less work AND better recall, because fewer
+    buckets overflow into recall-losing splits).  This mirrors the
+    exact operator's lang blocking.
 
     Scale shape: level 1's per-(band, key) count is the same one
     Exchange the drop-cap window already paid; levels 2+ shuffle ONLY
@@ -291,19 +297,19 @@ def _minhash_banded_split(items_df, item_col, n_hashes, n_bands,
     broadcast of an unbounded hot-key list."""
     from pyspark.sql import Window
 
-    gcols = ["doc_id"] + ([block_col] if block_col else [])
+    gcols = ["doc_id", "lang"]
     sig = _minhash_sig(items_df, item_col, n_hashes, group_cols=gcols)
     bkeys = F.array(*_band_key_exprs(n_hashes, n_bands))
-    key0 = F.element_at("bkeys", F.col("band") + 1).cast("string")
-    if block_col:
-        key0 = F.concat_ws("|", F.col(block_col), key0)
+    key0 = F.concat_ws(
+        "|", "lang",
+        F.element_at("bkeys", F.col("band") + 1).cast("string"))
     keyed = (sig.select(*gcols, bkeys.alias("bkeys"))
              .select(*gcols, "bkeys",
                      F.explode(F.sequence(F.lit(0), F.lit(n_bands - 1)))
                      .alias("band"))
              .withColumn("band_key", key0))
     layers = []
-    for lvl in range(1, max_levels + 1):
+    for lvl in range(1, SPLIT_LEVELS + 1):
         w = Window.partitionBy("band", "band_key")
         sized = keyed.withColumn("bsz", F.count("*").over(w))
         layers.append(sized.where(F.col("bsz") <= band_cap)
@@ -403,7 +409,7 @@ def dedup_minhash_lsh(spark, sf_dir):
     sh = (tokd.select("doc_id", F.explode(F.array_distinct(shingles))
                       .alias("shingle"))
           .where(F.length("shingle") > 0))
-    banded = _minhash_banded(sh, "shingle", N_HASHES, N_BANDS, BAND_CAP)
+    banded = _minhash_banded(sh, "shingle", N_HASHES, N_BANDS)
     return _band_pairs(banded)
 
 
@@ -456,7 +462,7 @@ def dedup_jaccard_verified(spark, sf_dir):
                    F.explode(F.array_distinct(_tokens(F.col("text"))))
                    .alias("tok"))
     banded = _minhash_banded_split(tok, "tok", V_HASHES, V_BANDS,
-                                   V_BAND_CAP, block_col="lang")
+                                   V_BAND_CAP)
     cands = _band_pairs(banded)
     sets = token_sets(d)
     sets = sets.localCheckpoint(eager=False)  # joined on both sides
@@ -504,7 +510,7 @@ SIMHASH_MAX_HAMMING = 3
 SIMHASH_BUCKET_CAP = 64  # over-cap band buckets split, never dropped
 
 
-def simhash_pairs_from_sigs(sigs, cap=SIMHASH_BUCKET_CAP, sig_bits=64):
+def simhash_pairs_from_sigs(sigs, sig_bits=64):
     """hamming <= 3 pairs from (doc_id, simhash) rows — banded candidate
     generation with an EXACT hot-bucket split (VERDICT r2 ask #4).
 
@@ -554,7 +560,7 @@ def simhash_pairs_from_sigs(sigs, cap=SIMHASH_BUCKET_CAP, sig_bits=64):
     sizes = banded.groupBy("band", "bval").agg(F.count("*").alias("bsz"))
     banded = (banded.join(F.broadcast(sizes), ["band", "bval"])
               .localCheckpoint(eager=False))  # self-joined below
-    cold = banded.where(F.col("bsz") <= cap).select(
+    cold = banded.where(F.col("bsz") <= SIMHASH_BUCKET_CAP).select(
         "doc_id", "simhash", "band", "bval",
         F.lit(-1).alias("sub"), F.lit(0).cast("long").alias("sval"))
     subs = F.array(*[
@@ -563,7 +569,7 @@ def simhash_pairs_from_sigs(sigs, cap=SIMHASH_BUCKET_CAP, sig_bits=64):
                  .bitwiseAND(F.lit((1 << sub_w) - 1)).alias("sval"))
         for sb in range(4)
     ])
-    hot = (banded.where(F.col("bsz") > cap)
+    hot = (banded.where(F.col("bsz") > SIMHASH_BUCKET_CAP)
            .select("doc_id", "simhash", "band", "bval",
                    F.explode(subs).alias("sk"))
            .select("doc_id", "simhash", "band", "bval",
@@ -800,14 +806,7 @@ def dedup_cross_epoch(spark, sf_dir):
                    .alias("tok"))
     sig = _minhash_sig(tok, "tok", N_HASHES,
                        group_cols=("doc_id", "epoch"))
-    band_structs = F.array(*[
-        F.struct(F.lit(bi).alias("band"), k.alias("band_key"))
-        for bi, k in enumerate(_band_key_exprs(N_HASHES, N_BANDS))
-    ])
-    banded = (sig.select("doc_id", "epoch",
-                         F.explode(band_structs).alias("bk"))
-              .select("doc_id", "epoch", F.col("bk.band").alias("band"),
-                      F.col("bk.band_key").alias("band_key"))
+    banded = (_band_rows(sig, N_HASHES, N_BANDS, cols=("doc_id", "epoch"))
               .localCheckpoint(eager=False))
     bmin = (banded.groupBy("band", "band_key")
             .agg(F.min("epoch").alias("e0")))

@@ -44,6 +44,14 @@ EXTRACTED = T.StructType([
 EXTRACTED_BINNED = T.StructType(
     EXTRACTED.fields + [T.StructField("bin", T.IntegerType())])
 
+# the streaming table: EXTRACTED, the dup flags, then the partition
+# columns (a stream id is md5 hex and may be all digits: a string)
+STREAM_EXTRACTED = T.StructType(
+    EXTRACTED.fields
+    + [T.StructField(c, T.BooleanType()) for c in ("dup_exact", "dup_near")]
+    + [T.StructField("stream", T.StringType())]
+    + [T.StructField(c, T.IntegerType()) for c in ("epoch", "bin")])
+
 CHECKPOINT = T.StructType([
     T.StructField("run_id", T.StringType(), False),
     T.StructField("bin", T.IntegerType(), False),

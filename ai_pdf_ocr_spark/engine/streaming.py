@@ -9,33 +9,33 @@ checkpoint (processed files are never re-read after a restart), and
 each micro-batch runs the same fused Arrow extraction with the same
 skew-aware weighted repartition as the batch path.
 
-Idempotent epoch replay: an epoch writes its signatures, its
-extracted output, then per-(epoch, bin) lineage + span-count rows in
-the shared checkpoint table under run_id
-"<run_id>-<stream_id>-e<epoch>", so a replay that finds rows with that
-exact marker (never another stream's, ADVICE r2) returns before any
-work.  An epoch without them (a crash before the lineage append) is
-recomputed; ``TableStore.overwrite_partitions`` (per-write dynamic
-overwrite, zstd) replaces exactly the (stream, epoch[, bin])
-partitions the failed attempt half-wrote.  Reads have fixed schemas
-and touch only this stream: its signature history and, for lineage,
-the epoch's own directory.
+An epoch is written like a run: each of its two tables gets its own
+``stream=<id>/epoch=<n>`` directory, written by the batch writer
+(``TableStore.overwrite_partitions``: dynamic overwrite, zstd) —
+first the signatures, then the extracted docs partitioned by ``bin``,
+then per-(epoch, bin) lineage + span-count rows in the shared
+checkpoint table under run_id "<run_id>-<stream_id>-e<epoch>".  A
+replay that finds rows with that exact marker (never another
+stream's, ADVICE r2) returns before any work; one without them (a
+crash before the lineage append) recomputes and replaces exactly what
+the failed attempt half-wrote.  An empty epoch stops at its weight
+profile.  Reads have fixed schemas and touch only this stream.
 
-Cross-epoch dedup (VERDICT r2 ask #5): every epoch appends its docs'
-signatures — the exact content digest plus MinHash LSH band keys — to
-a checkpointed signature table partitioned by (stream, epoch).  New
-arrivals are joined against STRICTLY EARLIER epochs' signatures and
-flagged ``dup_exact`` (identical span content already in the corpus)
-/ ``dup_near`` (shares an LSH band with history — a near-dup
+Cross-epoch dedup (VERDICT r2 ask #5): the signature table holds every
+epoch's doc signatures — the exact content digest plus MinHash LSH
+band keys — and is the stream's synopsis.  An epoch's flags are read
+back from it: its own committed partition joined against STRICTLY
+EARLIER epochs, ``dup_exact`` (identical span content already in the
+corpus) / ``dup_near`` (shares an LSH band with history — a near-dup
 CANDIDATE; the batch verify operator, queries/dedup.py::
 dedup_jaccard_verified, is the exact confirmation stage).  The
 strictly-earlier filter makes the flags deterministic under epoch
 replay: a half-written crashed attempt's own rows are never counted.
 This generalizes the reference's single-run resume short-circuit
-(/root/reference/main.py:371-398) across runs — the operator a
+(its main.py:371-398) across runs — the operator a
 continuously-fed corpus actually needs.
 
-Scale shape: each epoch's key set is broadcast against the (large)
+Scale shape: the epoch's key set is broadcast against the (large)
 signature history, so history never shuffles for the probe; when a
 single epoch is itself huge, swap the broadcast for a (kind, key)
 shuffle join.
@@ -52,7 +52,6 @@ import time
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from . import schemas
 from .checkpoint import commit_lineage
@@ -62,8 +61,6 @@ from .pipeline import extract_binned
 
 STREAM_TABLE = "documents_extracted_stream"
 SIG_TABLE = "stream_signatures"
-_FLAGS = T.StructType([T.StructField("doc_id", T.StringType())] + [
-    T.StructField(c, T.BooleanType()) for c in ("dup_exact", "dup_near")])
 
 
 def _doc_keys(batch_df: DataFrame) -> DataFrame:
@@ -94,17 +91,16 @@ def _doc_keys(batch_df: DataFrame) -> DataFrame:
 
 
 def _dup_flags(spark: SparkSession, store: TableStore, stream_id: str,
-               epoch_id: int, new_keys: DataFrame) -> DataFrame:
-    """(doc_id, dup_exact, dup_near) for docs whose signatures appear
-    in STRICTLY EARLIER epochs of this stream's history."""
-    history_dir = f"{SIG_TABLE}/stream={stream_id}"
-    if not store.exists(history_dir):
-        return schemas.local_frame(spark, [], _FLAGS)
-    history = (spark.read.schema(schemas.SIGNATURES)
-               .parquet(store.path(history_dir))
-               .where(F.col("epoch") < int(epoch_id)))
-    hits = (history.join(F.broadcast(new_keys.alias("n")),
-                         ["kind", "key"])
+               epoch_id: int) -> DataFrame:
+    """(doc_id, dup_exact, dup_near) for the docs of epoch ``epoch_id``
+    whose committed signatures appear in STRICTLY EARLIER epochs of
+    this stream's history: one read of the stream's signature
+    directory, the epoch's own partition broadcast against the rest."""
+    sigs = (spark.read.schema(schemas.SIGNATURES)
+            .parquet(store.path(f"{SIG_TABLE}/stream={stream_id}")))
+    new_keys = sigs.where(F.col("epoch") == int(epoch_id)).alias("n")
+    hits = (sigs.where(F.col("epoch") < int(epoch_id))
+            .join(F.broadcast(new_keys), ["kind", "key"])
             .select(F.col("n.doc_id").alias("doc_id"), "kind"))
     return (hits.groupBy("doc_id")
             .agg(F.max(F.col("kind") == "md5").alias("dup_exact"),
@@ -115,8 +111,6 @@ def _process_epoch(spark: SparkSession, store: TableStore, run_id: str,
                    stream_id: str, num_partitions: int,
                    batch_df: DataFrame, epoch_id: int) -> bool:
     t0 = time.monotonic()
-    if not batch_df.take(1):
-        return False
     # signatures, data, then lineage are written in that order, so
     # lineage rows carrying this stream's exact '-<stream_id>-e<epoch>'
     # marker mean the epoch committed: a replay (same stream-checkpoint
@@ -127,29 +121,23 @@ def _process_epoch(spark: SparkSession, store: TableStore, run_id: str,
             .select("bin").collect()):
         return True
     assignment = compute_assignment(batch_df, num_partitions)
-    extracted = extract_binned(batch_df, assignment, num_partitions)
-
-    # cross-epoch dedup: flag docs already seen in earlier epochs,
-    # then write this epoch's signatures (dynamic overwrite of exactly
-    # this (stream, epoch) partition)
-    new_keys = _doc_keys(batch_df).localCheckpoint(eager=False)
-    flags = _dup_flags(spark, store, stream_id, epoch_id, new_keys)
-    extracted = (extracted.join(F.broadcast(flags), "doc_id", "left")
+    if not assignment:  # an empty epoch has no weight profile
+        return False
+    part = f"stream={stream_id}/epoch={int(epoch_id)}"
+    store.overwrite_partitions(_doc_keys(batch_df), f"{SIG_TABLE}/{part}")
+    flags = _dup_flags(spark, store, stream_id, epoch_id)
+    extracted = (extract_binned(batch_df, assignment, num_partitions)
+                 .join(F.broadcast(flags), "doc_id", "left")
                  .withColumn("dup_exact",
                              F.coalesce("dup_exact", F.lit(False)))
                  .withColumn("dup_near",
                              F.coalesce("dup_near", F.lit(False))))
-    tag = [F.lit(stream_id).alias("stream"),
-           F.lit(int(epoch_id)).alias("epoch")]
-    store.overwrite_partitions(new_keys.select("*", *tag), SIG_TABLE,
-                               "stream", "epoch")
-    store.overwrite_partitions(extracted.select("*", *tag), STREAM_TABLE,
-                               "stream", "epoch", "bin")
+    epoch_dir = f"{STREAM_TABLE}/{part}"
+    store.overwrite_partitions(extracted, epoch_dir, "bin")
     wall = time.monotonic() - t0
     # lineage from the COMMITTED files of this epoch only (same
     # discipline as batch); an uncommitted replay rewrote exactly its
     # partitions above
-    epoch_dir = f"{STREAM_TABLE}/stream={stream_id}/epoch={int(epoch_id)}"
     committed = (spark.read.schema(schemas.EXTRACTED_BINNED)
                  .parquet(store.path(epoch_dir)))
     commit_lineage(store, committed, f"{run_id}{marker}", wall)
@@ -186,7 +174,9 @@ def stream_extract(spark: SparkSession, input_path: str, store: TableStore,
 
 
 def read_stream_extracted(spark: SparkSession, store: TableStore) -> DataFrame:
-    return spark.read.parquet(store.path(STREAM_TABLE))
+    # fixed schema: an all-digit stream id stays the string it is
+    return (spark.read.schema(schemas.STREAM_EXTRACTED)
+            .parquet(store.path(STREAM_TABLE)))
 
 
 _EVENTS = ("event_id long, ts timestamp, user_id long, "

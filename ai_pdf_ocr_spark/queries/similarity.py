@@ -618,7 +618,7 @@ def pq_rerank_lookup(emb_df, cand_ids, q_emb, k=10):
     k=PQ_RERANK_R).collect()`` (R = 50 rows on the driver — within
     the repo's bounded-collect rule).  Combined cost: one 8-byte-code
     ADC scan + R point fetches — exact top-k order at quantized-scan
-    cost (demonstrated at 0.5-8M vectors in BASELINE.md round-5)."""
+    cost (pq_scale_bench.py, 0.5-32M vectors: BASELINE.md history)."""
     emb = F.transform("embedding", lambda x: x.cast("double"))
     q_row = schemas.local_frame(emb_df.sparkSession, [{"qe": q_emb}],
                                 T.StructType.fromDDL("qe array<double>"))

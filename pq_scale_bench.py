@@ -27,8 +27,8 @@ scan cost to dominate (default 500k 64-dim vectors, ~PQ_BENCH_N env):
                     EXACT top-10 order at quantized-scan cost (the
                     record asserts equality with the float path).
     All end in TakeOrderedAndProject; best-of-3 after a warm pass,
-    bracketed by the raw-CPU calibration (this box has 2x tenancy
-    swings — BASELINE.md).
+    bracketed by the raw-CPU calibration (a shared host swings 2x
+    under load — BASELINE.md history).
 
 Prints ONE JSON line: corpus size, bytes scanned per path (parquet
 footprint of the columns read), wall times, speedup, and the ADC

@@ -198,8 +198,8 @@ def jaccard_verified_pairs(docs: list[tuple], n_hashes: int = 32,
                            sub_band_levels: int = 3) -> list[tuple]:
     """LANG-BLOCKED token-set MinHash-LSH candidates (over-cap buckets
     recursively sub-banded) -> exact Jaccard verify.  Twin of
-    _minhash_banded_split(block_col='lang'): prefixing every bucket key
-    with the block value is equivalent to bucketing each lang's docs
+    _minhash_banded_split, which prefixes every bucket key with the
+    doc's lang: that is equivalent to bucketing each lang's docs
     independently (signatures are per-doc), which is how this twin
     computes it.  docs: [(doc_id, lang, text)] -> [(d1, d2, jaccard)].
     """

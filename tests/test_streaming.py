@@ -138,10 +138,11 @@ def test_uncommitted_epoch_replay_rewrites(spark, tmp_path, corpus):
 
 def test_epoch_job_count(spark, tmp_path, corpus, count_jobs):
     """The fixed cost of a streaming epoch, in Spark jobs: with history
-    behind it an epoch runs <= 15 (fixed-schema reads of only this
-    stream's history and this epoch's files), and a replay of a
-    committed epoch stops at the lineage lookup (<= 2 jobs, no new
-    checkpoint rows).  Both stream tables are written zstd."""
+    behind it an epoch runs <= 14 (one write per table into the
+    epoch's own directory, flags read back from the committed
+    signatures), and a replay of a committed epoch stops at the lineage
+    lookup (<= 1 job, no new checkpoint rows).  Both stream tables are
+    written zstd."""
     import pyarrow.parquet as pq
 
     from ai_pdf_ocr_spark.engine.streaming import (SIG_TABLE, STREAM_TABLE,
@@ -153,11 +154,11 @@ def test_epoch_job_count(spark, tmp_path, corpus, count_jobs):
     assert _process_epoch(spark, store, "jc", "t1", 4, epoch0, 0) is True
     ok, jobs = count_jobs(
         lambda: _process_epoch(spark, store, "jc", "t1", 4, epoch1, 1))
-    assert ok is True and jobs <= 15, jobs
+    assert ok is True and jobs <= 14, jobs
     n_ckpt = store.read_checkpoint().count()
     ok, jobs = count_jobs(
         lambda: _process_epoch(spark, store, "jc2", "t1", 4, epoch1, 1))
-    assert ok is True and jobs <= 2, jobs
+    assert ok is True and jobs <= 1, jobs
     assert store.read_checkpoint().count() == n_ckpt
 
     files = [f for t in (STREAM_TABLE, SIG_TABLE)
@@ -168,6 +169,35 @@ def test_epoch_job_count(spark, tmp_path, corpus, count_jobs):
         assert {meta.row_group(i).column(c).compression
                 for i in range(meta.num_row_groups)
                 for c in range(meta.num_columns)} == {"ZSTD"}, f
+
+
+def test_empty_epoch_writes_nothing(spark, tmp_path, count_jobs):
+    """An empty micro-batch stops at its weight profile (<= 2 jobs):
+    no stream or signature directory and no checkpoint row."""
+    from ai_pdf_ocr_spark.engine.streaming import _process_epoch
+
+    store = TableStore(spark, str(tmp_path / "store"))
+    ok, jobs = count_jobs(lambda: _process_epoch(
+        spark, store, "em", "t1", 4, documents_df(spark, []), 0))
+    assert ok is False and jobs <= 2, jobs
+    assert not list((tmp_path / "store").glob("*"))
+
+
+def test_numeric_looking_stream_ids_stay_strings(spark, tmp_path, corpus):
+    """A stream id is md5 hex, so it may be all digits ('01234567') or
+    read as a float ('12e45678'); the stream table gives both back as
+    the strings they were written under."""
+    from ai_pdf_ocr_spark.engine.streaming import _process_epoch
+
+    store = TableStore(spark, str(tmp_path / "store"))
+    ids = {"01234567": corpus[:3], "12e45678": corpus[3:6]}
+    for sid, docs in ids.items():
+        assert _process_epoch(spark, store, "ns", sid, 2,
+                              documents_df(spark, docs), 0) is True
+    got = {(r.stream, r.doc_id) for r in read_stream_extracted(spark, store)
+           .select("stream", "doc_id").collect()}
+    assert got == {(sid, d["doc_id"]) for sid, docs in ids.items()
+                   for d in docs}
 
 
 def test_cross_epoch_dedup_flags(spark, tmp_path, corpus):

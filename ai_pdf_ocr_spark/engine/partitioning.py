@@ -62,20 +62,14 @@ def compute_assignment(df: DataFrame, num_partitions: int) -> dict[int, int]:
 
 
 def weighted_repartition(df: DataFrame, num_partitions: int,
-                         assignment: dict[int, int] | None = None
-                         ) -> DataFrame:
-    """Repartition documents into P span-count-balanced partitions,
-    adding a deterministic ``bin`` column (0..P-1).
+                         assignment: dict[int, int]) -> DataFrame:
+    """Repartition documents into P span-count-balanced partitions by
+    ``assignment`` (``compute_assignment``'s salt -> bin map), adding a
+    deterministic ``bin`` column (0..P-1).
 
     Partition i receives exactly the docs with bin == i (verified by
     tests/test_pipeline.py).  Rows are sorted by doc_id within each
-    partition for deterministic downstream output.
-
-    ``assignment`` lets callers precompute the weight profile once per
-    corpus (it is table-stats metadata — at 100 TB you compute it at
-    ingest/registration time, not per query)."""
-    if assignment is None:
-        assignment = compute_assignment(df, num_partitions)
+    partition for deterministic downstream output."""
     # broadcast-joined local frame: a literal ``create_map``/``array``
     # lookup measured slower per row (CLAUDE.md)
     mapping = local_frame(df.sparkSession, [

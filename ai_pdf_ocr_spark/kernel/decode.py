@@ -5,62 +5,91 @@ parse (``/root/reference/ocr_processor.py:61-105`` pixmap decode,
 ``:335-398`` quad->bbox + lenient defaults): one Arrow C++ regex pass
 over a *flat* frame of spans (``pc.extract_regex`` + Arrow
 string->float64 casts, verified bit-identical to CPython ``float()``
-on 200k random doubles), with a pandas/Python fallback for the rare
-payloads the strict ASCII grammar doesn't cover (whitespace-padded or
-unicode-digit numbers, ``inf``/``nan``/underscore spellings) so the
-kernel still bit-matches the oracle on every input.
+on 200k random doubles).  The rare payloads the strict ASCII grammar
+rejects (malformed heads; whitespace-padded, unicode-digit or
+underscore numbers; ``inf``/``nan``) are parsed one row at a time by
+``_parse_payload``, a transcription of ``tests/oracle.py::parse_span``,
+so the kernel matches the spec on every input.  A page outside int64
+switches the page column to Python ints (object dtype): sorting and
+grouping by page stay exact.
 
-Input frame columns:  kind, text, media_ref, offset (+ any passthrough)
-Output: the valid subset with page:int64, x0..y1/conf:float64,
-direction, out_kind ('text'|'media'), content, out_media_ref columns.
+Input columns:  kind, text, media_ref, offset
+Output: the valid subset with page:int64 (object past int64),
+x0..y1/conf:float64, direction, out_kind ('text'|'media'), content,
+out_media_ref, offset columns.
 """
 
 from __future__ import annotations
 
+from collections.abc import Mapping
+
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 
-_INT_RE = r"\s*[+-]?\d+\s*"
-
 # strict ASCII float (no whitespace/underscores/inf/nan: those rows take
-# the exact-CPython fallback path)
+# the per-row CPython path)
 _F = r"[+-]?(?:[0-9]+(?:\.[0-9]*)?|\.[0-9]+)(?:[eE][+-]?[0-9]+)?"
 # full payload grammar (FIXTURES.md §1.1):
 #   <page>;<x0>,<y0>,<x1>,<y1>[;<conf>[;<direction>]]|<content>
 # every group before the pipe excludes '|', so the match anchors on the
 # FIRST pipe exactly like str.partition("|") in the oracle.
 _PAYLOAD_RE = (
-    # page: no '+' sign (Arrow's int64 cast rejects it -> fallback path)
+    # page: no '+' sign (Arrow's int64 cast rejects it -> per-row path)
     r"(?s)^(?P<page>-?[0-9]{1,15});"
     rf"(?P<x0>{_F}),(?P<y0>{_F}),(?P<x1>{_F}),(?P<y1>{_F})"
     # dir nests INSIDE conf: a 3rd segment is always conf, never dir
     rf"(?:;(?P<conf>{_F}|)(?:;(?P<dir>[^;|]*))?)?\|(?P<content>.*)$"
 )
 
+# the fields _parse_payload returns, in order
+_PARSED = ("page", "x0", "y0", "x1", "y1", "conf", "direction", "content")
+_INT64 = range(-2 ** 63, 2 ** 63)
 
-def decode_flat(flat: pd.DataFrame) -> tuple[dict[str, np.ndarray],
-                                             np.ndarray]:
+
+def _parse_payload(kind: str, text: str) -> tuple | None:
+    """One payload under CPython ``int()``/``float()`` semantics, as
+    ``tests/oracle.py::parse_span`` reads it; None = malformed.
+
+    Lenient defaults mirror /root/reference/ocr_processor.py:371-372
+    (conf -> 1.0) and /root/reference/data_structures.py:102-103
+    (direction -> 'horizontal')."""
+    head, sep, content = text.partition("|")
+    parts = head.split(";")
+    if not sep or not 2 <= len(parts) <= 4 \
+            or kind not in ("raw_text", "raw_media"):
+        return None
+    try:
+        page = int(parts[0])
+        coords = [float(c) for c in parts[1].split(",")]
+        conf = float(parts[2]) if len(parts) >= 3 and parts[2] else 1.0
+    except ValueError:
+        return None
+    if len(coords) != 4:
+        return None
+    direction = parts[3] if len(parts) == 4 and parts[3] else "horizontal"
+    return (page, *coords, conf, direction, content)
+
+
+def decode_flat(flat: Mapping) -> tuple[dict[str, np.ndarray], np.ndarray]:
     """Decode payloads; returns (dict of valid-row arrays, valid_mask).
 
-    Fast path: one RE2 ``extract_regex`` over the whole batch plus
-    Arrow casts — no per-row Python at all.  Rows the strict grammar
-    rejects but that might still parse under CPython number semantics
-    are re-decoded by ``_decode_flat_pandas`` (identical legacy
-    behavior); fixture corpora hit the fast path >99.9%.  The output is
-    a plain column dict (not a DataFrame): block consolidation in the
-    DataFrame constructor measured ~15% of the whole kernel.
+    One RE2 ``extract_regex`` over the whole batch plus Arrow casts —
+    no per-row Python for payloads the strict grammar accepts (all but
+    ~0.7 % of the generator's spans, all of them malformed).  The rest
+    go through ``_parse_payload`` and are spliced in place; a malformed
+    row is dropped, never raised (the per-unit error isolation rule,
+    /root/reference/main.py:263-275).  The output is a plain column
+    dict (not a DataFrame): block consolidation in the DataFrame
+    constructor measured ~15% of the whole kernel.
     """
     kind_arr = np.asarray(flat["kind"], dtype=object)
     text_arr = np.asarray(flat["text"], dtype=object)
     mref_arr = np.asarray(flat["media_ref"], dtype=object)
     off_arr = np.asarray(flat["offset"])
-    n = len(text_arr)
-    if n == 0:
+    if len(text_arr) == 0:
         return {c: np.array([], dtype=object) for c in
-                ("page", "x0", "y0", "x1", "y1", "conf", "direction",
-                 "out_kind", "content", "out_media_ref", "offset")}, \
+                (*_PARSED, "out_kind", "out_media_ref", "offset")}, \
             np.zeros(0, bool)
 
     text_pa = pa.array(text_arr, type=pa.string(), from_pandas=True)
@@ -69,7 +98,7 @@ def decode_flat(flat: pd.DataFrame) -> tuple[dict[str, np.ndarray],
     fast = ext.is_valid().to_numpy(zero_copy_only=False)
 
     kind_media = kind_arr == "raw_media"
-    kind_ok = (kind_arr == "raw_text") | kind_media
+    valid = fast & ((kind_arr == "raw_text") | kind_media)
 
     def _num(name: str, typ) -> np.ndarray:
         col = pc.struct_field(ext, name)
@@ -81,144 +110,35 @@ def decode_flat(flat: pd.DataFrame) -> tuple[dict[str, np.ndarray],
                                             else float("nan"))
         return out.fill_null(fill).to_numpy(zero_copy_only=False)
 
-    page = _num("page", pa.int64())
-    x0 = _num("x0", pa.float64())
-    y0 = _num("y0", pa.float64())
-    x1 = _num("x1", pa.float64())
-    y1 = _num("y1", pa.float64())
-    conf = _num("conf", pa.float64())
-
+    cols = {"page": _num("page", pa.int64())}
+    for c in ("x0", "y0", "x1", "y1", "conf"):
+        cols[c] = _num(c, pa.float64())
     dirs = pc.struct_field(ext, "dir")
     dirs = pc.if_else(pc.equal(dirs, ""), pa.scalar("horizontal"), dirs)
-    direction = dirs.fill_null("horizontal").to_numpy(zero_copy_only=False)
-    content = pc.struct_field(ext, "content").fill_null("") \
+    cols["direction"] = dirs.fill_null("horizontal") \
+        .to_numpy(zero_copy_only=False)
+    cols["content"] = pc.struct_field(ext, "content").fill_null("") \
         .to_numpy(zero_copy_only=False)
 
-    valid = fast & kind_ok
+    # the strict grammar's residue, one CPython parse per row
+    fb, parsed = [], []
+    for i in np.nonzero(notna & ~fast)[0].tolist():
+        row = _parse_payload(kind_arr[i], text_arr[i])
+        if row is not None:
+            fb.append(i)
+            parsed.append(row)
+    if fb:
+        wide = any(row[0] not in _INT64 for row in parsed)
+        for c, vals in zip(_PARSED, zip(*parsed)):
+            # astype copies: arrow's to_numpy may be a read-only view
+            cols[c] = cols[c].astype(
+                object if wide and c == "page" else cols[c].dtype)
+            cols[c][fb] = vals
+        valid[fb] = True
 
-    # legacy fallback for non-matching payloads that may still parse
-    # under CPython semantics (whitespace, unicode digits, inf/nan, _)
-    fb = np.nonzero(notna & ~fast)[0]
-    if len(fb):
-        # arrow to_numpy can be zero-copy read-only; splicing needs rw
-        page, x0, y0, x1, y1, conf = (a.copy() for a in
-                                      (page, x0, y0, x1, y1, conf))
-        sub = pd.DataFrame({"kind": kind_arr[fb], "text": text_arr[fb],
-                            "media_ref": mref_arr[fb],
-                            "offset": off_arr[fb]})
-        dec_sub, valid_sub = _decode_flat_pandas(sub)
-        sub_idx = fb[valid_sub]
-        if len(sub_idx):
-            valid[sub_idx] = True
-            page[sub_idx] = dec_sub["page"].to_numpy()
-            x0[sub_idx] = dec_sub["x0"].to_numpy()
-            y0[sub_idx] = dec_sub["y0"].to_numpy()
-            x1[sub_idx] = dec_sub["x1"].to_numpy()
-            y1[sub_idx] = dec_sub["y1"].to_numpy()
-            conf[sub_idx] = dec_sub["conf"].to_numpy()
-            direction[sub_idx] = dec_sub["direction"].to_numpy(dtype=object)
-            content[sub_idx] = dec_sub["content"].to_numpy(dtype=object)
-
-    out_kind = np.where(kind_media, "media", "text")
-    out_ref = np.where(kind_media, mref_arr, None)
-
-    cols = {"page": page, "x0": x0, "y0": y0, "x1": x1, "y1": y1,
-            "conf": conf, "direction": direction, "out_kind": out_kind,
-            "content": content, "out_media_ref": out_ref,
-            "offset": off_arr}
+    cols["out_kind"] = np.where(kind_media, "media", "text")
+    cols["out_media_ref"] = np.where(kind_media, mref_arr, None)
+    cols["offset"] = off_arr
     if valid.all():
         return cols, valid
     return {c: a[valid] for c, a in cols.items()}, valid
-
-
-def _decode_flat_pandas(flat: pd.DataFrame) -> tuple[pd.DataFrame, np.ndarray]:
-    """Legacy multi-pass pandas decode — the exact-CPython semantics
-    authority; now only runs on the rare fast-path-rejected subset.
-
-    Lenient defaults mirror /root/reference/ocr_processor.py:371-372
-    (conf -> 1.0) and /root/reference/data_structures.py:102-103
-    (direction -> 'horizontal'); malformed rows are dropped (the
-    per-unit error isolation rule, /root/reference/main.py:263-275).
-    """
-    n = len(flat)
-    if n == 0:
-        return flat.assign(page=np.array([], dtype=np.int64)), np.zeros(0, bool)
-    text = flat["text"].astype("object")
-    notna = text.notna().to_numpy()
-    text = text.fillna("")
-
-    part = text.str.partition("|")
-    head, sep, content = part[0], part[1], part[2]
-    has_pipe = (sep == "|").to_numpy()
-
-    nseg = (head.str.count(";") + 1).to_numpy()
-    seg = head.str.split(";", n=3, expand=True)
-    for c in range(seg.shape[1], 4):
-        seg[c] = None
-    seg = seg.fillna("")
-
-    page_ok = seg[0].str.fullmatch(_INT_RE).to_numpy()
-
-    ncoord = (seg[1].str.count(",") + 1).to_numpy()
-    coords = seg[1].str.split(",", n=3, expand=True)
-    for c in range(coords.shape[1], 4):
-        coords[c] = None
-
-    kind = flat["kind"].astype("object")
-    kind_text = (kind == "raw_text").to_numpy()
-    kind_media = (kind == "raw_media").to_numpy()
-
-    has_conf = (nseg >= 3) & (seg[2] != "").to_numpy()
-    has_dir = (nseg >= 4) & (seg[3] != "").to_numpy()
-
-    valid = (
-        notna & has_pipe & (nseg >= 2) & (nseg <= 4)
-        & page_ok & (ncoord == 4) & (kind_text | kind_media)
-    )
-
-    # exact-float parse (CPython float()) on candidate rows only; a
-    # parse failure flips the row to malformed, never raises
-    def _floats(col: pd.Series, mask: np.ndarray) -> np.ndarray:
-        out = np.full(n, np.nan)
-        idx = np.nonzero(mask)[0]
-        vals = col.to_numpy(dtype=object)
-        bad = []
-        for i in idx:
-            try:
-                out[i] = float(vals[i])
-            except (TypeError, ValueError):
-                bad.append(i)
-        if bad:
-            mask[np.array(bad)] = False
-        return out
-
-    x0 = _floats(coords[0], valid)
-    y0 = _floats(coords[1], valid)
-    x1 = _floats(coords[2], valid)
-    y1 = _floats(coords[3], valid)
-    conf = np.ones(n)
-    conf_mask = valid & has_conf
-    conf_vals = _floats(seg[2], conf_mask)
-    # a bad explicit conf invalidates the whole span (oracle parity)
-    valid &= ~(has_conf & ~conf_mask)
-    conf = np.where(valid & has_conf, conf_vals, 1.0)
-
-    page = np.zeros(n, dtype=np.int64)
-    pv = np.nonzero(valid)[0]
-    seg0 = seg[0].to_numpy(dtype=object)
-    for i in pv:
-        page[i] = int(seg0[i])
-
-    direction = np.where(has_dir, seg[3].to_numpy(dtype=object),
-                         "horizontal")
-    out_kind = np.where(kind_media, "media", "text")
-    mref = flat["media_ref"].astype("object").to_numpy()
-    out_ref = np.where(kind_media, mref, None)
-
-    dec = pd.DataFrame({
-        "page": page, "x0": x0, "y0": y0, "x1": x1, "y1": y1,
-        "conf": conf, "direction": direction, "out_kind": out_kind,
-        "content": content.to_numpy(dtype=object), "out_media_ref": out_ref,
-        "offset": flat["offset"].to_numpy(),
-    }, index=flat.index)
-    return dec[valid], valid

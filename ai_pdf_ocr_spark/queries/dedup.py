@@ -852,7 +852,7 @@ SELECT t.doc_id,
 FROM toks t LEFT JOIN perdoc p USING (doc_id)
 WHERE LENGTH(ts) >= {_SPAN_W}
 """)
-def dedup_duplicate_spans(spark, sf_dir, hash_windows=False):
+def dedup_duplicate_spans(spark, sf_dir):
     """Substring-level duplication report: for every doc, the fraction
     of its sliding {W}-token windows whose exact token sequence also
     appears in at least one OTHER doc (cross-doc only: ``dup`` counts
@@ -872,14 +872,13 @@ def dedup_duplicate_spans(spark, sf_dir, hash_windows=False):
     uniform (window content / doc_id): no skew hazard beyond a
     pathological single repeated string, which the groupBy's partial
     aggregation absorbs map-side.  At 100 TB the window STRING never
-    needs to shuffle: ``hash_windows=True`` (the r5-implemented flip,
-    VERDICT r4 ask #5) keys every shuffle by xxhash64(win) so 8-byte
-    longs cross the wire instead of ~50-byte strings (collision
+    needs to shuffle: every shuffle is keyed by xxhash64(win), so
+    8-byte longs cross the wire instead of ~50-byte strings (collision
     P < 1e-8 at 10^12 windows — the same exactness class MinHash
-    assumes); plan shape is IDENTICAL and results are equal on the
-    test corpora (both pinned in tests/test_plans.py::
-    test_duplicate_spans_hash_key_flip).  The registered string form
-    keeps the DuckDB oracle exact."""
+    assumes).  The hash is taken map-side, upstream of the first
+    Exchange (pinned in tests/test_plans.py::
+    test_duplicate_spans_hash_key_flip); the DuckDB twin counts the
+    window strings themselves and agrees on the test corpora."""
     d = _spread(load(spark, sf_dir, "documents"))
     toks = d.select("doc_id", _tokens(F.col("text")).alias("ts"))
     base = (toks.where(F.size("ts") >= _SPAN_W)
@@ -889,10 +888,9 @@ def dedup_duplicate_spans(spark, sf_dir, hash_windows=False):
     win_str = F.explode(F.transform(
         F.sequence(F.lit(0), F.size("ts") - _SPAN_W),
         lambda i: F.concat_ws(" ", F.slice("ts", i + 1, _SPAN_W))))
-    wins = base.select("doc_id", win_str.alias("win"))
-    if hash_windows:
-        # map-side: the string never leaves the explode stage
-        wins = wins.select("doc_id", F.xxhash64("win").alias("win"))
+    # map-side: the window string never leaves the explode stage
+    wins = (base.select("doc_id", win_str.alias("win"))
+            .select("doc_id", F.xxhash64("win").alias("win")))
     pwd = wins.groupBy("doc_id", "win").agg(F.count("*").alias("cnt"))
     dup = (pwd.groupBy("win").agg(F.count("*").alias("nd"))
            .where(F.col("nd") >= 2).select("win"))

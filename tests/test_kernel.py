@@ -9,7 +9,6 @@ import random
 import subprocess
 import sys
 
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -212,14 +211,15 @@ def test_kernel_idempotent_on_reencoded_output():
     assert sum(len(v) for v in first.values()) > 0
 
 
-def test_decode_fast_path_matches_legacy_pandas():
-    """The Arrow extract_regex fast path and the legacy pandas decode
-    must agree bit-for-bit on masks, numerics, and strings — including
-    payloads only one of the two grammars parses natively."""
+def test_decode_matches_oracle_parse_span():
+    """decode_flat must read every payload exactly as the spec's
+    oracle.parse_span does: the same rows kept, and page, coordinates
+    (bit for bit), conf, direction, content and media_ref equal —
+    including payloads only CPython's int()/float() parse (the strict
+    fast grammar rejects them) and pages that do not fit int64."""
     import numpy as np
 
-    from ai_pdf_ocr_spark.kernel.decode import (_decode_flat_pandas,
-                                                decode_flat)
+    from ai_pdf_ocr_spark.kernel.decode import decode_flat
 
     adv = ["no pipe", None, "x;1,2,3,4|b", "1;1,2,3|f", "1;a,b,c,d|f",
            ";|", "9;1,2,3,4;notafloat;horizontal|b", " 1;1,2,3,4|ws page",
@@ -235,24 +235,33 @@ def test_decode_fast_path_matches_legacy_pandas():
            "1;1,2,3,4;0.5;|conf empty dir"]
     kinds = (["raw_text"] * (len(adv) - 3)) + ["raw_media", "bogus",
                                                "raw_text"]
+    # pages only int() reads: underscores, and past int64 both ways
+    for page in ("1_0", "99999999999999999999", "-99999999999999999999"):
+        adv += [f"{page};1,2,3,4|p", f"{page}; 1,2,3,4|p ws coord"]
+        kinds += ["raw_text", "raw_media"]
     # plus every payload the fixture generator can emit
     fuzz = [s["text"] for d in make_documents(80, seed=101)
             for s in d["spans"]]
     texts = adv + fuzz
     kinds = kinds + ["raw_text"] * len(fuzz)
-    flat = pd.DataFrame({"kind": kinds, "text": texts,
-                         "media_ref": ["m"] * len(texts),
-                         "offset": range(len(texts))})
-    dn, vn = decode_flat(flat)
-    do, vo = _decode_flat_pandas(flat)
-    assert (vn == vo).all()
-    for c, a in dn.items():
-        b = do[c].to_numpy() if c != "direction" \
-            else do[c].to_numpy(dtype=object)
-        if a.dtype == np.float64:
-            assert (a.view("u8") == b.view("u8")).all(), c
-        else:
-            assert list(a) == list(b), c
+    refs = [f"m{i}" for i in range(len(texts))]
+    dec, valid = decode_flat({"kind": kinds, "text": texts,
+                              "media_ref": refs,
+                              "offset": np.arange(len(texts))})
+    want = [O.parse_span(k, t, r, i)
+            for i, (k, t, r) in enumerate(zip(kinds, texts, refs))]
+    assert valid.tolist() == [b is not None for b in want]
+    kept = [b for b in want if b is not None]
+    assert len(kept) < len(texts)
+    bits = lambda v: np.float64(v).view("u8")  # noqa: E731
+    for j, b in enumerate(kept):
+        assert dec["page"][j] == b.page, b
+        for c in ("x0", "y0", "x1", "y1", "conf"):
+            assert bits(dec[c][j]) == bits(getattr(b, c)), (c, b)
+        assert (dec["direction"][j], dec["content"][j],
+                dec["out_kind"][j], dec["out_media_ref"][j],
+                dec["offset"][j]) == \
+            (b.direction, b.text, b.kind, b.media_ref, b.offset), b
 
 
 # ---- hypothesis fuzz: decode grammar + full-pipeline parity --------
@@ -274,7 +283,12 @@ if _HYP:
         mode = draw(st.integers(0, 4))
         if mode == 0:  # arbitrary text, any bytes except surrogates
             return draw(st.text(max_size=40))
-        page = draw(st.integers(-2, 60))
+        # int()-only spellings reach the per-row decode through pages
+        page = draw(st.one_of(
+            st.integers(-2, 60),
+            st.sampled_from(["1_0", "+3", " 2 ", "١", "0_1",
+                             "99999999999999999999",
+                             "-99999999999999999999"])))
         coords = ",".join(f"{draw(_num):.1f}"
                           for _ in range(draw(st.integers(2, 5))))
         head = f"{page};{coords}"

@@ -41,8 +41,9 @@ def test_e2e_random_corpus_equality(spark):
 
 def test_e2e_with_weighted_repartition_equality(spark):
     docs = make_documents(200, seed=21, heavy_tail_frac=0.1)
-    df = weighted_repartition(documents_df(spark, docs), 8)
-    out = extract_documents(df).collect()
+    df = documents_df(spark, docs)
+    out = extract_documents(
+        weighted_repartition(df, 8, compute_assignment(df, 8))).collect()
     got = {r.doc_id: [(s.kind, s.text, s.media_ref, s.order)
                       for s in r.spans] for r in out}
     want = O.extract_corpus(docs)
@@ -53,9 +54,9 @@ def test_e2e_with_weighted_repartition_equality(spark):
 
 def test_bin_placement_exact(spark):
     # every row lands in the partition equal to its assigned bin
-    docs = make_documents(150, seed=4)
+    docs = documents_df(spark, make_documents(150, seed=4))
     placed = (
-        weighted_repartition(documents_df(spark, docs), 8)
+        weighted_repartition(docs, 8, compute_assignment(docs, 8))
         .withColumn("pid", F.spark_partition_id())
         .select("bin", "pid").distinct().collect()
     )
@@ -75,8 +76,9 @@ def test_every_bin_gets_a_salt_at_large_p(spark):
 
 def test_weighted_balance(spark):
     # heavy-tail corpus: max partition weight within 2.5x of mean
-    docs = make_documents(300, seed=13, heavy_tail_frac=0.05)
-    binned = weighted_repartition(documents_df(spark, docs), 8)
+    docs = documents_df(spark, make_documents(300, seed=13,
+                                              heavy_tail_frac=0.05))
+    binned = weighted_repartition(docs, 8, compute_assignment(docs, 8))
     loads = (
         binned.groupBy("bin").agg(F.sum(F.size("spans")).alias("w"))
         .collect()

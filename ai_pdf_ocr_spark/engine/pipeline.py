@@ -99,9 +99,6 @@ def doc_stats(extracted: DataFrame) -> DataFrame:
 
 
 def documents_df(spark: SparkSession, docs: list[dict]) -> DataFrame:
-    """Build a documents DataFrame from generator output (tests/bench)."""
-    rows = [(d["doc_id"],
-             [(s["kind"], s["text"], s["media_ref"], s["offset"])
-              for s in d["spans"]])
-            for d in docs]
-    return spark.createDataFrame(rows, schema=schemas.DOCUMENTS)
+    """Generator output (``make_documents`` dicts) as a documents
+    ``LocalRelation``, built through Arrow (tests, tools)."""
+    return schemas.local_frame(spark, docs, schemas.DOCUMENTS)

@@ -306,14 +306,19 @@ def build_document(doc_id: str, seed: int = 42, *,
     return {"doc_id": doc_id, "spans": spans}
 
 
+def nth_document(i: int, seed: int = 42, prefix: str = "doc",
+                 heavy_tail_frac: float = 0.0) -> dict:
+    """Document ``i`` of the corpus: id ``{prefix}-{i:08d}``, and every
+    ``int(1 / heavy_tail_frac)``-th document (from 0) is heavy-tailed.
+    The one source of every synthetic corpus, driver- or executor-side."""
+    heavy = heavy_tail_frac > 0 and i % max(1, int(1 / heavy_tail_frac)) == 0
+    return build_document(f"{prefix}-{i:08d}", seed, heavy_tail=heavy)
+
+
 def make_documents(n_docs: int, seed: int = 42, prefix: str = "doc",
                    heavy_tail_frac: float = 0.0) -> list[dict]:
-    docs = []
-    for i in range(n_docs):
-        doc_id = f"{prefix}-{i:08d}"
-        heavy = heavy_tail_frac > 0 and (i % max(1, int(1 / heavy_tail_frac))) == 0
-        docs.append(build_document(doc_id, seed, heavy_tail=heavy))
-    return docs
+    return [nth_document(i, seed, prefix, heavy_tail_frac)
+            for i in range(n_docs)]
 
 
 _GOLDEN_DEGS = (

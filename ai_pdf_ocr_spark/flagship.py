@@ -12,12 +12,17 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import functions as F
+import pyarrow as pa
 
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+
+from .engine import schemas
 from .engine.partitioning import compute_assignment
-from .engine.pipeline import (doc_stats, documents_df, extract_binned,
-                              extract_documents, extracted_spans_flat)
-from .fixtures.generate import make_documents
+from .engine.pipeline import (doc_stats, extract_binned, extract_documents,
+                              extracted_spans_flat)
+from .fixtures.generate import nth_document
 from .queries import FIXTURE_DIR, INPUT_DIR, fixture_sql, register
 
 _SF_DOCS = {"sf0.001": 200, "sf0.01": 500, "sf0.1": 2000}
@@ -27,38 +32,21 @@ def corpus_size(sf_dir: str) -> int:
     return _SF_DOCS.get(os.path.basename(sf_dir.rstrip("/")), 200)
 
 
-def synthetic_documents(spark, sf_dir: str, n_docs: int | None = None):
-    n = n_docs or corpus_size(sf_dir)
-    return documents_df(spark, make_documents(n, seed=42))
-
-
-def synthetic_documents_distributed(spark, n_docs: int, seed: int = 42,
-                                    heavy_tail_frac: float = 0.0,
-                                    partitions: int | None = None):
-    """Generate the corpus ON THE EXECUTORS (each doc is a pure function
-    of (seed, doc_id), so generation is embarrassingly parallel) — the
-    driver-side list would not scale past toy sizes."""
-    import pandas as pd
-
-    from .engine import schemas
-    from .fixtures.generate import build_document
-
-    parts = partitions or spark.sparkContext.defaultParallelism
-    stride = max(1, int(1 / heavy_tail_frac)) if heavy_tail_frac else 0
+def synthetic_documents(spark: SparkSession, n: int,
+                        heavy_tail_frac: float = 0.0) -> DataFrame:
+    """``make_documents(n, seed=42, heavy_tail_frac=...)`` generated ON
+    THE EXECUTORS: each document is a pure function of its index, so
+    ``spark.range(n)`` partitions the work and each Arrow batch of ids
+    becomes a batch of documents, with no driver-side list."""
+    schema = to_arrow_schema(schemas.DOCUMENTS)
 
     def gen(batches):
-        for pdf in batches:
-            ids = pdf["id"].tolist()
-            docs = [build_document(f"doc-{i:08d}", seed,
-                                   heavy_tail=bool(stride) and i % stride == 0)
-                    for i in ids]
-            yield pd.DataFrame({
-                "doc_id": [d["doc_id"] for d in docs],
-                "spans": [d["spans"] for d in docs],
-            })
+        for rb in batches:
+            yield pa.RecordBatch.from_pylist(
+                [nth_document(i, heavy_tail_frac=heavy_tail_frac)
+                 for i in rb.column(0).to_pylist()], schema=schema)
 
-    return (spark.range(0, n_docs, numPartitions=parts)
-            .mapInPandas(gen, schema=schemas.DOCUMENTS))
+    return spark.range(n).mapInArrow(gen, schema=schemas.DOCUMENTS)
 
 
 @register("extract_spans", sql=fixture_sql("extract_spans"))
@@ -70,17 +58,11 @@ def extract_spans(spark, sf_dir):
     oracle reads the expected output materialized by the pure-Python
     reference-parity oracle (tests/oracle.py via gen_fixtures.py) —
     the driver now hash-checks the kernel end-to-end."""
-    n = corpus_size(sf_dir)
-    # generate ON the executors (identical docs: both paths call
-    # build_document(f"doc-{i:08d}", 42)); r1-r2 built the corpus
-    # driver-side + createDataFrame, which serialized 2000 nested docs
-    # through the driver INSIDE the timed query and capped the stage at
-    # 8 partitions — that, not the kernel, dominated the bench row.
     # Lazy localCheckpoint: the weight profile and the extraction pass
     # share ONE generation (same single-compute pattern as the dedup
     # self-joins).  Bins follow the production core's policy,
     # P = 2 x defaultParallelism, submit_job.py's default.
-    docs = (synthetic_documents_distributed(spark, n)
+    docs = (synthetic_documents(spark, corpus_size(sf_dir))
             .localCheckpoint(eager=False))
     parts = 2 * spark.sparkContext.defaultParallelism
     extracted = extract_binned(docs, compute_assignment(docs, parts), parts)
@@ -95,7 +77,7 @@ def extract_doc_stats(spark, sf_dir):
     """Per-document rollup of the extraction output (A1-A8 analog).
     Oracle: pure-Python pipeline twin incl. the metric counters
     (tests/oracle_sketches.py::extract_doc_rows via gen_fixtures.py)."""
-    docs = synthetic_documents(spark, sf_dir)
+    docs = synthetic_documents(spark, corpus_size(sf_dir))
     return (doc_stats(extract_documents(docs))
             .withColumn("document_text",
                         F.substring("document_text", 1, 64))
@@ -126,7 +108,7 @@ def s1_corpus_probe(spark, sf_dir):
     ``get_pdf_info`` (/root/reference/pdf_processor.py:86-110: page
     count + metadata before any OCR).  Pure built-in expressions; the
     only shuffle is the final 1-row aggregate."""
-    docs = synthetic_documents(spark, sf_dir)
+    docs = synthetic_documents(spark, corpus_size(sf_dir))
     sp = docs.select("doc_id", F.explode("spans").alias("s"))
     page = F.split_part(F.col("s.text"), F.lit(";"),
                         F.lit(1)).try_cast("bigint")
@@ -165,7 +147,7 @@ def j_media_asset_join(spark, sf_dir):
     /root/reference/ocr_processor.py:377-389).  The asset dimension is
     a small table -> broadcast hash join; the raw-span side never
     shuffles for the join, only for the tiny per-mime aggregate."""
-    docs = synthetic_documents(spark, sf_dir)
+    docs = synthetic_documents(spark, corpus_size(sf_dir))
     assets = spark.read.parquet(f"{INPUT_DIR}/media_assets.parquet")
     sp = (docs.select(F.explode("spans").alias("s"))
           .where(F.col("s.kind") == "raw_media")

@@ -112,6 +112,45 @@ def _sweep_pairs(x0, y0, x1, y1):
 SMALL_PAGE = 160
 
 
+def _cluster_sort(bs, lo, hi, key, rank):
+    """First-fit clustering of ``bs`` on the interval [b[lo], b[hi]]:
+    a block joins the first cluster whose seed (first block) it
+    overlaps by at least half of either extent, else seeds a new one.
+    Each cluster is sorted by ``key``, the clusters by ``rank`` of
+    their seed (the reference's text_block_sorter.py:26-87)."""
+    clusters = []
+    for b in bs:
+        b_lo, b_hi = b[lo], b[hi]
+        for c in clusters:
+            s = c[0]
+            o_lo = b_lo if b_lo > s[lo] else s[lo]
+            o_hi = b_hi if b_hi < s[hi] else s[hi]
+            ov = o_hi - o_lo
+            if ov < 0:
+                ov = 0
+            if ov >= (b_hi - b_lo) * 0.5 or ov >= (s[hi] - s[lo]) * 0.5:
+                c.append(b)
+                break
+        else:
+            clusters.append([b])
+    # itemgetter + singleton guards: same keys, same stable sort,
+    # ~2x less per-call overhead than a lambda on tiny lists
+    for c in clusters:
+        if len(c) > 1:
+            c.sort(key=key)
+    if len(clusters) > 1:
+        clusters.sort(key=rank)
+    return [b for c in clusters for b in c]
+
+
+def _col_rank(c):  # vertical columns: right to left
+    return -((c[0][0] + c[0][2]) / 2)
+
+
+def _row_rank(r):  # horizontal rows: top to bottom
+    return (r[0][1] + r[0][3]) / 2
+
+
 def process_page_fast(blocks, merge_cands, dd_cands):
     """Pure-Python page state machines, candidate-driven, for pages of
     every size (small pages straight from extract.py, large ones via
@@ -194,61 +233,15 @@ def process_page_fast(blocks, merge_cands, dd_cands):
     vert = [b for b in merged if b[5] == "vertical"]
     horiz = [b for b in merged if b[5] == "horizontal"]
 
-    def _sort_v(bs):
-        cols = []
-        for b in bs:
-            for col in cols:
-                s = col[0]
-                lo = b[0] if b[0] > s[0] else s[0]
-                hi = b[2] if b[2] < s[2] else s[2]
-                ov = hi - lo
-                if ov < 0:
-                    ov = 0
-                if ov >= (b[2] - b[0]) * 0.5 or ov >= (s[2] - s[0]) * 0.5:
-                    col.append(b)
-                    break
-            else:
-                cols.append([b])
-        # itemgetter + singleton guards: same keys, same stable sort,
-        # ~2x less per-call overhead than a lambda on tiny lists
-        for col in cols:
-            if len(col) > 1:
-                col.sort(key=_KEY_Y0)
-        if len(cols) > 1:
-            cols.sort(key=lambda col: -((col[0][0] + col[0][2]) / 2))
-        return [b for col in cols for b in col]
-
-    def _sort_h(bs):
-        rows = []
-        for b in bs:
-            for row in rows:
-                s = row[0]
-                lo = b[1] if b[1] > s[1] else s[1]
-                hi = b[3] if b[3] < s[3] else s[3]
-                ov = hi - lo
-                if ov < 0:
-                    ov = 0
-                if ov >= (b[3] - b[1]) * 0.5 or ov >= (s[3] - s[1]) * 0.5:
-                    row.append(b)
-                    break
-            else:
-                rows.append([b])
-        for row in rows:
-            if len(row) > 1:
-                row.sort(key=_KEY_X0)
-        if len(rows) > 1:
-            rows.sort(key=lambda row: (row[0][1] + row[0][3]) / 2)
-        return [b for row in rows for b in row]
-
-    if vert and horiz:
-        v_top = min(b[1] for b in vert)
-        h_top = min(b[1] for b in horiz)
-        final = _sort_v(vert) + _sort_h(horiz) if v_top <= h_top \
-            else _sort_h(horiz) + _sort_v(vert)
-    elif vert:
-        final = _sort_v(vert)
+    cols = _cluster_sort(vert, 0, 2, _KEY_Y0, _col_rank)
+    rows = _cluster_sort(horiz, 1, 3, _KEY_X0, _row_rank)
+    # the group whose topmost block is higher reads first, vertical on
+    # a tie (an unordered NaN top puts horizontal first)
+    if vert and horiz and not (min(b[1] for b in vert)
+                               <= min(b[1] for b in horiz)):
+        final = rows + cols
     else:
-        final = _sort_h(horiz)
+        final = cols + rows
 
     # ---- dedupe (J2), /root/reference/data_structures.py:136-176 ----
     # candidate-driven: only the greedy state machine is order-dependent

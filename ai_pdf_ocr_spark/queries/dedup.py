@@ -601,8 +601,11 @@ def dedup_simhash_pairs(spark, sf_dir):
 
 
 # ------------------------------------------- cluster resolution
-@register("dedup_cluster_resolve", sql=f"""
-WITH pairs AS ({_JACCARD_SQL}),
+def _closure_sql(pairs_sql: str) -> str:
+    """DuckDB twin of ``_resolve_components``: recursive reach over the
+    symmetrized (d1, d2) pairs, then the min-doc_id keeper."""
+    return f"""
+WITH pairs AS ({pairs_sql}),
 e AS (SELECT d1 AS s, d2 AS t FROM pairs
       UNION SELECT d2, d1 FROM pairs),
 r AS (
@@ -616,7 +619,10 @@ SELECT s AS doc_id, MIN(t) AS cluster_id,
        MIN(t) = s AS keep,
        CAST(COUNT(*) AS BIGINT) AS n_reachable
 FROM r GROUP BY s
-""")
+"""
+
+
+@register("dedup_cluster_resolve", sql=_closure_sql(_JACCARD_SQL))
 def dedup_cluster_resolve(spark, sf_dir):
     """Dedup cluster resolution — the stage every training-data pipeline
     ends with: connected components over the near-dup pair graph
@@ -643,30 +649,10 @@ def dedup_cluster_resolve(spark, sf_dir):
     return _resolve_components(spark, d, pairs)
 
 
-_SCALED_RESOLVE_SQL = """
-WITH pairs AS (
+@register("dedup_cluster_resolve_scaled", sql=_closure_sql(f"""
   SELECT d1, d2
-  FROM read_parquet('__FIX__/dedup_jaccard_verified.parquet')
-  WHERE _corpus = (SELECT SUM(n_chars) FROM documents)
-),
-e AS (SELECT d1 AS s, d2 AS t FROM pairs
-      UNION SELECT d2, d1 FROM pairs),
-r AS (
-  WITH RECURSIVE reach(s, t) AS (
-    SELECT doc_id, doc_id FROM documents
-    UNION
-    SELECT reach.s, e.t FROM reach JOIN e ON reach.t = e.s
-  ) SELECT * FROM reach
-)
-SELECT s AS doc_id, MIN(t) AS cluster_id,
-       MIN(t) = s AS keep,
-       CAST(COUNT(*) AS BIGINT) AS n_reachable
-FROM r GROUP BY s
-"""
-
-
-@register("dedup_cluster_resolve_scaled",
-          sql=_SCALED_RESOLVE_SQL.replace("__FIX__", FIXTURE_DIR))
+  FROM read_parquet('{FIXTURE_DIR}/dedup_jaccard_verified.parquet')
+  WHERE _corpus = (SELECT SUM(n_chars) FROM documents)"""))
 def dedup_cluster_resolve_scaled(spark, sf_dir):
     """The complete corpus-SCALE dedup pipeline as one operator:
     MinHash-LSH candidates -> exact token-hash-set verify -> connected

@@ -6,9 +6,11 @@ and prints ONE JSON line.
 
 The extraction row times ``run_extraction``, the production path with
 its write and lineage commit, over a pre-materialized parquet corpus of
-synthetic interleaved documents (generated distributed, cached in
-/tmp across runs) so the measured time is the pipeline, not the
-generator.
+synthetic interleaved documents (``perfbench/corpus.py``'s standard
+corpus, written through Arrow on the driver and cached in /tmp across
+runs; a cold cache costs 25 s CPU and 770 MB peak RSS once for sf0.1's
+48,000 docs on a 4-core box) so the measured time is the pipeline, not
+the generator.
 """
 
 from __future__ import annotations
@@ -19,6 +21,7 @@ import sys
 import time
 
 from ai_pdf_ocr_spark.engine.session import default_cpus
+from perfbench.corpus import Cache
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = default_cpus()
@@ -66,18 +69,12 @@ HEADLINE = [
 CHECKSUM_QUERIES = {"dedup_ngram_jaccard", "dedup_jaccard_verified"}
 
 
-def ensure_corpus(spark, n_docs: int) -> str:
-    path = f"/tmp/spark_graft_bench/docs_{n_docs}_v3"
-    marker = os.path.join(path, "_SUCCESS")
-    if not os.path.exists(marker):
-        from ai_pdf_ocr_spark.flagship import synthetic_documents_distributed
-        # 64 files: the scan stage must parallelize fully at EVERY
-        # tested cluster size (8 files capped local[32] at 8-way reads)
-        (synthetic_documents_distributed(spark, n_docs,
-                                         heavy_tail_frac=0.02,
-                                         partitions=64)
-         .write.mode("overwrite").parquet(path))
-    return path
+def corpus(n_docs: int) -> str:
+    """``make_documents(n_docs, seed=42, heavy_tail_frac=0.02)`` as 64
+    parquet files (the scan stage must parallelize fully at every
+    tested core count; 8 files capped local[32] at 8-way reads), cached
+    under /tmp by size and generator source."""
+    return Cache("/tmp/spark_graft_bench").standard(42, n_docs, 64)
 
 
 def bench_extraction(spark, n_docs: int) -> tuple[float, dict]:
@@ -92,7 +89,7 @@ def bench_extraction(spark, n_docs: int) -> tuple[float, dict]:
     from ai_pdf_ocr_spark.engine.io import TableStore
     from ai_pdf_ocr_spark.engine.sources import read_documents
 
-    path = ensure_corpus(spark, n_docs)
+    path = corpus(n_docs)
     bins = 2 * spark.sparkContext.defaultParallelism
     root = tempfile.mkdtemp(prefix="bench_extract_")
 

@@ -31,7 +31,7 @@ import time
 from statistics import median
 
 from ai_pdf_ocr_spark.engine.session import build_session
-from bench import ensure_corpus
+from bench import corpus
 from perfbench.procs import run_child, tree_cpu_s
 
 HERE = os.path.dirname(os.path.abspath(__file__))
@@ -95,7 +95,7 @@ def worker(k: int, n_docs: int, out_root: str) -> None:
 
     spark = build_session(app=f"scalebench-{k}", master=f"local[{k}]")
     spark.sparkContext.setLogLevel("ERROR")
-    path = ensure_corpus(spark, n_docs)
+    path = corpus(n_docs)
     sid, run_ids = os.getsid(0), itertools.count()
 
     def run_once() -> tuple[float, int, float]:
@@ -141,12 +141,7 @@ def main() -> None:
     n, n4 = levels(affinity)
     cores = len(affinity)
     n_docs = DOCS_PER_CORE * cores
-    spark = build_session(app="scalebench-corpus", master=f"local[{cores}]")
-    ensure_corpus(spark, n_docs)
-    jvm = spark.sparkContext._gateway.proc
-    spark.stop()
-    jvm.stdin.close()  # the gateway JVM exits at EOF on its stdin
-    jvm.wait()
+    corpus(n_docs)
 
     recs: dict[int, list[dict]] = {n: [], n4: []}
     with tempfile.TemporaryDirectory(prefix="scalebench-") as tmp:

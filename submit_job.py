@@ -95,9 +95,9 @@ def main(argv=None) -> int:
         return 0
 
     if args.generate:
-        from ai_pdf_ocr_spark.flagship import synthetic_documents_distributed
-        documents = synthetic_documents_distributed(
-            spark, args.generate, heavy_tail_frac=0.02)
+        from ai_pdf_ocr_spark.flagship import synthetic_documents
+        documents = synthetic_documents(spark, args.generate,
+                                        heavy_tail_frac=0.02)
     else:
         from ai_pdf_ocr_spark.engine.sources import read_documents
         documents = read_documents(spark, args.input, args.input_format)

@@ -3,6 +3,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from ai_pdf_ocr_spark.engine.partitioning import (compute_assignment,
@@ -10,6 +12,7 @@ from ai_pdf_ocr_spark.engine.partitioning import (compute_assignment,
 from ai_pdf_ocr_spark.engine.pipeline import (
     doc_stats, documents_df, extract_documents, extracted_spans_flat)
 from ai_pdf_ocr_spark.fixtures.generate import golden_documents, make_documents
+from ai_pdf_ocr_spark.flagship import synthetic_documents
 from tests import oracle as O
 
 
@@ -20,6 +23,17 @@ def _spark_sequences(spark, docs):
         r.doc_id: [(s.kind, s.text, s.media_ref, s.order) for s in r.spans]
         for r in out
     }
+
+
+@pytest.mark.parametrize("frac", [0.0, 0.02])
+def test_executor_generator_matches_make_documents(spark, frac):
+    """The flagship rows' executor-side corpus is the driver-side one,
+    row for row: same ids, same spans, same heavy-tail documents
+    (0, 50 and 100 at frac = 0.02)."""
+    got = synthetic_documents(spark, 120, heavy_tail_frac=frac)
+    assert [r.asDict(recursive=True)
+            for r in got.orderBy("doc_id").collect()] == \
+        make_documents(120, seed=42, heavy_tail_frac=frac)
 
 
 def test_e2e_golden_equality(spark):

@@ -34,9 +34,10 @@ def test_flagship_single_exchange(spark):
     mapInArrow stage behind a pruned projection."""
     from ai_pdf_ocr_spark.engine.partitioning import (compute_assignment,
                                                       weighted_repartition)
-    from ai_pdf_ocr_spark.engine.pipeline import extract_documents
-    from ai_pdf_ocr_spark.flagship import synthetic_documents
-    docs = synthetic_documents(spark, SF_DIR)
+    from ai_pdf_ocr_spark.engine.pipeline import (documents_df,
+                                                  extract_documents)
+    from ai_pdf_ocr_spark.fixtures.generate import make_documents
+    docs = documents_df(spark, make_documents(200, seed=42))
     plan = _executed_plan(extract_documents(
         weighted_repartition(docs, 4, compute_assignment(docs, 4))))
     assert _count(r"\bExchange\b", plan) == 1, plan[:2000]

@@ -16,21 +16,10 @@ import pandas as pd
 import pyarrow as pa
 
 from .decode import decode_flat
-from .layout import (SMALL_PAGE, pair_predicates, process_page,
+from .layout import (SMALL_PAGE, page_candidates, process_page,
                      process_page_fast)
 
 KERNEL_VERSION = "1.2.0"
-
-# upper-triangle (i<j, row-major) index cache per page size: the same
-# (i asc, j asc) visit order as the reference's nested loops
-_TRI_CACHE: dict[int, tuple[np.ndarray, np.ndarray]] = {}
-
-
-def _tri(n: int) -> tuple[np.ndarray, np.ndarray]:
-    got = _TRI_CACHE.get(n)
-    if got is None:
-        got = _TRI_CACHE[n] = np.triu_indices(n, k=1)
-    return got
 
 _METRIC_COLS = ("span_count_in", "span_count_out", "malformed",
                 "merged_away", "dedup_removed", "filtered")
@@ -91,75 +80,30 @@ def _extract_core(n_docs: int, counts: np.ndarray, kinds, texts, mrefs,
         starts = np.nonzero(change)[0]
         ends = np.append(starts[1:], len(d_doc))
 
-        # ---- batched pairwise candidates over all small pages --------
         # The O(n^2) merge (J3) and dedupe (J2) PREDICATES are pure
-        # float math -> evaluated here once (layout.pair_predicates) for
-        # every (i<j) pair of every small page as flat numpy arrays.
-        # Only the order-dependent greedy STATE MACHINES stay per-page
-        # (process_page_fast), walking the candidate pairs; pairs whose
-        # geometry the merge stage changed are recomputed there around
-        # the merged blocks only.
-        sizes = ends - starts
-        merge_map: dict[int, list[tuple[int, int]]] = {}
-        dd_map: dict[int, list[tuple[int, int]]] = {}
-        pairable = np.nonzero((sizes >= 2) & (sizes <= SMALL_PAGE))[0]
-        if len(pairable):
-            pi_parts = []; pj_parts = []; li_parts = []; lj_parts = []
-            n_pairs = np.empty(len(pairable), np.int64)
-            for k, g in enumerate(pairable):
-                ti, tj = _tri(int(sizes[g]))
-                s = starts[g]
-                pi_parts.append(ti + s); pj_parts.append(tj + s)
-                li_parts.append(ti); lj_parts.append(tj)
-                n_pairs[k] = len(ti)
-            PI = np.concatenate(pi_parts); PJ = np.concatenate(pj_parts)
-            LI = np.concatenate(li_parts); LJ = np.concatenate(lj_parts)
-            pair_off = np.concatenate(([0], np.cumsum(n_pairs)))
-            mg, dd, small, large = pair_predicates(
-                PI, PJ, x0, y0, x1, y1, okind == "text",
-                pd.factorize(direction)[0])
-
-            # group candidate pairs per page WITHOUT a per-pair Python
-            # loop: hit indices are ascending, so one searchsorted
-            # yields each page's slice, and zip over list slices builds
-            # the pair lists in C (the per-pair dict-append loop was
-            # the top _extract_core cost once heavy 100-160-span pages
-            # started routing through the batched stage)
-            def _per_page(hits, firsts, seconds):
-                if not len(hits):
-                    return {}
-                gs = np.searchsorted(pair_off, hits, side="right") - 1
-                cut = np.nonzero(np.diff(gs))[0] + 1
-                pages = pairable[gs[np.concatenate(([0], cut))]].tolist()
-                bounds = np.concatenate(([0], cut, [len(hits)])).tolist()
-                fl, sl = firsts.tolist(), seconds.tolist()
-                return {g: list(zip(fl[a:b], sl[a:b]))
-                        for g, a, b in zip(pages, bounds, bounds[1:])}
-
-            merge_map = _per_page(mg, LI[mg], LJ[mg])
-            # dedupe candidates for EVERY small page (merge-bearing ones
-            # included: geometry-untouched pairs stay valid; pairs
-            # around merged blocks are recomputed in process_page_fast).
-            # Directed (small, large) BATCH-GLOBAL indices.
-            dd_map = _per_page(dd, small, large)
+        # float math, evaluated for the whole batch over sort-sweep
+        # candidates.  Only the order-dependent greedy STATE MACHINES
+        # stay per page (process_page_fast), walking the candidate
+        # pairs; pairs whose geometry the merge stage changed are
+        # recomputed there around the merged blocks only.
+        merge, m_at, dedupe, d_at = page_candidates(
+            starts, x0, y0, x1, y1, okind == "text",
+            pd.factorize(direction)[0])
 
         # one pre-zipped block-tuple list for the whole batch (tuple
-        # field 9 = batch-global index, keyed by the dd candidates);
-        # per page the fast path gets ONE list slice instead of nine
+        # field 9 = batch-global index, keyed by the dedupe pairs);
+        # per page the state machine gets ONE list slice instead of nine
         all_blocks = list(zip(
             x0.tolist(), y0.tolist(), x1.tolist(), y1.tolist(),
             conf.tolist(), direction.tolist(), okind.tolist(),
             content.tolist(), oref.tolist(), range(len(x0))))
 
-        for gi, (s, e) in enumerate(zip(starts, ends)):
+        for g, (s, e) in enumerate(zip(starts.tolist(), ends.tolist())):
             di = int(d_doc[s])
-            if e - s <= SMALL_PAGE:
-                ks, ts, rs, orders, st = process_page_fast(
-                    all_blocks[s:e], merge_map.get(gi), dd_map.get(gi))
-            else:
-                ks, ts, rs, orders, st = process_page(
-                    x0[s:e], y0[s:e], x1[s:e], y1[s:e], conf[s:e],
-                    direction[s:e], okind[s:e], content[s:e], oref[s:e])
+            page = process_page_fast if e - s <= SMALL_PAGE else process_page
+            ks, ts, rs, orders, st = page(
+                all_blocks[s:e], merge[m_at[g]:m_at[g + 1]],
+                dedupe[d_at[g]:d_at[g + 1]])
             out_counts[di] += len(ks)
             out_kind.extend(ks)
             out_text.extend(ts)

@@ -5,12 +5,12 @@ Vectorized transcription of ``/root/reference/text_block_sorter.py`` +
 ``/root/reference/data_structures.py:136-176`` +
 ``pdf_processor.py:148-150,244-246`` (the reference's sink filters).
 The pairwise merge/dedupe predicates are pure float math, evaluated by
-``pair_predicates`` over candidate pairs only: the batched upper
-triangle of every small page (extract.py) or a sort-sweep over one
-axis for a large page (``process_page``), so no n x n array is ever
-allocated.  Only the order-DEPENDENT greedy state machines (cluster
-membership depends on arrival order and current seed set — not
-expressible as a window function, SURVEY.md §2.5) remain as Python
+``pair_predicates`` over candidate pairs only: one sort-sweep over a
+whole Arrow batch (``page_candidates``) gives every page, of any size,
+its pairs along the axis that yields it fewer, so no n x n array is
+ever allocated.  Only the order-DEPENDENT greedy state machines
+(cluster membership depends on arrival order and current seed set —
+not expressible as a window function, SURVEY.md §2.5) remain as Python
 loops, in ``process_page_fast``, over the candidate pairs.
 
 Float parity notes: every arithmetic expression keeps the reference's
@@ -25,7 +25,6 @@ from __future__ import annotations
 from operator import itemgetter
 
 import numpy as np
-import pandas as pd
 
 _KEY_X0 = itemgetter(0)
 _KEY_Y0 = itemgetter(1)
@@ -34,7 +33,11 @@ DPI = 200
 PT_SCALE = 72.0 / DPI
 MERGE_THRESHOLD = 0.5   # /root/reference/text_block_sorter.py:178
 REMOVE_THRESHOLD = 0.6  # /root/reference/data_structures.py:136
-SWEEP_CHUNK = 1 << 18   # candidate pairs per predicate pass on a large page
+SWEEP_CHUNK = 1 << 18   # candidate pairs per predicate pass
+# a page of more blocks is "dense": it runs the same state machine
+# under the name ``process_page``, so a layer tracer can tell the two
+# apart; no algorithm depends on it
+SMALL_PAGE = 160
 
 
 def pair_predicates(PI, PJ, x0, y0, x1, y1, is_text, dcode):
@@ -45,9 +48,9 @@ def pair_predicates(PI, PJ, x0, y0, x1, y1, is_text, dcode):
     direction code (reference text_block_sorter.py:161-175).  J2:
     overlap >= REMOVE_THRESHOLD of the block's OWN area against a
     strictly larger block (reference data_structures.py:41-61,
-    136-176).  Returns (mg, dd, small, large): the pair positions
-    passing J3, the pair positions passing J2 in either direction, and
-    those pairs' (smaller, larger) endpoints."""
+    136-176).  Returns (mg, small, large): the pair positions passing
+    J3, and the (smaller, larger) endpoints of the pairs passing J2 in
+    either direction."""
     area = (x1 - x0) * (y1 - y0)
     il = np.maximum(x0[PI], x0[PJ]); it = np.maximum(y0[PI], y0[PJ])
     ir = np.minimum(x1[PI], x1[PJ]); ib = np.minimum(y1[PI], y1[PJ])
@@ -66,32 +69,45 @@ def pair_predicates(PI, PJ, x0, y0, x1, y1, is_text, dcode):
     dd = np.nonzero(dd_ij | dd_ji)[0]
     small = np.where(dd_ij[dd], PI[dd], PJ[dd])
     large = np.where(dd_ij[dd], PJ[dd], PI[dd])
-    return np.nonzero(merge)[0], dd, small, large
+    return np.nonzero(merge)[0], small, large
 
 
-def _sweep_pairs(x0, y0, x1, y1):
-    """Candidate pairs for a page too large for the batched upper
-    triangle: stable-sort the boxes by their low edge on one axis; each
-    box pairs with the later boxes whose low edge lies below its high
-    edge (one searchsorted).  Every strictly intersecting pair has
-    il < ir on both axes, so either sweep yields a superset of them; a
-    zero-width, negative-width or NaN box can never satisfy il < ir.
-    Both axes are counted before anything is materialized and the one
-    yielding fewer pairs is swept.  Yields (PI, PJ) chunks of about
-    SWEEP_CHUNK pairs (at least one chunk): a grid's rows or columns
-    still give n * min(rows, cols) / 2 pairs, so only the chunk and the
-    predicate hits are ever resident."""
+def _sweep_pairs(starts, x0, y0, x1, y1):
+    """Candidate pairs for every page of a batch (blocks grouped by
+    page, page g at [starts[g], starts[g + 1])): per axis, stable-sort
+    each page's boxes by their low edge, and each box pairs with the
+    later boxes of its page whose low edge lies below its high edge
+    (one searchsorted for the whole batch, on an int64 key
+    ``page * width + rank`` that keeps it inside the page; the low and
+    high edges are ranked together, NaN last).  Every strictly
+    intersecting pair has il < ir on both axes, so either sweep yields
+    a superset of them; a zero-width, negative-width or NaN box can
+    never satisfy il < ir.  Both axes are counted before anything is
+    materialized and each page sweeps the one yielding it fewer pairs.
+    Yields (PI, PJ) chunks of about SWEEP_CHUNK pairs (at least one
+    chunk), grouped by page in page order: a grid's rows or columns
+    still give n * min(rows, cols) / 2 pairs, so only the chunk and
+    the predicate hits are ever resident."""
     n = len(x0)
-    best = None
+    grp = np.repeat(np.arange(len(starts)),
+                    np.diff(starts, append=n))
+    after = np.arange(1, n + 1)
+    sweeps = []
     for lo, hi in ((x0, x1), (y0, y1)):
-        order = np.argsort(lo, kind="stable")
-        cnt = np.searchsorted(lo[order], hi[order], side="left") \
-            - np.arange(1, n + 1)
+        edges, rank = np.unique(np.concatenate((lo, hi)),
+                                return_inverse=True)
+        base = grp * len(edges)
+        key = base + rank[:n]
+        order = np.argsort(key, kind="stable")
+        cnt = np.searchsorted(key[order], (base + rank[n:])[order],
+                              side="left") - after
         np.maximum(cnt, 0, out=cnt)
-        total = int(cnt.sum())
-        if best is None or total < best[0]:
-            best = (total, order, cnt)
-    _, order, cnt = best
+        sweeps.append((order, cnt, np.add.reduceat(cnt, starts)))
+    (ox, cx, tx), (oy, cy, ty) = sweeps
+    # a page holds the same sorted positions in either order
+    use_y = (ty < tx)[grp]
+    order = np.where(use_y, oy, ox)
+    cnt = np.where(use_y, cy, cx)
     start = np.cumsum(cnt) - cnt  # first pair of each sorted position
     bounds = [0, *(np.flatnonzero(np.diff(start // SWEEP_CHUNK)) + 1)
               .tolist(), n]
@@ -104,12 +120,38 @@ def _sweep_pairs(x0, y0, x1, y1):
         yield order[first], order[second]
 
 
-# candidate cutoff: the candidate-driven pure-Python path wins through
-# ~160 blocks/page (r2 A/B/A sweep: 64->3388, 192->3493-3596 docs/s on
-# the heavy-tail corpus whose p99 page is 103, max 163); larger pages
-# get sort-sweep candidates per page, whose upper triangle would grow
-# as n^2
-SMALL_PAGE = 160
+def page_candidates(starts, x0, y0, x1, y1, is_text, dcode):
+    """Merge and dedupe candidates for every page of a batch, from one
+    sort-sweep (``_sweep_pairs``) and ``pair_predicates`` per chunk.
+
+    Returns (merge, merge_at, dedupe, dedupe_at): page g's merge pairs
+    are ``merge[merge_at[g]:merge_at[g + 1]]``, page-local (i, j) with
+    i < j in (i asc, j asc) order, the merge greedy's visit order; its
+    dedupe pairs are ``dedupe[dedupe_at[g]:dedupe_at[g + 1]]``,
+    batch-global (smaller, larger) block indices."""
+    mi, mj, small, large = [], [], [], []
+    for PI, PJ in _sweep_pairs(starts, x0, y0, x1, y1):
+        mg, sm, lg = pair_predicates(PI, PJ, x0, y0, x1, y1, is_text,
+                                     dcode)
+        mi.append(np.minimum(PI[mg], PJ[mg]))
+        mj.append(np.maximum(PI[mg], PJ[mg]))
+        small.append(sm)
+        large.append(lg)
+    # a page's blocks are contiguous, so sorting batch-global pairs
+    # sorts by page first; chunks already come in page order
+    mi, mj = np.concatenate(mi), np.concatenate(mj)
+    o = np.lexsort((mj, mi))
+    mi, mj = mi[o], mj[o]
+    small, large = np.concatenate(small), np.concatenate(large)
+    # ``small`` is unsorted within a page but partitioned by page, which
+    # is all the binary search for each page's first pair relies on
+    edges = np.append(starts, len(x0))
+    m_at = np.searchsorted(mi, edges)
+    first = np.repeat(starts, np.diff(m_at))  # each pair's page start
+    return (list(zip((mi - first).tolist(), (mj - first).tolist())),
+            m_at.tolist(),
+            list(zip(small.tolist(), large.tolist())),
+            np.searchsorted(small, edges).tolist())
 
 
 def _cluster_sort(bs, lo, hi, key, rank):
@@ -153,8 +195,7 @@ def _row_rank(r):  # horizontal rows: top to bottom
 
 def process_page_fast(blocks, merge_cands, dd_cands):
     """Pure-Python page state machines, candidate-driven, for pages of
-    every size (small pages straight from extract.py, large ones via
-    ``process_page``).
+    every size (``page_candidates`` gives their pairs).
 
     At typical page sizes (10-40 blocks) numpy's per-call dispatch on
     tiny pairwise arrays costs more than tight Python loops over
@@ -165,12 +206,11 @@ def process_page_fast(blocks, merge_cands, dd_cands):
     ``blocks``: list of 10-tuples (x0, y0, x1, y1, conf, direction,
     kind, text, media_ref, gidx) in arrival order — pre-zipped ONCE per
     Arrow batch by extract.py (one list slice per page instead of nine).
-    ``gidx`` is a unique non-negative block id (batch-global span index
-    for small pages, page-local index for large ones); merged blocks
-    get fresh negative ids.
+    ``gidx`` is the batch-global block index, a unique non-negative id;
+    merged blocks get fresh negative ids.
 
     ``merge_cands``: merge-candidate pairs (i<j LOCAL indices passing
-    the J3 predicate, from ``pair_predicates``) or None when the page
+    the J3 predicate, from ``pair_predicates``), empty when the page
     has none.  The greedy used-state semantics equal the reference
     nested loop because candidates arrive in the same (i asc, j asc)
     visit order.
@@ -312,32 +352,5 @@ def process_page_fast(blocks, merge_cands, dd_cands):
     return kinds, texts, refs, orders, stats
 
 
-def process_page(x0, y0, x1, y1, conf, direction, kind, text, media_ref):
-    """Page pipeline for pages over SMALL_PAGE blocks.  All array args
-    are length-n in arrival (offset) order; direction/kind/text/
-    media_ref are object arrays.  Candidate pairs come from a sort-sweep
-    instead of the batched upper triangle; the predicates and the
-    state machine are the small-page ones.  Returns (kinds, texts,
-    refs, orders, stats)."""
-    is_text = kind == "text"
-    dcode = pd.factorize(direction)[0]
-    mi, mj, small, large = [], [], [], []
-    for PI, PJ in _sweep_pairs(x0, y0, x1, y1):
-        mg, _dd, sm, lg = pair_predicates(PI, PJ, x0, y0, x1, y1,
-                                          is_text, dcode)
-        mi.append(np.minimum(PI[mg], PJ[mg]))
-        mj.append(np.maximum(PI[mg], PJ[mg]))
-        small.append(sm)
-        large.append(lg)
-    # merge pairs as (min, max) local indices in (i asc, j asc) order:
-    # the merge greedy's visit order
-    mi, mj = np.concatenate(mi), np.concatenate(mj)
-    o = np.lexsort((mj, mi))
-    blocks = list(zip(
-        x0.tolist(), y0.tolist(), x1.tolist(), y1.tolist(), conf.tolist(),
-        direction.tolist(), kind.tolist(), text.tolist(),
-        media_ref.tolist(), range(len(x0))))
-    return process_page_fast(
-        blocks, list(zip(mi[o].tolist(), mj[o].tolist())),
-        list(zip(np.concatenate(small).tolist(),
-                 np.concatenate(large).tolist())))
+# the dense-page name of the one state machine (see SMALL_PAGE)
+process_page = process_page_fast

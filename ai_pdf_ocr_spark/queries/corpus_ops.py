@@ -24,6 +24,12 @@ _A = 48271
 _P = 2147483647
 
 
+def _id_bucket(m: int):
+    """A doc's hash bucket in [0, m): pmod(pmod(pmod(doc_id, P) * A, P), m)."""
+    return F.pmod(F.pmod(F.pmod("doc_id", F.lit(_P)) * F.lit(_A),
+                         F.lit(_P)), F.lit(m))
+
+
 @register("sample_hash_split", sql=f"""
 SELECT lang, split, CAST(COUNT(*) AS BIGINT) AS n_docs,
        CAST(SUM(n_chars) AS BIGINT) AS total_chars
@@ -43,8 +49,7 @@ def sample_hash_split(spark, sf_dir):
     rerun the same membership).  Output: per (lang, split) doc counts
     — the assignment itself is the per-row ``split`` column."""
     d = load(spark, sf_dir, "documents")
-    bucket = F.pmod(F.pmod(F.pmod("doc_id", F.lit(_P)) * F.lit(_A),
-                           F.lit(_P)), F.lit(100))
+    bucket = _id_bucket(100)
     split = (F.when(bucket < 80, "train")
              .when(bucket < 90, "val").otherwise("test"))
     return (d.select("lang", "n_chars", split.alias("split"))
@@ -249,8 +254,7 @@ def release_pipeline(spark, sf_dir):
     stop_ratio = (F.size(F.filter(toks, lambda t:
                                   F.array_contains(stop_arr, t)))
                   / F.greatest(F.size(toks), F.lit(1)).cast("double"))
-    bucket = F.pmod(F.pmod(F.pmod("doc_id", F.lit(_P)) * F.lit(_A),
-                           F.lit(_P)), F.lit(100))
+    bucket = _id_bucket(100)
     split = (F.when(bucket < 80, "train")
              .when(bucket < 90, "val").otherwise("test"))
     clusters = (dedup_cluster_resolve_scaled(spark, sf_dir)
@@ -340,10 +344,8 @@ def pack_sequences(spark, sf_dir):
     from pyspark.sql import Window
 
     d = load(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower(F.trim("text")), r"\s+"),
-                    lambda t: F.length(t) > 0)
-    shard = F.pmod(F.pmod(F.pmod("doc_id", F.lit(_P)) * F.lit(_A),
-                          F.lit(_P)), F.lit(_NSHARDS)).cast("int")
+    toks = _tokens(F.col("text"))
+    shard = _id_bucket(_NSHARDS).cast("int")
     t = d.select("doc_id", shard.alias("shard"),
                  F.size(toks).cast("long").alias("n_tokens"))
     w = (Window.partitionBy("shard").orderBy("doc_id")

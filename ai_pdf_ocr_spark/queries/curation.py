@@ -22,12 +22,8 @@ from pyspark.sql import types as T
 
 from ..engine import schemas
 from . import load, register
+from .corpus_ops import _A, _P, _id_bucket
 from .dedup import _spread, _tokens
-
-# Lehmer/MINSTD hash constants (shared with corpus_ops — overflow-safe
-# BIGINT arithmetic identical in Spark and DuckDB at 10^12-scale ids)
-_A = 48271
-_P = 2147483647
 
 _WS = r"[ \t\n\x0B\f\r]+"  # Java \s == this class; RE2 \s lacks \x0B
 
@@ -224,8 +220,7 @@ def sample_domain_mixture(spark, sf_dir):
                                * F.col("tgt")
                                / (F.lit(1000.0) * F.col("tot_tokens")))
                        .cast("long")).alias("threshold")))
-    bucket = F.pmod(F.pmod(F.pmod("doc_id", F.lit(_P)) * F.lit(_A),
-                           F.lit(_P)), F.lit(1000000))
+    bucket = _id_bucket(1000000)
     return (t.join(F.broadcast(thr), "lang")
             .where(bucket < F.col("threshold"))
             .groupBy("lang", "threshold", "tot_tokens")

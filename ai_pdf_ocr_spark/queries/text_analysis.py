@@ -31,8 +31,7 @@ FROM documents GROUP BY lang
 def text_token_count(spark, sf_dir):
     """Whitespace token counting (per-doc token stats by language)."""
     d = load(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower(F.trim("text")), r"\s+"),
-                    lambda t: F.length(t) > 0)
+    toks = _tokens(F.col("text"))
     return (
         d.select("lang", F.size(toks).alias("n_tok"))
         .groupBy("lang")
@@ -65,8 +64,7 @@ def text_quality_score(spark, sf_dir):
     """Quality heuristics: punctuation ratio, stopword ratio, and a
     simple keep/drop gate (length + stopword floor)."""
     d = load(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower(F.trim("text")), r"\s+"),
-                    lambda t: F.length(t) > 0)
+    toks = _tokens(F.col("text"))
     stop_arr = F.array(*[F.lit(s) for s in _STOPWORDS])
     punct_ratio = (F.regexp_count("text", F.lit(_PUNCT_SPARK))
                    / F.greatest(F.length("text"), F.lit(1))
@@ -249,7 +247,6 @@ def text_tfidf_top_terms(spark, sf_dir):
     join, not a collected literal).  Top-k is a per-doc window over
     ~|doc vocab| rows — keys are doc_id: no skew, no global window."""
     from pyspark.sql import Window
-    from .dedup import _spread, _tokens
     d = _spread(load(spark, sf_dir, "documents"))
     toks = d.select("doc_id", _tokens(F.col("text")).alias("ts"))
     tfc = (toks.select("doc_id", F.explode("ts").alias("term"))

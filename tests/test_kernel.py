@@ -128,11 +128,16 @@ def test_random_corpus_exact_other_seeds():
 
 
 def test_heavy_tail_corpus_exact():
-    # plus one page on each side of the batched/sweep candidate cutoff
+    # plus one page on each side of the fast/dense label cutoff, and a
+    # two-page doc whose pages share their geometry: a pair across the
+    # two would merge or dedupe blocks of different pages
     boundary = [_dense_page(f"boundary-{n}", random.Random(n), n, 12)
                 for n in (layout.SMALL_PAGE, layout.SMALL_PAGE + 1)]
+    page = _dense_page("two-pages", random.Random(2), 60, 6)
+    page["spans"] += [dict(sp, text="2" + sp["text"][1:],
+                           offset=sp["offset"] + 60) for sp in page["spans"]]
     _assert_corpus_equal(make_documents(30, seed=5, heavy_tail_frac=0.2)
-                         + boundary)
+                         + boundary + [page])
 
 
 def test_empty_and_all_malformed_docs():
@@ -201,6 +206,54 @@ def test_big_page_bounded_memory():
     slack = (got["span_count_in"] - got["span_count_out"] - got["malformed"]
              - got["merged_away"] - got["dedup_removed"] - got["filtered"])
     assert 0 < slack <= got["dropped"], got
+
+
+def test_perfbench_documents_schema_is_the_engines():
+    """The benchmark writes its corpora with its own Arrow schema; it
+    must stay the engine's ``documents`` schema."""
+    from perfbench import corpus
+
+    assert corpus.SCHEMA.equals(_DOCUMENTS_PA)
+
+
+def test_layer_tracer_counts(tmp_path):
+    """``perfbench/replay.py`` times the kernel's layers by rebinding
+    ``extract.decode_flat``/``process_page_fast``/``process_page``;
+    every page must reach it under one of the two page names, dense
+    pages (over SMALL_PAGE blocks) under ``process_page``.  A
+    subprocess, because the tracer rebinds the kernel for good."""
+    import pyarrow.parquet as pq
+    from perfbench.corpus import dense_document
+
+    docs = make_documents(200, seed=17) + [
+        dense_document(f"dense-{n}", 3, n) for n in (300, 450)]
+    src = tmp_path / "docs.parquet"
+    pq.write_table(pa.Table.from_pylist(docs, schema=_DOCUMENTS_PA), src)
+    pages: dict[tuple, int] = {}
+    for d in docs:
+        for sp in d["spans"]:
+            b = O.parse_span(sp["kind"], sp["text"], sp["media_ref"],
+                             sp["offset"])
+            if b is not None:
+                key = (d["doc_id"], b.page)
+                pages[key] = pages.get(key, 0) + 1
+    dense = [n for n in pages.values() if n > layout.SMALL_PAGE]
+    assert len(dense) == 2
+    out = tmp_path / "layers.json"
+    res = subprocess.run(
+        [sys.executable, "perfbench/replay.py", "--input", str(src),
+         "--out", str(out)],
+        cwd=os.path.dirname(os.path.dirname(__file__)),
+        capture_output=True, text=True, timeout=300)
+    assert res.returncode == 0, res.stderr[-2000:]
+    got = json.loads(out.read_text())
+    assert got["kernel.layout.dense.pages"] == 2
+    assert got["kernel.layout.dense.max_blocks"] == max(dense)
+    assert (got["kernel.layout.fast.pages"]
+            + got["kernel.layout.dense.pages"]) == len(pages)
+    assert got["kernel.extract.docs"] == len(docs)
+    assert got["kernel.extract.spans_in"] == sum(len(d["spans"])
+                                                 for d in docs)
 
 
 def test_kernel_idempotent_on_reencoded_output():
@@ -326,14 +379,23 @@ if _HYP:
     @settings(max_examples=20, deadline=None)
     @given(_large_page())
     def test_fuzz_large_page_parity(doc):
-        """Pages over SMALL_PAGE take the sort-sweep candidate path:
-        degenerate geometry must not lose a merge or dedupe pair, in
-        one predicate pass or in many small ones."""
-        want = O.extract_document(doc["spans"])
-        assert _run_kernel([doc])["fuzz-large"] == want
-        chunk, layout.SWEEP_CHUNK = layout.SWEEP_CHUNK, 97
+        """One sort-sweep gives every page of a batch its candidate
+        pairs: degenerate geometry must not lose a merge or dedupe
+        pair, and no pair may leave its page — here a large page sits
+        in one batch with its own copy under a second doc id and a
+        few generator docs, in one predicate pass and in many small
+        ones that straddle page boundaries."""
+        gen = make_documents(3, seed=11)
+        twin = dict(doc, doc_id="fuzz-twin")
+        docs = [gen[0], doc, gen[1], twin, gen[2]]
+        want = O.extract_corpus(gen)
+        want["fuzz-large"] = want["fuzz-twin"] = \
+            O.extract_document(doc["spans"])
+        chunk = layout.SWEEP_CHUNK
         try:
-            assert _run_kernel([doc])["fuzz-large"] == want
+            assert _run_kernel(docs) == want
+            layout.SWEEP_CHUNK = 97
+            assert _run_kernel(docs) == want
         finally:
             layout.SWEEP_CHUNK = chunk
 

@@ -13,15 +13,15 @@ so the kernel matches the spec on every input.  A page outside int64
 switches the page column to Python ints (object dtype): sorting and
 grouping by page stay exact.
 
-Input columns:  kind, text, media_ref, offset
-Output: the valid subset with page:int64 (object past int64),
+Input: the flattened span struct (kind, text, media_ref, offset),
+read as Arrow; only the rows the strict grammar rejects become Python
+strings.
+Output: full-length page:int64 (object past int64),
 x0..y1/conf:float64, direction, out_kind ('text'|'media'), content,
-out_media_ref, offset columns.
+out_media_ref and offset columns, plus the ``valid`` mask.
 """
 
 from __future__ import annotations
-
-from collections.abc import Mapping
 
 import numpy as np
 import pyarrow as pa
@@ -71,34 +71,32 @@ def _parse_payload(kind: str, text: str) -> tuple | None:
     return (page, *coords, conf, direction, content)
 
 
-def decode_flat(flat: Mapping) -> tuple[dict[str, np.ndarray], np.ndarray]:
-    """Decode payloads; returns (dict of valid-row arrays, valid_mask).
+def decode_flat(spans: pa.StructArray) -> tuple[dict, np.ndarray]:
+    """Decode every span of ``spans``; returns (dict of full-length
+    columns, valid_mask).  Rows where ``valid`` is False hold fill
+    values.
 
-    One RE2 ``extract_regex`` over the whole batch plus Arrow casts —
-    no per-row Python for payloads the strict grammar accepts (all but
-    ~0.7 % of the generator's spans, all of them malformed).  The rest
-    go through ``_parse_payload`` and are spliced in place; a malformed
-    row is dropped, never raised (the per-unit error isolation rule,
-    /root/reference/main.py:263-275).  The output is a plain column
+    One RE2 ``extract_regex`` over the Arrow ``text`` column plus Arrow
+    casts — no per-row Python for payloads the strict grammar accepts
+    (all but ~0.7 % of the generator's spans, all of them malformed).
+    Only the rows it rejects become Python strings, parsed by
+    ``_parse_payload`` and spliced in place; a malformed row is marked
+    invalid, never raised (the reference's per-unit error isolation
+    rule, ``main.py:263-275``).  The output is a plain column
     dict (not a DataFrame): block consolidation in the DataFrame
     constructor measured ~15% of the whole kernel.
     """
-    kind_arr = np.asarray(flat["kind"], dtype=object)
-    text_arr = np.asarray(flat["text"], dtype=object)
-    mref_arr = np.asarray(flat["media_ref"], dtype=object)
-    off_arr = np.asarray(flat["offset"])
-    if len(text_arr) == 0:
-        return {c: np.array([], dtype=object) for c in
-                (*_PARSED, "out_kind", "out_media_ref", "offset")}, \
-            np.zeros(0, bool)
-
-    text_pa = pa.array(text_arr, type=pa.string(), from_pandas=True)
-    notna = ~text_pa.is_null().to_numpy(zero_copy_only=False)
-    ext = pc.extract_regex(text_pa, _PAYLOAD_RE)
+    kind, text = spans.field("kind"), spans.field("text")
+    ext = pc.extract_regex(text, _PAYLOAD_RE)
     fast = ext.is_valid().to_numpy(zero_copy_only=False)
+    notna = text.is_valid().to_numpy(zero_copy_only=False)
 
-    kind_media = kind_arr == "raw_media"
-    valid = fast & ((kind_arr == "raw_text") | kind_media)
+    def _is(k: str) -> np.ndarray:
+        return pc.equal(kind, k).fill_null(False) \
+            .to_numpy(zero_copy_only=False)
+
+    media = _is("raw_media")
+    valid = fast & (_is("raw_text") | media)
 
     def _num(name: str, typ) -> np.ndarray:
         col = pc.struct_field(ext, name)
@@ -121,9 +119,11 @@ def decode_flat(flat: Mapping) -> tuple[dict[str, np.ndarray], np.ndarray]:
         .to_numpy(zero_copy_only=False)
 
     # the strict grammar's residue, one CPython parse per row
+    idx = np.flatnonzero(notna & ~fast)
     fb, parsed = [], []
-    for i in np.nonzero(notna & ~fast)[0].tolist():
-        row = _parse_payload(kind_arr[i], text_arr[i])
+    for i, k, t in zip(idx.tolist(), kind.take(idx).to_pylist(),
+                       text.take(idx).to_pylist()):
+        row = _parse_payload(k, t)
         if row is not None:
             fb.append(i)
             parsed.append(row)
@@ -136,9 +136,11 @@ def decode_flat(flat: Mapping) -> tuple[dict[str, np.ndarray], np.ndarray]:
             cols[c][fb] = vals
         valid[fb] = True
 
-    cols["out_kind"] = np.where(kind_media, "media", "text")
-    cols["out_media_ref"] = np.where(kind_media, mref_arr, None)
-    cols["offset"] = off_arr
-    if valid.all():
-        return cols, valid
-    return {c: a[valid] for c, a in cols.items()}, valid
+    cols["out_kind"] = np.where(media, "media", "text")
+    # not pc.if_else: on a sliced string column (pyarrow 16.1) it
+    # returns wrong bytes for some of the selected rows
+    cols["out_media_ref"] = np.where(
+        media, spans.field("media_ref").to_numpy(zero_copy_only=False), None)
+    cols["offset"] = spans.field("offset").fill_null(-1) \
+        .to_numpy(zero_copy_only=False).astype(np.int64)
+    return cols, valid

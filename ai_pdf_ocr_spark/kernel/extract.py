@@ -2,9 +2,12 @@
 (doc_id, spans_out, per-doc metrics).
 
 This is the body of the engine's single fused Arrow stage (SURVEY.md
-§2.9 ``decode_spans`` + ``extract_spans``): the whole batch is
-flattened once, decoded vectorized, then grouped per (doc, page) for
-the layout kernel.  Pages within a doc are processed in ascending page
+§2.9 ``decode_spans`` + ``extract_spans``).  The batch's spans column
+is flattened once, and ``decode_flat`` reads the flat span struct's
+kind/text/media_ref/offset columns as Arrow, returning full-length
+decoded columns plus a ``valid`` mask.  The valid rows are sorted once
+by (doc, page, offset) and grouped per (doc, page) for the layout
+kernel.  Pages within a doc are processed in ascending page
 order with arrival order = the span ``offset`` field (permutation of
 the spans array does not change output).
 """
@@ -24,54 +27,45 @@ KERNEL_VERSION = "1.2.0"
 _METRIC_COLS = ("span_count_in", "span_count_out", "malformed",
                 "merged_away", "dedup_removed", "filtered")
 
+_OUT_SPAN_PA = pa.struct([
+    pa.field("kind", pa.string()),
+    pa.field("text", pa.string()),
+    pa.field("media_ref", pa.string()),
+    pa.field("order", pa.int32()),
+])
 
-def _extract_core(n_docs: int, counts: np.ndarray, kinds, texts, mrefs,
-                  offs) -> tuple:
-    """Extraction over flat per-span arrays (already doc-concatenated).
 
-    Returns (out_counts, flat out_kind/out_text/out_ref/out_order
-    lists, metrics dict of int64 arrays).  Output spans are FLAT,
-    concatenated in doc order (doc i's spans occupy out slots
-    sum(out_counts[:i])... — the page loop visits (doc, page) groups in
-    ascending sorted order, so appending to flat lists is already
-    doc-major; the per-doc nested lists + final flatten of round 1 cost
-    an extra pass over every output value).
-    """
-    total = int(counts.sum())
+def extract_record_batch(rb: pa.RecordBatch) -> pa.RecordBatch:
+    """Arrow-native batch extraction: the list<struct> spans column is
+    flattened zero-copy and decoded as Arrow (no per-span Python dicts
+    in either direction — the pandas dict marshaling was ~5x the kernel
+    cost).  Output spans are emitted FLAT in doc order: the page loop
+    visits (doc, page) groups in ascending sorted order, so appending
+    to flat lists is already doc-major."""
+    n_docs = rb.num_rows
+    spans = rb.column("spans")
+    counts = spans.value_lengths().fill_null(0).to_numpy(
+        zero_copy_only=False).astype(np.int64)
     doc_of = np.repeat(np.arange(n_docs), counts)
-
-    dec, valid = decode_flat({"kind": kinds, "text": texts,
-                              "media_ref": mrefs, "offset": offs})
+    dec, valid = decode_flat(spans.flatten())  # slice/offset-aware
 
     metrics = {c: np.zeros(n_docs, np.int64) for c in _METRIC_COLS}
-    metrics["span_count_in"] = counts.astype(np.int64)
-    if total:
-        metrics["malformed"] = np.bincount(
-            doc_of[~valid], minlength=n_docs).astype(np.int64)
+    metrics["span_count_in"] = counts
+    metrics["malformed"] = np.bincount(doc_of[~valid], minlength=n_docs)
 
     out_counts = np.zeros(n_docs, np.int64)
-    out_kind: list = []
-    out_text: list = []
-    out_ref: list = []
-    out_order: list = []
+    out_kind, out_text, out_ref, out_order = [], [], [], []
 
-    if len(dec["page"]):
-        d_doc = doc_of[valid]
-        d_page = dec["page"]
-        d_off = dec["offset"]
-        # (doc, page) groups with within-page arrival = offset order
-        order = np.lexsort((d_off, d_page, d_doc))
-        d_doc = d_doc[order]
-        d_page = d_page[order]
-        x0 = dec["x0"][order]
-        y0 = dec["y0"][order]
-        x1 = dec["x1"][order]
-        y1 = dec["y1"][order]
-        conf = dec["conf"][order]
-        direction = dec["direction"][order]
-        okind = dec["out_kind"][order]
-        content = dec["content"][order]
-        oref = dec["out_media_ref"][order]
+    # (doc, page) groups with within-page arrival = offset order
+    keep = np.flatnonzero(valid)
+    keep = keep[np.lexsort((dec["offset"][keep], dec["page"][keep],
+                            doc_of[keep]))]
+    if len(keep):
+        d_doc = doc_of[keep]
+        d_page, x0, y0, x1, y1, conf, direction, okind, content, oref = (
+            dec[c][keep] for c in ("page", "x0", "y0", "x1", "y1", "conf",
+                                   "direction", "out_kind", "content",
+                                   "out_media_ref"))
 
         # group boundaries where (doc, page) changes
         change = np.empty(len(d_doc), bool)
@@ -113,50 +107,19 @@ def _extract_core(n_docs: int, counts: np.ndarray, kinds, texts, mrefs,
                 metrics[key][di] += st[key]
 
     metrics["span_count_out"] = out_counts
-    return out_counts, out_kind, out_text, out_ref, out_order, metrics
 
-
-_OUT_SPAN_PA = pa.struct([
-    pa.field("kind", pa.string()),
-    pa.field("text", pa.string()),
-    pa.field("media_ref", pa.string()),
-    pa.field("order", pa.int32()),
-])
-
-
-def extract_record_batch(rb: pa.RecordBatch) -> pa.RecordBatch:
-    """Arrow-native batch extraction: the list<struct> spans column is
-    flattened zero-copy (no per-span Python dicts in either direction —
-    the pandas dict marshaling was ~5x the kernel cost)."""
-    n_docs = rb.num_rows
-    doc_id = rb.column("doc_id")
-    spans = rb.column("spans")
-    counts = spans.value_lengths().fill_null(0).to_numpy(
-        zero_copy_only=False).astype(np.int64)
-    values = spans.flatten()  # StructArray, slice/offset-aware
-    kinds = values.field("kind").to_numpy(zero_copy_only=False)
-    texts = values.field("text").to_numpy(zero_copy_only=False)
-    mrefs = values.field("media_ref").to_numpy(zero_copy_only=False)
-    offs_pa = values.field("offset")
-    offs = offs_pa.fill_null(-1).to_numpy(zero_copy_only=False) \
-        .astype(np.int64)
-
-    out_counts, ok, ot, orf, oo, metrics = _extract_core(
-        n_docs, counts, kinds, texts, mrefs, offs)
-
-    # assemble output list<struct> directly from the flat arrays +
-    # offsets (the core emits doc-major flat lists — no flatten pass)
-    flat_kind = pa.array(ok, type=pa.string())
-    flat_text = pa.array(ot, type=pa.string())
-    flat_ref = pa.array(orf, type=pa.string())
-    flat_order = pa.array(oo, type=pa.int32())
+    # assemble output list<struct> directly from the flat lists +
+    # offsets (no flatten pass)
     struct = pa.StructArray.from_arrays(
-        [flat_kind, flat_text, flat_ref, flat_order],
+        [pa.array(out_kind, type=pa.string()),
+         pa.array(out_text, type=pa.string()),
+         pa.array(out_ref, type=pa.string()),
+         pa.array(out_order, type=pa.int32())],
         fields=list(_OUT_SPAN_PA))
     offsets = pa.array(np.concatenate(([0], np.cumsum(out_counts))),
                        type=pa.int32())
     spans_out = pa.ListArray.from_arrays(offsets, struct)
-    cols = [doc_id, spans_out] + \
+    cols = [rb.column("doc_id"), spans_out] + \
         [pa.array(metrics[c], type=pa.int64()) for c in _METRIC_COLS]
     return pa.RecordBatch.from_arrays(
         cols, names=["doc_id", "spans", *_METRIC_COLS])

@@ -275,7 +275,6 @@ def shard_global_shuffle(spark, sf_dir):
 # --------------------------------------------- corpus distributions
 
 _QUANTS = (0.5, 0.9, 0.99)
-_APPROX_ACC = 10000  # approx_percentile accuracy: rank error <= 1/acc
 
 
 @register("corpus_length_quantiles", sql=f"""
@@ -287,7 +286,7 @@ SELECT lang,
        CAST(COUNT(*) AS BIGINT) AS n_docs
 FROM documents GROUP BY lang
 """)
-def corpus_length_quantiles(spark, sf_dir, approx=False):
+def corpus_length_quantiles(spark, sf_dir):
     """Per-language document-length quantiles (p50/p90/p99) — the
     distribution report that sizes context windows, truncation policy,
     and skew handling for a corpus release.  Spark's ``percentile`` and
@@ -296,23 +295,10 @@ def corpus_length_quantiles(spark, sf_dir, approx=False):
 
     Scale note: exact percentile holds per-group sorted state — fine
     for per-lang groups (|langs| groups, n_chars is one long per doc),
-    but at 100 TB a group's value list is O(docs in the lang).
-    ``approx=True`` is the r5-implemented flip (VERDICT r4 ask #5):
-    ``approx_percentile`` with accuracy {_APPROX_ACC} keeps per-group
-    state O(accuracy) and fully map-side combinable; the report shape
-    is identical and the values are within the algorithm's rank-error
-    bound of exact (pinned vs the exact operator in tests/
-    test_queries.py::test_length_quantiles_approx_flip).  The
-    registered exact form keeps the DuckDB oracle bit-matchable."""
+    but at 100 TB a group's value list is O(docs in the lang)."""
     d = load(spark, sf_dir, "documents")
-    if approx:
-        qs = [F.round(F.expr(
-                  f"approx_percentile(n_chars, {q}, {_APPROX_ACC})")
-              .cast("double"), 4).alias(f"p{int(q * 100)}_chars")
-              for q in _QUANTS]
-    else:
-        qs = [F.round(F.expr(f"percentile(n_chars, {q})"), 4)
-              .alias(f"p{int(q * 100)}_chars") for q in _QUANTS]
+    qs = [F.round(F.expr(f"percentile(n_chars, {q})"), 4)
+          .alias(f"p{int(q * 100)}_chars") for q in _QUANTS]
     return (d.groupBy("lang")
             .agg(*qs, F.max("n_chars").cast("long").alias("max_chars"),
                  F.count("*").alias("n_docs")))

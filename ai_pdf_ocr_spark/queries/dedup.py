@@ -327,48 +327,15 @@ def _minhash_banded_split(items_df, item_col, n_hashes, n_bands,
     return out
 
 
-def _band_pairs(banded, star_over=None):
+def _band_pairs(banded):
     """Distinct (d1 < d2) candidate pairs from band-bucket co-members.
     Only (band, band_key, doc_id) rows shuffle; output is bounded by
     bands * C(BAND_CAP, 2) per bucket thanks to the cap.
 
-    ``star_over`` (ADVICE r4: the hard residual ceiling): buckets with
-    more than ``star_over`` members emit STAR pairs (min_member,
-    member) — O(B) edges instead of C(B,2) — so a bucket of
-    near-identical docs that survived every sub-band split can never
-    go quadratic.  Connectivity contract: star edges preserve the
-    bucket's connected component EXACTLY when the downstream consumer
-    keeps every emitted edge (cluster resolution over raw candidates,
-    or a verify stage on near-IDENTICAL buckets where every edge
-    passes); under a verify threshold that REJECTS some star edges it
-    can under-connect pairs an all-pairs emission would have kept —
-    that is the trade the ceiling buys, so it is opt-in (default None
-    = all-pairs, the fixture-oracled behavior).  Pinned by
-    tests/test_queries.py::test_band_pairs_star_fallback.
-
     The lazy localCheckpoint materializes the banded membership ONCE —
     a self-join otherwise recomputes the whole shingle->signature
     pipeline on both sides (measured: 0 reused exchanges, the broadcast
-    side cannot reuse the probe side's shuffle).  Exactly ONE
-    checkpoint either way: on the star path only ``sized`` is
-    checkpointed (both the cold self-join sides and the star filter
-    read that one materialization; checkpointing the raw ``banded``
-    too would persist the same rows twice for zero reuse — r5
-    code-review)."""
-    if star_over is not None:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("band", "band_key")
-        sized = (banded.withColumn("bsz", F.count("*").over(w))
-                 .withColumn("dmin", F.min("doc_id").over(w))
-                 .localCheckpoint(eager=False))
-        cold = sized.where(F.col("bsz") <= star_over) \
-            .select("doc_id", "band", "band_key")
-        stars = (sized.where((F.col("bsz") > star_over)
-                             & (F.col("doc_id") > F.col("dmin")))
-                 .select(F.col("dmin").alias("d1"),
-                         F.col("doc_id").alias("d2")))
-        return _pair_join(cold).union(stars).distinct()
+    side cannot reuse the probe side's shuffle)."""
     return _pair_join(banded.localCheckpoint(eager=False)).distinct()
 
 
@@ -449,11 +416,7 @@ def dedup_jaccard_verified(spark, sf_dir):
     overflow) this measurably recovers recall vs the r3 drop-cap
     (asserted in tests/test_queries.py::
     test_subbanding_recovers_recall_on_dense_corpus).  If even
-    sub-banded buckets explode: (b) star pairs are WIRED as
-    ``_band_pairs(banded, star_over=...)`` (r5, ADVICE r4) — O(B)
-    edges per residual bucket, opt-in because a verify threshold can
-    reject star edges an all-pairs emission would have kept (see
-    _band_pairs docstring); (c) route boilerplate to the exact-dup
+    sub-banded buckets explode, route boilerplate to the exact-dup
     pass.  The cluster pipeline (dedup_cluster_resolve) builds on the
     EXACT operator, so its recall is 100% by construction
     regardless."""

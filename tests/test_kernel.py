@@ -252,8 +252,11 @@ def test_layer_tracer_counts(tmp_path):
     assert (got["kernel.layout.fast.pages"]
             + got["kernel.layout.dense.pages"]) == len(pages)
     assert got["kernel.extract.docs"] == len(docs)
-    assert got["kernel.extract.spans_in"] == sum(len(d["spans"])
-                                                 for d in docs)
+    n_spans = sum(len(d["spans"]) for d in docs)
+    assert got["kernel.extract.spans_in"] == n_spans
+    # the (dict, valid) decode contract the tracer counts through
+    assert got["kernel.decode.spans"] == n_spans
+    assert got["kernel.decode.malformed"] == n_spans - sum(pages.values())
 
 
 def test_kernel_idempotent_on_reencoded_output():
@@ -269,7 +272,9 @@ def test_decode_matches_oracle_parse_span():
     oracle.parse_span does: the same rows kept, and page, coordinates
     (bit for bit), conf, direction, content and media_ref equal —
     including payloads only CPython's int()/float() parse (the strict
-    fast grammar rejects them) and pages that do not fit int64."""
+    fast grammar rejects them) and pages that do not fit int64.  The
+    span struct is decoded whole and as a slice with a nonzero offset,
+    which is what every sliced batch hands the decoder."""
     import numpy as np
 
     from ai_pdf_ocr_spark.kernel.decode import decode_flat
@@ -292,29 +297,41 @@ def test_decode_matches_oracle_parse_span():
     for page in ("1_0", "99999999999999999999", "-99999999999999999999"):
         adv += [f"{page};1,2,3,4|p", f"{page}; 1,2,3,4|p ws coord"]
         kinds += ["raw_text", "raw_media"]
-    # plus every payload the fixture generator can emit
-    fuzz = [s["text"] for d in make_documents(80, seed=101)
-            for s in d["spans"]]
-    texts = adv + fuzz
-    kinds = kinds + ["raw_text"] * len(fuzz)
+    # a null kind and a null media text: both malformed
+    adv += ["1;1,2,3,4|null kind", None]
+    kinds += [None, "raw_media"]
+    # plus every payload the fixture generator can emit, in front: the
+    # slice's last rows (media among them) are where a decoder that
+    # misreads a sliced string column goes wrong
+    fuzz = [s for d in make_documents(80, seed=101) for s in d["spans"]]
+    texts = [s["text"] for s in fuzz] + adv
+    kinds = [s["kind"] for s in fuzz] + kinds
     refs = [f"m{i}" for i in range(len(texts))]
-    dec, valid = decode_flat({"kind": kinds, "text": texts,
-                              "media_ref": refs,
-                              "offset": np.arange(len(texts))})
-    want = [O.parse_span(k, t, r, i)
+    rows = [{"kind": k, "text": t, "media_ref": r, "offset": i}
             for i, (k, t, r) in enumerate(zip(kinds, texts, refs))]
-    assert valid.tolist() == [b is not None for b in want]
+    want = [O.parse_span(r["kind"], r["text"], r["media_ref"], r["offset"])
+            for r in rows]
     kept = [b for b in want if b is not None]
     assert len(kept) < len(texts)
+    span_t = _DOCUMENTS_PA.field("spans").type.value_type
+    filler = [{"kind": "raw_media", "text": f"{i};9,9,9,9|filler",
+               "media_ref": "filler", "offset": -1} for i in range(7)]
+    big = pa.array(filler + rows, type=span_t)
+    sliced = big.slice(7, len(rows))
+    assert sliced.offset == 7
     bits = lambda v: np.float64(v).view("u8")  # noqa: E731
-    for j, b in enumerate(kept):
-        assert dec["page"][j] == b.page, b
-        for c in ("x0", "y0", "x1", "y1", "conf"):
-            assert bits(dec[c][j]) == bits(getattr(b, c)), (c, b)
-        assert (dec["direction"][j], dec["content"][j],
-                dec["out_kind"][j], dec["out_media_ref"][j],
-                dec["offset"][j]) == \
-            (b.direction, b.text, b.kind, b.media_ref, b.offset), b
+    for spans in (pa.array(rows, type=span_t), sliced):
+        dec, valid = decode_flat(spans)
+        assert valid.tolist() == [b is not None for b in want]
+        assert all(len(a) == len(rows) for a in dec.values())
+        for j, b in zip(np.flatnonzero(valid).tolist(), kept):
+            assert dec["page"][j] == b.page, b
+            for c in ("x0", "y0", "x1", "y1", "conf"):
+                assert bits(dec[c][j]) == bits(getattr(b, c)), (c, b)
+            assert (dec["direction"][j], dec["content"][j],
+                    dec["out_kind"][j], dec["out_media_ref"][j],
+                    dec["offset"][j]) == \
+                (b.direction, b.text, b.kind, b.media_ref, b.offset), b
 
 
 # ---- hypothesis fuzz: decode grammar + full-pipeline parity --------

@@ -572,78 +572,16 @@ def test_duplicate_spans_within_doc_repeat(spark, tmp_path):
     assert rows[3].n_dup_windows == 1
 
 
-def test_band_pairs_star_fallback(spark):
-    """The hard residual ceiling (ADVICE r4): a band bucket over
-    ``star_over`` emits O(B) star edges instead of C(B,2) pairs, cold
-    buckets keep exact all-pairs, and the star edge set spans EXACTLY
-    the same connected components as the all-pairs emission."""
+def test_band_pairs_all_pairs(spark):
+    """Every band bucket emits each (d1 < d2) co-member pair once: all
+    C(100, 2) pairs of the hot bucket plus the one pair of bucket a."""
     from ai_pdf_ocr_spark.queries.dedup import _band_pairs
     rows = [(i, 0, "hot") for i in range(100)] + \
            [(200, 1, "a"), (201, 1, "a"), (300, 2, "b")]
     banded = spark.createDataFrame(
         rows, "doc_id long, band int, band_key string")
     allp = {(r.d1, r.d2) for r in _band_pairs(banded).collect()}
-    star = {(r.d1, r.d2) for r in
-            _band_pairs(banded, star_over=64).collect()}
     assert len(allp) == 100 * 99 // 2 + 1
-    assert len(star) == 99 + 1, "hot bucket must emit O(B) star edges"
-    assert star - allp == set(), "star edges must be a subset"
-
-    def components(pairs, nodes):
-        parent = {n: n for n in nodes}
-
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for a, b in pairs:
-            parent[find(a)] = find(b)
-        groups = {}
-        for n in nodes:
-            groups.setdefault(find(n), set()).add(n)
-        return sorted(map(frozenset, groups.values()), key=min)
-
-    nodes = {r[0] for r in rows}
-    assert components(star, nodes) == components(allp, nodes)
-
-
-def test_length_quantiles_approx_flip(spark):
-    """The 100 TB state flip (VERDICT r4 ask #5b): approx_percentile
-    (accuracy A -> rank error <= n/A) must agree with the exact
-    operator on every non-quantile column and land within
-    ceil(n/A) order statistics of each exact quantile — at the test
-    corpus sizes that is the two neighboring ranks the exact linear
-    interpolation sits between, and the bound widens correctly if the
-    suite ever runs against a corpus with >A docs per lang (r5
-    code-review)."""
-    import math
-
-    from ai_pdf_ocr_spark.queries.curation import (_APPROX_ACC,
-                                                   corpus_length_quantiles)
-    exact = {r.lang: r for r in
-             corpus_length_quantiles(spark, SF_DIR).collect()}
-    approx = {r.lang: r for r in
-              corpus_length_quantiles(spark, SF_DIR, approx=True)
-              .collect()}
-    assert set(exact) == set(approx)
-    lens = {r.lang: sorted(x.n_chars for x in rows) for r in exact.values()
-            for rows in [spark.read.parquet(f"{SF_DIR}/documents.parquet")
-                         .where(f"lang = '{r.lang}'")
-                         .select("n_chars").collect()]}
-    for lang, e in exact.items():
-        a = approx[lang]
-        assert a.max_chars == e.max_chars and a.n_docs == e.n_docs
-        vals = lens[lang]
-        err = max(0, math.ceil(len(vals) / _APPROX_ACC) - 1)
-        for q, c in ((0.5, "p50_chars"), (0.9, "p90_chars"),
-                     (0.99, "p99_chars")):
-            idx = (len(vals) - 1) * q
-            lo = vals[max(0, int(idx) - err)]
-            hi = vals[min(int(idx) + 1 + err, len(vals) - 1)]
-            got = getattr(a, c)
-            assert lo <= got <= hi, (lang, c, lo, got, hi)
 
 
 def test_pq_rerank_recovers_exact_order(spark, tmp_path):

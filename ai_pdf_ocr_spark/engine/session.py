@@ -16,6 +16,17 @@ from pyspark.sql import SparkSession
 # overhead, 8k+ batches lose cache locality (exp on 192k-doc corpus)
 ARROW_BATCH = 4096
 
+# the master-independent settings: build_session puts them on its
+# builder and submit_job.py sets them on the spark-submit session, so
+# tests, benches and the production job run one configuration
+RUNTIME_CONF = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.execution.arrow.maxRecordsPerBatch": str(ARROW_BATCH),
+    "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+}
+
 
 def default_cpus() -> int:
     """Parallelism when no master is given: $SPARK_GRAFT_CPUS (a
@@ -44,11 +55,7 @@ def build_session(app: str = "ai-pdf-ocr-spark", master: str | None = None,
     return (
         builder
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH))
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config(map=RUNTIME_CONF)
         .config("spark.driver.memory",
                 os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")

@@ -70,8 +70,7 @@ def _doc_keys(batch_df: DataFrame) -> DataFrame:
     over the concatenated text-span token stream (16 perms x 4 bands,
     the same family as queries/dedup.py — xxhash64, JVM-side), uncapped
     because a history band is a signature, not a pair generator."""
-    from ..queries.dedup import (N_BANDS, N_HASHES, _band_rows,
-                                 _minhash_sig, _tokens)
+    from ..queries.dedup import token_bands
 
     exact = batch_df.select(
         "doc_id", F.lit("md5").alias("kind"),
@@ -80,11 +79,7 @@ def _doc_keys(batch_df: DataFrame) -> DataFrame:
         F.transform(
             F.filter("spans", lambda s: s["kind"] == "raw_text"),
             lambda s: s["text"]), " ")
-    tok = (batch_df.select("doc_id", F.explode(F.array_distinct(
-        _tokens(text))).alias("tok")))
-    banded = _band_rows(_minhash_sig(tok, "tok", N_HASHES),
-                        N_HASHES, N_BANDS)
-    bands = banded.select(
+    bands = token_bands(batch_df, text).select(
         "doc_id", F.concat(F.lit("b"), F.col("band")).alias("kind"),
         F.col("band_key").cast("string").alias("key"))
     return exact.union(bands)

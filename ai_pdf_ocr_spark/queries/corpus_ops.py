@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from . import FIXTURE_DIR, load, register
-from .dedup import _spread, _tokens
+from .dedup import _spread, _tokens, shingles
 
 # Lehmer/MINSTD multiplicative hash over the Mersenne prime 2^31-1:
 # identical BIGINT arithmetic in Spark and DuckDB AND overflow-safe at
@@ -28,6 +28,14 @@ def _id_bucket(m: int):
     """A doc's hash bucket in [0, m): pmod(pmod(pmod(doc_id, P) * A, P), m)."""
     return F.pmod(F.pmod(F.pmod("doc_id", F.lit(_P)) * F.lit(_A),
                          F.lit(_P)), F.lit(m))
+
+
+def _split():
+    """A doc's 80/10/10 train/val/test split from its 100-way id
+    bucket."""
+    bucket = _id_bucket(100)
+    return (F.when(bucket < 80, "train")
+            .when(bucket < 90, "val").otherwise("test"))
 
 
 @register("sample_hash_split", sql=f"""
@@ -49,10 +57,7 @@ def sample_hash_split(spark, sf_dir):
     rerun the same membership).  Output: per (lang, split) doc counts
     — the assignment itself is the per-row ``split`` column."""
     d = load(spark, sf_dir, "documents")
-    bucket = _id_bucket(100)
-    split = (F.when(bucket < 80, "train")
-             .when(bucket < 90, "val").otherwise("test"))
-    return (d.select("lang", "n_chars", split.alias("split"))
+    return (d.select("lang", "n_chars", _split().alias("split"))
             .groupBy("lang", "split")
             .agg(F.count("*").alias("n_docs"),
                  F.sum("n_chars").cast("long").alias("total_chars")))
@@ -111,15 +116,7 @@ def decontaminate_ngram_overlap(spark, sf_dir):
     Scale shape: the eval side is small by definition -> its shingle
     set BROADCASTS; the training side streams through the join without
     shuffling, and only (doc_id, counts) rows aggregate."""
-    d = _spread(load(spark, sf_dir, "documents"))
-    tokd = d.select("doc_id", _tokens(F.col("text")).alias("toks"))
-    toks = F.col("toks")
-    shingles = F.transform(
-        F.sequence(F.lit(0), F.greatest(F.size(toks) - 3, F.lit(0))),
-        lambda i: F.concat_ws(" ", F.slice(toks, i + 1, 3)))
-    sh = (tokd.select("doc_id", F.explode(F.array_distinct(shingles))
-                      .alias("shingle"))
-          .where(F.length("shingle") > 0))
+    sh = shingles(_spread(load(spark, sf_dir, "documents")))
     ev = (sh.where(F.col("doc_id") < _EVAL_MAX_ID)
           .select(F.col("doc_id").alias("eval_doc"),
                   F.col("shingle").alias("ev_shingle")))
@@ -246,25 +243,16 @@ def release_pipeline(spark, sf_dir):
     contaminated-id list (bounded by the training docs that overlap
     the eval set)."""
     from .dedup import dedup_cluster_resolve_scaled
-    from .text_analysis import _STOPWORDS
+    from .text_analysis import _quality_keep, _stop_ratio
 
     d = load(spark, sf_dir, "documents")
-    toks = _tokens(F.col("text"))
-    stop_arr = F.array(*[F.lit(s) for s in _STOPWORDS])
-    stop_ratio = (F.size(F.filter(toks, lambda t:
-                                  F.array_contains(stop_arr, t)))
-                  / F.greatest(F.size(toks), F.lit(1)).cast("double"))
-    bucket = _id_bucket(100)
-    split = (F.when(bucket < 80, "train")
-             .when(bucket < 90, "val").otherwise("test"))
     clusters = (dedup_cluster_resolve_scaled(spark, sf_dir)
                 .select("doc_id", "cluster_id"))
     contaminated = (decontaminate_ngram_overlap(spark, sf_dir)
                     .select("doc_id").withColumn("_c", F.lit(True)))
     base = (d.where(F.col("doc_id") >= _EVAL_MAX_ID)
-            .select("doc_id", "lang", split.alias("split"),
-                    ((F.col("n_chars") >= 100) & (stop_ratio >= 0.05))
-                    .alias("_q"))
+            .select("doc_id", "lang", _split().alias("split"),
+                    _quality_keep(_stop_ratio()).alias("_q"))
             .join(clusters, "doc_id")
             # reps below derives from base and joins back: materialize
             # once (lazy) or the stop-ratio tokenize + cluster join run

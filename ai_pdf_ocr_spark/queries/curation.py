@@ -23,7 +23,7 @@ from pyspark.sql import types as T
 from ..engine import schemas
 from . import load, register
 from .corpus_ops import _A, _P, _id_bucket
-from .dedup import _spread, _tokens
+from .dedup import _ngrams, _spread, _tokens
 
 _WS = r"[ \t\n\x0B\f\r]+"  # Java \s == this class; RE2 \s lacks \x0B
 
@@ -119,11 +119,9 @@ def text_repetition_stats(spark, sf_dir):
     per = per.localCheckpoint(eager=False)
     # ts is a materialized column, so the HOF lambda references a leaf
     # — no per-element re-evaluation (CLAUDE.md HOF trap)
-    bigrams = F.transform(
-        F.sequence(F.lit(0), F.size("ts") - 2),
-        lambda i: F.concat_ws(" ", F.slice("ts", i + 1, 2)))
     bg = (per.where(F.col("n_tok") >= 2)
-          .select("doc_id", F.explode(bigrams).alias("bigram")))
+          .select("doc_id", F.explode(_ngrams(F.col("ts"), 2))
+                  .alias("bigram")))
     bgc = bg.groupBy("doc_id", "bigram").agg(F.count("*").alias("cnt"))
     w = Window.partitionBy("doc_id").orderBy(F.desc("cnt"),
                                              F.desc("bigram"))
@@ -332,11 +330,8 @@ def corpus_top_ngrams(spark, sf_dir):
     engines so the cut at N is deterministic."""
     d = _spread(load(spark, sf_dir, "documents"))
     base = d.select(_tokens(F.col("text")).alias("ts"))
-    bigrams = F.transform(
-        F.sequence(F.lit(0), F.size("ts") - 2),
-        lambda i: F.concat_ws(" ", F.slice("ts", i + 1, 2)))
     return (base.where(F.size("ts") >= 2)
-            .select(F.explode(bigrams).alias("bigram"))
+            .select(F.explode(_ngrams(F.col("ts"), 2)).alias("bigram"))
             .groupBy("bigram")
             .agg(F.count("*").alias("n_occurrences"))
             .orderBy(F.desc("n_occurrences"), "bigram")

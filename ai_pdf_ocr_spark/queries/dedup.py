@@ -28,6 +28,17 @@ def _tokens(col):
                     lambda t: F.length(t) > 0)
 
 
+def _ngrams(toks, n):
+    """Word n-grams of the token-array column ``toks`` (a materialized
+    column, never an expression — CLAUDE.md HOF trap), space-joined in
+    order.  An array shorter than ``n`` gives one shorter n-gram (empty
+    for no tokens); callers that want full n-grams only filter
+    ``size >= n`` first."""
+    return F.transform(
+        F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0))),
+        lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)))
+
+
 def _spread(d, col="doc_id"):
     """Hash-repartition to defaultParallelism before expression-heavy
     per-row work.  The testdata corpus is ONE small parquet file -> the
@@ -241,6 +252,19 @@ def _band_rows(sig, n_hashes, n_bands, cols=("doc_id",)):
                     F.col("bk.band_key").alias("band_key")))
 
 
+def token_bands(df, text, cols=("doc_id",)):
+    """(cols..., band, band_key) rows of the cross-epoch signature
+    family: distinct ``_tokens(text)`` -> N_HASHES-perm MinHash ->
+    N_BANDS uncapped band keys (a history band is a signature, not a
+    pair generator).  The one definition the streaming history
+    (engine/streaming.py::_doc_keys) and its batch twin
+    ``dedup_cross_epoch`` both write."""
+    tok = df.select(*cols, F.explode(F.array_distinct(_tokens(text)))
+                    .alias("tok"))
+    return _band_rows(_minhash_sig(tok, "tok", N_HASHES, group_cols=cols),
+                      N_HASHES, N_BANDS, cols=cols)
+
+
 def _minhash_banded(items_df, item_col, n_hashes, n_bands):
     """(doc_id, item) rows -> (doc_id, band, band_key) membership with
     band buckets of more than BAND_CAP members dropped.
@@ -336,12 +360,7 @@ def _band_pairs(banded):
     a self-join otherwise recomputes the whole shingle->signature
     pipeline on both sides (measured: 0 reused exchanges, the broadcast
     side cannot reuse the probe side's shuffle)."""
-    return _pair_join(banded.localCheckpoint(eager=False)).distinct()
-
-
-def _pair_join(banded):
-    """Raw (d1 < d2) co-member pairs of an already-materialized (or
-    cheap-to-rescan) banded membership — callers own dedup/checkpoint."""
+    banded = banded.localCheckpoint(eager=False)
     a = banded.alias("a")
     b = banded.alias("b")
     return (
@@ -350,7 +369,26 @@ def _pair_join(banded):
                & (F.col("a.doc_id") < F.col("b.doc_id")))
         .select(F.col("a.doc_id").alias("d1"),
                 F.col("b.doc_id").alias("d2"))
+        .distinct()
     )
+
+
+def shingles(d):
+    """(doc_id, shingle): each doc's distinct word-3-gram shingles over
+    ``_tokens(text)``, empties dropped — the one shingle table the
+    MinHash candidates and the decontamination screen both key on.  A
+    doc of one or two tokens is its own single shingle (the oracles'
+    ``GREATEST(LENGTH(ts) - 2, 1)``)."""
+    # materialize toks as a column FIRST: referencing the raw _tokens
+    # expression inside the transform lambda made Catalyst re-tokenize
+    # the document once per shingle index (O(len^2) string work,
+    # measured 3.6s single-task at sf0.1); the Generate boundary keeps
+    # the projection from being collapsed back into the lambda
+    tokd = d.select("doc_id", _tokens(F.col("text")).alias("toks"))
+    return (tokd.select("doc_id",
+                        F.explode(F.array_distinct(
+                            _ngrams(F.col("toks"), 3))).alias("shingle"))
+            .where(F.length("shingle") > 0))
 
 
 @register("dedup_minhash_lsh", sql=fixture_sql("dedup_minhash_lsh"))
@@ -360,22 +398,7 @@ def dedup_minhash_lsh(spark, sf_dir):
 
     Oracle: pure-Python XXH64 twin (tests/oracle_sketches.py) via
     gen_fixtures.py — DuckDB has no xxhash64."""
-    d = _spread(load(spark, sf_dir, "documents"))
-    # materialize toks as a column FIRST: referencing the raw _tokens
-    # expression inside the transform lambda made Catalyst re-tokenize
-    # the document once per shingle index (O(len^2) string work,
-    # measured 3.6s single-task at sf0.1); the Generate boundary keeps
-    # the projection from being collapsed back into the lambda
-    tokd = d.select("doc_id", _tokens(F.col("text")).alias("toks"))
-    toks = F.col("toks")
-    # word 3-gram shingles via transform over an index range (array HOFs,
-    # no explode until the shingle stream is final)
-    shingles = F.transform(
-        F.sequence(F.lit(0), F.greatest(F.size(toks) - 3, F.lit(0))),
-        lambda i: F.concat_ws(" ", F.slice(toks, i + 1, 3)))
-    sh = (tokd.select("doc_id", F.explode(F.array_distinct(shingles))
-                      .alias("shingle"))
-          .where(F.length("shingle") > 0))
+    sh = shingles(_spread(load(spark, sf_dir, "documents")))
     banded = _minhash_banded(sh, "shingle", N_HASHES, N_BANDS)
     return _band_pairs(banded)
 
@@ -750,12 +773,7 @@ def dedup_cross_epoch(spark, sf_dir):
     # near: LSH band keys (16 perms x 4 bands, the streaming history
     # family) -> first epoch per (band, key); no cap — history store
     # semantics, a band bucket is a signature not a pair generator
-    tok = d.select("doc_id", "epoch",
-                   F.explode(F.array_distinct(_tokens(F.col("text"))))
-                   .alias("tok"))
-    sig = _minhash_sig(tok, "tok", N_HASHES,
-                       group_cols=("doc_id", "epoch"))
-    banded = (_band_rows(sig, N_HASHES, N_BANDS, cols=("doc_id", "epoch"))
+    banded = (token_bands(d, F.col("text"), cols=("doc_id", "epoch"))
               .localCheckpoint(eager=False))
     bmin = (banded.groupBy("band", "band_key")
             .agg(F.min("epoch").alias("e0")))
@@ -834,9 +852,7 @@ def dedup_duplicate_spans(spark, sf_dir):
             .select("doc_id", "ts",
                     (F.size("ts") - (_SPAN_W - 1)).cast("long")
                     .alias("n_windows")))
-    win_str = F.explode(F.transform(
-        F.sequence(F.lit(0), F.size("ts") - _SPAN_W),
-        lambda i: F.concat_ws(" ", F.slice("ts", i + 1, _SPAN_W))))
+    win_str = F.explode(_ngrams(F.col("ts"), _SPAN_W))
     # map-side: the window string never leaves the explode stage
     wins = (base.select("doc_id", win_str.alias("win"))
             .select("doc_id", F.xxhash64("win").alias("win")))

@@ -515,7 +515,43 @@ FROM probe p ASOF LEFT JOIN ref m
 """
 
 
-@register("j_events_asof", sql=_ASOF_SQL)
+def _asof_sides(e):
+    """(probe, ref) rows of the as-of join: 'error' events tagged
+    side 1 with null match columns, 'click' events tagged side 0
+    carrying their own id and time as the match (m_id, m_us)."""
+    us = F.unix_micros(F.col("ts").cast("timestamp"))
+    probe = (e.where(F.col("event_type") == "error")
+             .select("event_id", "user_id", us.alias("ts_us"),
+                     F.lit(1).alias("side"),
+                     F.lit(None).cast("long").alias("m_id"),
+                     F.lit(None).cast("long").alias("m_us")))
+    ref = (e.where(F.col("event_type") == "click")
+           .select("event_id", "user_id", us.alias("ts_us"),
+                   F.lit(0).alias("side"),
+                   F.col("event_id").alias("m_id"), us.alias("m_us")))
+    return probe, ref
+
+
+def _asof_match(rows, *part):
+    """The as-of select over unioned side-tagged rows: within each
+    ``part`` window ordered (ts_us, side, event_id), a probe row takes
+    ``last(..., ignorenulls)`` of the match columns at or before it;
+    output (event_id, user_id, ts_us, matched_click_id, gap_us)."""
+    from pyspark.sql import Window
+    w = (Window.partitionBy(*part)
+         .orderBy("ts_us", "side", "event_id")
+         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    return (rows
+            .select("event_id", "user_id", "ts_us", "side",
+                    F.last("m_id", ignorenulls=True).over(w)
+                    .alias("matched_click_id"),
+                    F.last("m_us", ignorenulls=True).over(w).alias("m_us"))
+            .where(F.col("side") == 1)
+            .select("event_id", "user_id", "ts_us", "matched_click_id",
+                    (F.col("ts_us") - F.col("m_us")).alias("gap_us")))
+
+
+@micro("j_events_asof", sql=_ASOF_SQL)
 def j_events_asof(spark, sf_dir):
     """AS-OF join: for each 'error' event, the most recent 'click' by
     the same user at-or-before the error's timestamp — the temporal
@@ -536,33 +572,13 @@ def j_events_asof(spark, sf_dir):
     O(probe x ref) explosion of an inequality theta-join, and no
     per-row Python.  Skewed users (one user = one partition's sort) are
     the known hazard; ``j_events_asof_bucketed`` below is the
-    skew-hardened variant (coarse time-bucket in the partition key +
-    carry-forward of each bucket's last reference row), equal output
-    by construction (same oracle; equality + skew pinned in
+    skew-hardened scale path (coarse time-bucket in the partition key
+    + carry-forward of each bucket's last reference row) over the same
+    two helpers, so this exact baseline is a probe of
+    ``suite_exactness_twins`` (equality + skew pinned in
     tests/test_plans.py)."""
-    from pyspark.sql import Window
-    e = load(spark, sf_dir, "events")
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
-    probe = (e.where(F.col("event_type") == "error")
-             .select("event_id", "user_id", us.alias("ts_us"),
-                     F.lit(1).alias("side"),
-                     F.lit(None).cast("long").alias("m_id"),
-                     F.lit(None).cast("long").alias("m_us")))
-    ref = (e.where(F.col("event_type") == "click")
-           .select("event_id", "user_id", us.alias("ts_us"),
-                   F.lit(0).alias("side"),
-                   F.col("event_id").alias("m_id"), us.alias("m_us")))
-    w = (Window.partitionBy("user_id")
-         .orderBy("ts_us", "side", "event_id")
-         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    return (probe.unionByName(ref)
-            .select("event_id", "user_id", "ts_us", "side",
-                    F.last("m_id", ignorenulls=True).over(w)
-                    .alias("matched_click_id"),
-                    F.last("m_us", ignorenulls=True).over(w).alias("m_us"))
-            .where(F.col("side") == 1)
-            .select("event_id", "user_id", "ts_us", "matched_click_id",
-                    (F.col("ts_us") - F.col("m_us")).alias("gap_us")))
+    probe, ref = _asof_sides(load(spark, sf_dir, "events"))
+    return _asof_match(probe.unionByName(ref), "user_id")
 
 
 # 6-hour coarse time buckets: the skew dial for the as-of join.  At
@@ -599,18 +615,9 @@ def j_events_asof_bucketed(spark, sf_dir):
     (user, bucket).  Equality vs the unbucketed operator on a 50%-skew
     corpus is pinned in tests/test_plans.py."""
     from pyspark.sql import Window
-    e = load(spark, sf_dir, "events")
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
-    bkt = F.floor(us / _ASOF_BUCKET_US).cast("long")
-    probe = (e.where(F.col("event_type") == "error")
-             .select("event_id", "user_id", us.alias("ts_us"),
-                     bkt.alias("bkt"), F.lit(1).alias("side"),
-                     F.lit(None).cast("long").alias("m_id"),
-                     F.lit(None).cast("long").alias("m_us")))
-    ref = (e.where(F.col("event_type") == "click")
-           .select("event_id", "user_id", us.alias("ts_us"),
-                   bkt.alias("bkt"), F.lit(0).alias("side"),
-                   F.col("event_id").alias("m_id"), us.alias("m_us")))
+    bkt = F.floor(F.col("ts_us") / _ASOF_BUCKET_US).cast("long")
+    probe, ref = (s.withColumn("bkt", bkt) for s in
+                  _asof_sides(load(spark, sf_dir, "events")))
     # last reference per (user, bucket): lexicographic struct max ==
     # latest ts, ties to max id — the same tie-break the window form
     # resolves via its (ts, side, event_id) ordering
@@ -629,17 +636,8 @@ def j_events_asof_bucketed(spark, sf_dir):
                         "bkt", F.lit(-1).alias("side"),
                         F.col("carry.m_id").alias("m_id"),
                         F.col("carry.m_us").alias("m_us"))
-    w = (Window.partitionBy("user_id", "bkt")
-         .orderBy("ts_us", "side", "event_id")
-         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    return (probe.unionByName(ref).unionByName(seed)
-            .select("event_id", "user_id", "ts_us", "side",
-                    F.last("m_id", ignorenulls=True).over(w)
-                    .alias("matched_click_id"),
-                    F.last("m_us", ignorenulls=True).over(w).alias("m_us"))
-            .where(F.col("side") == 1)
-            .select("event_id", "user_id", "ts_us", "matched_click_id",
-                    (F.col("ts_us") - F.col("m_us")).alias("gap_us")))
+    return _asof_match(probe.unionByName(ref).unionByName(seed),
+                       "user_id", "bkt")
 
 
 # ------------------------------------- streaming analytics batch twins

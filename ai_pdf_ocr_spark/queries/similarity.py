@@ -31,6 +31,10 @@ def _cosine(a, b):
     return dot / (na * nb)
 
 
+def _query_vec(e, emb):
+    return F.broadcast(e.where(F.col("vec_id") == 0).select(emb.alias("qe")))
+
+
 @micro("ann_bruteforce_topk", sql="""
 WITH q AS (
   SELECT embedding AS qe FROM embeddings WHERE vec_id = 0
@@ -52,11 +56,9 @@ def ann_bruteforce_topk(spark, sf_dir):
     """Exact cosine top-10 neighbors of vec_id=0 (broadcast query vec)."""
     e = load(spark, sf_dir, "embeddings")
     emb = F.transform("embedding", lambda x: x.cast("double"))
-    q = e.where(F.col("vec_id") == 0) \
-        .select(emb.alias("qe"))
     scored = (
         e.where(F.col("vec_id") != 0)
-        .crossJoin(F.broadcast(q))
+        .crossJoin(_query_vec(e, emb))
         .select("vec_id", "label",
                 F.round(_cosine(emb, F.col("qe")), 4).alias("cosine"))
     )
@@ -133,10 +135,6 @@ def _bucket_sig(emb):
         bit = F.when(_plane_dot(emb, p) >= 0, F.lit(1 << p)).otherwise(0)
         sig = bit if sig is None else sig + bit
     return sig
-
-
-def _query_vec(e, emb):
-    return F.broadcast(e.where(F.col("vec_id") == 0).select(emb.alias("qe")))
 
 
 @register("ann_lsh_bucketed", sql=fixture_sql("ann_lsh_bucketed"))
@@ -306,17 +304,6 @@ def _ivf_assign_py(e, cens):
     return best
 
 
-def _ivf_train(sample):
-    """Deterministic k-means on the (bounded, ordered) training sample
-    — plain sequential float64 ops so the fixture twin reproduces every
-    intermediate.  init = first K sample vectors; an emptied list keeps
-    its previous centroid (standard IVF trainer behavior).  Delegates
-    to the ONE Lloyd loop shared with the PQ trainer (code-review r4:
-    duplicated bit-exactness-sensitive loops were a silent-divergence
-    hazard)."""
-    return _kmeans_py(sample, IVF_K, IVF_ITERS)
-
-
 def _stride_sample(e):
     """THE bounded, ordered training sample every ANN trainer uses —
     vec_id % IVF_SAMPLE_STRIDE == 1, first IVF_SAMPLE_CAP rows by
@@ -339,12 +326,12 @@ def _query_emb(e):
                 .select(emb.alias("emb")).first().emb)
 
 
-def _nearest_lists(q_emb, cens, nprobe=IVF_NPROBE):
-    """The probe set: the nprobe lists whose centroids are nearest the
-    query, ranked driver-side (K tiny; ties keep the lowest cid)."""
+def _nearest_lists(q_emb, cens):
+    """The probe set: the IVF_NPROBE lists whose centroids are nearest
+    the query, ranked driver-side (K tiny; ties keep the lowest cid)."""
     return [cid for _, cid in
             sorted((_l2_sq(q_emb, c), cid)
-                   for cid, c in enumerate(cens))[:nprobe]]
+                   for cid, c in enumerate(cens))[:IVF_NPROBE]]
 
 
 @register("ann_ivf_topk", sql=fixture_sql("ann_ivf_topk"))
@@ -380,7 +367,7 @@ def ann_ivf_topk(spark, sf_dir):
     e = load(spark, sf_dir, "embeddings")
     emb = F.transform("embedding", lambda x: x.cast("double"))
 
-    cens = _ivf_train(_stride_sample(e))
+    cens = _kmeans_py(_stride_sample(e), IVF_K, IVF_ITERS)
     probed = _nearest_lists(_query_emb(e), cens)
     cen_row = schemas.local_frame(spark, [{"cens": list(enumerate(cens))}],
                                   T.StructType.fromDDL(_CENS))
@@ -388,9 +375,8 @@ def ann_ivf_topk(spark, sf_dir):
                                 .withColumn("emb", emb)
                                 .crossJoin(F.broadcast(cen_row)))
 
-    q = e.where(F.col("vec_id") == 0).select(emb.alias("qe"))
     top = (assigned.where(F.col("list_id").isin(probed))
-           .crossJoin(F.broadcast(q))
+           .crossJoin(_query_vec(e, emb))
            .select("vec_id", "label", "list_id",
                    _cosine(F.col("emb"), F.col("qe")).alias("_c"))
            .orderBy(F.desc("_c"), "vec_id").limit(10))
@@ -409,10 +395,11 @@ PQ_ITERS = 2          # Lloyd passes per subspace (fixed, deterministic)
 
 
 def _kmeans_py(sample, k, iters):
-    """Deterministic Lloyd k-means (init = first k sample vectors,
-    empty cluster keeps its centroid, means summed in member order) —
-    the same sequential-float64 discipline as ``_ivf_train`` so the
-    fixture twin reproduces every intermediate."""
+    """Deterministic Lloyd k-means, the one trainer behind the IVF
+    centroids and every PQ codebook: init = first k sample vectors, an
+    emptied cluster keeps its centroid (standard IVF trainer
+    behavior), means summed in member order — plain sequential float64
+    ops so the fixture twin reproduces every intermediate."""
     cens = [list(e) for e in sample[:k]]
     for _ in range(iters):
         members = [[] for _ in cens]
@@ -508,7 +495,7 @@ def _adc_sum(tbl, code_of):
 def _ivfpq_train(sample):
     """IVF centroids + RESIDUAL PQ codebooks from the one stride
     sample — the FAISS IVFADC trainer (twin: ivfpq_topk_rows)."""
-    cens = _ivf_train(sample)
+    cens = _kmeans_py(sample, IVF_K, IVF_ITERS)
     residuals = [[x - y for x, y in zip(s, cens[_ivf_assign_py(s, cens)])]
                  for s in sample]
     return cens, _pq_train(residuals)
@@ -657,10 +644,9 @@ def ivfpq_encode_table(spark, emb_df):
     return base.select(*keep, "list_id", "codes"), cens, cbs
 
 
-def ivfpq_adc_topk(codes_df, cens, cbs, q_emb, k=10,
-                   nprobe=IVF_NPROBE):
+def ivfpq_adc_topk(codes_df, cens, cbs, q_emb, k=10):
     """ADC top-k over a persisted IVF-PQ codes table: rank lists
-    driver-side by query-to-centroid distance, FILTER to the nprobe
+    driver-side by query-to-centroid distance, FILTER to the IVF_NPROBE
     nearest (partition pruning when the table is partitioned by
     list_id), and sum PQ_M lookups into the assigned list's ADC table
     (the query's residual to that list's centroid), left-associatively.
@@ -672,7 +658,7 @@ def ivfpq_adc_topk(codes_df, cens, cbs, q_emb, k=10,
     tbl = F.element_at("adc", F.col("list_id") + 1)
     dist = _adc_sum(tbl, lambda m: F.element_at("codes", m + 1))
     return (codes_df.where(F.col("list_id").isin(
-                _nearest_lists(q_emb, cens, nprobe)))
+                _nearest_lists(q_emb, cens)))
             .crossJoin(F.broadcast(adc_row))
             .select("vec_id", "label", "list_id", dist.alias("adc_d2"))
             .orderBy("adc_d2", "vec_id").limit(k))

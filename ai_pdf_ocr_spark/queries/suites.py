@@ -152,7 +152,9 @@ suite_exactness_twins = _suite(
     top-k, vs the LSH/IVF/PQ ANN rows; ``dedup_embedding_cosine`` —
     exact all-pairs embedding dedup, vs ``dedup_embedding_verified``),
     plus the q3/q5 TPC-H-shaped join headliners (q1 keeps its own row:
-    its 7 numeric aggregates exceed the suite reshape).  Each keeps its
+    its 7 numeric aggregates exceed the suite reshape) and the
+    unbucketed as-of join ``j_events_asof``, the exact baseline of
+    ``j_events_asof_bucketed``.  Each keeps its
     own plan (broadcast dims, TakeOrderedAndProject top-k — pinned in
     tests/test_plans.py) and its own DuckDB oracle; bench.py still
     times ann_bruteforce_topk individually via the MICRO registry.""",
@@ -168,6 +170,10 @@ suite_exactness_twins = _suite(
           "r1": "revenue", "s": "orderdate"}),
         ("q5_nation_revenue",
          {"key": "n_name", "n": "n_items", "r1": "revenue"}),
+        ("j_events_asof",
+         {"key": "CAST(event_id AS STRING)", "n": "matched_click_id",
+          "m": "gap_us",
+          "s": "CAST(user_id AS STRING) || '|' || CAST(ts_us AS STRING)"}),
     ])
 
 

@@ -41,6 +41,21 @@ def text_token_count(spark, sf_dir):
     )
 
 
+def _stop_ratio():
+    """Share of the ``text`` column's tokens that are stopwords (0 for
+    no tokens)."""
+    toks = _tokens(F.col("text"))
+    stop_arr = F.array(*[F.lit(s) for s in _STOPWORDS])
+    return (F.size(F.filter(toks, lambda t: F.array_contains(stop_arr, t)))
+            / F.greatest(F.size(toks), F.lit(1)).cast("double"))
+
+
+def _quality_keep(stop_ratio):
+    """The quality gate's keep predicate: n_chars >= 100 and a
+    stopword ratio of at least 0.05."""
+    return (F.col("n_chars") >= 100) & (stop_ratio >= 0.05)
+
+
 @register("text_quality_score", sql=rf"""
 WITH scored AS (
   SELECT doc_id, lang, n_chars,
@@ -64,23 +79,17 @@ def text_quality_score(spark, sf_dir):
     """Quality heuristics: punctuation ratio, stopword ratio, and a
     simple keep/drop gate (length + stopword floor)."""
     d = load(spark, sf_dir, "documents")
-    toks = _tokens(F.col("text"))
-    stop_arr = F.array(*[F.lit(s) for s in _STOPWORDS])
     punct_ratio = (F.regexp_count("text", F.lit(_PUNCT_SPARK))
                    / F.greatest(F.length("text"), F.lit(1))
                    .cast("double"))
-    stop_ratio = (F.size(F.filter(toks,
-                                  lambda t: F.array_contains(stop_arr, t)))
-                  / F.greatest(F.size(toks), F.lit(1)).cast("double"))
     return (
         d.select("lang", "n_chars",
                  punct_ratio.alias("punct_ratio"),
-                 stop_ratio.alias("stop_ratio"))
+                 _stop_ratio().alias("stop_ratio"))
         .groupBy("lang")
         .agg(F.round(F.avg("punct_ratio"), 4).alias("avg_punct_ratio"),
              F.round(F.avg("stop_ratio"), 4).alias("avg_stop_ratio"),
-             F.sum(F.when((F.col("n_chars") >= 100)
-                          & (F.col("stop_ratio") >= 0.05), 1)
+             F.sum(F.when(_quality_keep(F.col("stop_ratio")), 1)
                    .otherwise(0)).cast("long").alias("n_quality"))
     )
 

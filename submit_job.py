@@ -69,16 +69,14 @@ def main(argv=None) -> int:
 
     from pyspark.sql import SparkSession
 
-    from ai_pdf_ocr_spark.engine.session import ARROW_BATCH
+    from ai_pdf_ocr_spark.engine.session import RUNTIME_CONF
 
     spark = SparkSession.builder.appName("ai-pdf-ocr-spark-extract") \
         .getOrCreate()
     # runtime-settable scale configs (cluster-level ones — executor
     # memory, shuffle service — belong on the spark-submit line)
-    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch",
-                   str(ARROW_BATCH))
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    for key, value in RUNTIME_CONF.items():
+        spark.conf.set(key, value)
     spark.sparkContext.setLogLevel("WARN")
 
     from ai_pdf_ocr_spark.engine.checkpoint import run_extraction

@@ -194,10 +194,10 @@ def test_asof_bucketed_equals_base_on_skewed_user(spark, tmp_path):
     operator's rows on a corpus where one user holds 50% of events
     (carry-forward seeding makes bucket boundaries invisible), and its
     window must partition on (user_id, bkt) — the skew fix."""
-    from ai_pdf_ocr_spark.queries import all_queries
+    from ai_pdf_ocr_spark.queries import MICRO, all_queries
     sf = _skew_events_sf(tmp_path)
     qs = all_queries()
-    base = sorted(map(tuple, qs["j_events_asof"].fn(spark, sf).collect()))
+    base = sorted(map(tuple, MICRO["j_events_asof"].fn(spark, sf).collect()))
     bdf = qs["j_events_asof_bucketed"].fn(spark, sf)
     bucketed = sorted(map(tuple, bdf.collect()))
     assert bucketed == base

@@ -475,8 +475,9 @@ def test_pack_sequences_stream_conservation(spark):
 def test_asof_join_semantics(spark):
     """Every matched click is the max-ts click at-or-before the error
     for that user; unmatched errors precede the user's first click."""
-    from ai_pdf_ocr_spark.queries import all_queries
-    out = all_queries()["j_events_asof"].fn(spark, SF_DIR).collect()
+    from ai_pdf_ocr_spark.queries import MICRO, all_queries
+    all_queries()  # import side effects populate MICRO
+    out = MICRO["j_events_asof"].fn(spark, SF_DIR).collect()
     ev = spark.read.parquet(f"{SF_DIR}/events.parquet").collect()
     clicks = {}
     for e in ev:
@@ -505,8 +506,9 @@ def test_asof_join_single_exchange(spark):
     """The union-window as-of join shuffles exactly once (user_id) —
     never a range-join explosion."""
     import re
-    from ai_pdf_ocr_spark.queries import all_queries
-    df = all_queries()["j_events_asof"].fn(spark, SF_DIR)
+    from ai_pdf_ocr_spark.queries import MICRO, all_queries
+    all_queries()  # import side effects populate MICRO
+    df = MICRO["j_events_asof"].fn(spark, SF_DIR)
     df.count()
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert len(re.findall(r"Exchange hashpartitioning", plan)) == 1, \

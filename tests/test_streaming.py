@@ -243,6 +243,54 @@ def test_cross_epoch_dedup_flags(spark, tmp_path, corpus):
         assert flags[d["doc_id"]] == (False, False), d["doc_id"]
 
 
+def test_stream_band_keys_equal_batch_token_bands(spark):
+    """The stream's history band keys (``_doc_keys`` kinds b0..b3) are
+    the batch twin's ``token_bands`` over each doc's raw_text spans
+    joined with spaces: one signature family, compared as strings."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    from ai_pdf_ocr_spark.engine import schemas
+    from ai_pdf_ocr_spark.engine.streaming import _doc_keys
+    from ai_pdf_ocr_spark.queries.dedup import token_bands
+
+    def span(kind, text, media_ref=None):
+        return {"kind": kind, "text": text, "media_ref": media_ref,
+                "order": 0}
+
+    docs = {
+        "a": [span("raw_text", "The quick brown fox"),
+              span("raw_media", None, "asset-1"),
+              span("raw_text", "jumps over the lazy dog")],
+        "b": [span("raw_text", "  Hello   WORLD\thello ")],
+        "c": [span("raw_text", "the quick brown fox jumps"),
+              span("raw_text", "over the lazy dog")],
+        "d": [span("raw_media", None, "asset-2")],
+    }
+    texts = {d: " ".join(s["text"] for s in spans
+                         if s["kind"] == "raw_text")
+             for d, spans in docs.items()}
+    extracted = schemas.local_frame(
+        spark, [{"doc_id": d, "spans": s} for d, s in docs.items()],
+        T.StructType(schemas.EXTRACTED.fields[:2]))
+    text_df = schemas.local_frame(
+        spark, [{"doc_id": d, "text": t} for d, t in texts.items()],
+        T.StructType([T.StructField("doc_id", T.StringType()),
+                      T.StructField("text", T.StringType())]))
+
+    stream = sorted((r.doc_id, r.kind, r.key) for r in
+                    _doc_keys(extracted).where("kind != 'md5'").collect())
+    batch = sorted((r.doc_id, f"b{r.band}", str(r.band_key)) for r in
+                   token_bands(text_df, F.col("text")).collect())
+    assert stream == batch
+    # four bands for every doc with tokens; "d" has none
+    assert sorted({d for d, _, _ in stream}) == ["a", "b", "c"]
+    assert len(stream) == 12
+    # "a" and "c" share their token set, so all four keys
+    assert ({(k, v) for d, k, v in stream if d == "a"}
+            == {(k, v) for d, k, v in stream if d == "c"})
+
+
 def test_windowed_metrics_watermark_late_data(spark, tmp_path):
     """Watermarked windowed agg (10-min windows, 20-min lateness):
     across three drains, (a) a window emits EXACTLY ONCE, when the

@@ -40,7 +40,10 @@ def build_session(app: str = "ai-pdf-ocr-spark", master: str | None = None,
     cpus = default_cpus()
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
-        n = master[master.find("[") + 1:master.find("]")] if "[" in master else str(cpus)
+        # N of local[N], local[N,F] (F = task attempts) and
+        # local-cluster[N,cores,mem]: the part before the first comma
+        n = master[master.find("[") + 1:master.find("]")].split(",")[0] \
+            if "[" in master else str(cpus)
         shuffle_partitions = cpus if n == "*" else int(n)
     builder = SparkSession.builder.appName(app).master(master)
     # shuffle spill on tmpfs: disk-backed /tmp serializes shuffle IO and

@@ -20,8 +20,8 @@ from pyspark.sql.pandas.types import to_arrow_schema
 
 from .engine import schemas
 from .engine.partitioning import compute_assignment
-from .engine.pipeline import (doc_stats, extract_binned, extract_documents,
-                              extracted_spans_flat)
+from .engine.pipeline import (doc_stats, drop_zip_finders, extract_binned,
+                              extract_documents, extracted_spans_flat)
 from .fixtures.generate import nth_document
 from .queries import FIXTURE_DIR, INPUT_DIR, fixture_sql, register
 
@@ -41,6 +41,7 @@ def synthetic_documents(spark: SparkSession, n: int,
     schema = to_arrow_schema(schemas.DOCUMENTS)
 
     def gen(batches):
+        drop_zip_finders()
         for rb in batches:
             yield pa.RecordBatch.from_pylist(
                 [nth_document(i, heavy_tail_frac=heavy_tail_frac)

@@ -18,6 +18,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..engine.pipeline import drop_zip_finders
 from . import load, register
 
 _FEATURE_SCHEMA = T.StructType([
@@ -43,6 +44,7 @@ def _extract_features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]
     # byte_len arrives as a column (F.length, JVM-side) — only the
     # decode itself is per-item Python, which is what a real codec
     # call would be anyway (VERDICT r3 "What's wrong" #5)
+    drop_zip_finders()
     for pdf in batches:
         feats = [_stub_decode(bytes(p)) for p in pdf["payload"]]
         yield pd.DataFrame({
@@ -95,6 +97,7 @@ def _sample_frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """STUB frame decoder: treats the payload as fixed-size frames and
     samples every k-th (a real deployment swaps in an actual video
     demuxer; the batching/explode plumbing is what is under test)."""
+    drop_zip_finders()
     for pdf in batches:
         doc_ids, idxs, sizes = [], [], []
         for doc_id, p in zip(pdf["doc_id"], pdf["payload"]):

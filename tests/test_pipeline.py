@@ -3,6 +3,11 @@
 
 from __future__ import annotations
 
+import importlib
+import sys
+import zipfile
+import zipimport
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -10,10 +15,55 @@ from pyspark.sql import functions as F
 from ai_pdf_ocr_spark.engine.partitioning import (compute_assignment,
                                                   weighted_repartition)
 from ai_pdf_ocr_spark.engine.pipeline import (
-    doc_stats, documents_df, extract_documents, extracted_spans_flat)
+    doc_stats, documents_df, drop_zip_finders, extract_documents,
+    extracted_spans_flat)
 from ai_pdf_ocr_spark.fixtures.generate import golden_documents, make_documents
 from ai_pdf_ocr_spark.flagship import synthetic_documents
 from tests import oracle as O
+
+
+@pytest.fixture
+def zip_package(tmp_path):
+    """A zip holding package ``zpkg`` (modules ``a`` and ``b``) on
+    ``sys.path``, with ``zpkg.a`` imported through ``zipimport``."""
+    archive = str(tmp_path / "zpkg.zip")
+    with zipfile.ZipFile(archive, "w") as z:
+        z.writestr("zpkg/__init__.py", "")
+        z.writestr("zpkg/a.py", "NAME = 'a'\n")
+        z.writestr("zpkg/b.py", "NAME = 'b'\n")
+    sys.path.insert(0, archive)
+    try:
+        importlib.import_module("zpkg.a")
+        yield archive
+    finally:
+        sys.path.remove(archive)
+        for name in ("zpkg", "zpkg.a", "zpkg.b"):
+            sys.modules.pop(name, None)
+        for path in list(sys.path_importer_cache):
+            if path.startswith(archive):
+                del sys.path_importer_cache[path]
+        zipimport._zip_directory_cache.pop(archive, None)
+
+
+def test_drop_zip_finders_stops_per_task_zip_reparse(zip_package,
+                                                     monkeypatch):
+    """PySpark's worker runs ``importlib.invalidate_caches()`` before
+    every task; with no zip finder cached it re-reads no archive, and
+    an import from the zip still works, from zipimport's directory
+    cache."""
+    assert isinstance(sys.path_importer_cache[zip_package],
+                      zipimport.zipimporter)
+    drop_zip_finders()
+    assert not any(isinstance(f, zipimport.zipimporter)
+                   for f in sys.path_importer_cache.values())
+    reads = []
+    read_directory = zipimport._read_directory
+    monkeypatch.setattr(zipimport, "_read_directory",
+                        lambda path: reads.append(path) or read_directory(path))
+    importlib.invalidate_caches()
+    assert reads == []
+    assert importlib.import_module("zpkg.b").NAME == "b"
+    assert reads == []
 
 
 def _spark_sequences(spark, docs):

@@ -8,7 +8,9 @@ import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
-from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
+
+from ..kernel.extract import OUTPUT_SCHEMA
 
 RAW_SPAN = T.StructType([
     T.StructField("kind", T.StringType()),
@@ -22,23 +24,8 @@ DOCUMENTS = T.StructType([
     T.StructField("spans", T.ArrayType(RAW_SPAN)),
 ])
 
-OUT_SPAN = T.StructType([
-    T.StructField("kind", T.StringType()),
-    T.StructField("text", T.StringType()),
-    T.StructField("media_ref", T.StringType()),
-    T.StructField("order", T.IntegerType()),
-])
-
-EXTRACTED = T.StructType([
-    T.StructField("doc_id", T.StringType(), False),
-    T.StructField("spans", T.ArrayType(OUT_SPAN)),
-    T.StructField("span_count_in", T.LongType()),
-    T.StructField("span_count_out", T.LongType()),
-    T.StructField("malformed", T.LongType()),
-    T.StructField("merged_away", T.LongType()),
-    T.StructField("dedup_removed", T.LongType()),
-    T.StructField("filtered", T.LongType()),
-])
+# the kernel's output batch, as Spark sees it
+EXTRACTED = from_arrow_schema(OUTPUT_SCHEMA)
 
 # the extracted table: EXTRACTED plus the partition column
 EXTRACTED_BINNED = T.StructType(

@@ -14,25 +14,33 @@ the spans array does not change output).
 
 from __future__ import annotations
 
+from itertools import chain
+from operator import itemgetter
+
 import numpy as np
 import pandas as pd
 import pyarrow as pa
 
 from .decode import decode_flat
-from .layout import (SMALL_PAGE, page_candidates, process_page,
-                     process_page_fast)
+from .layout import (SMALL_PAGE, dedupe_pairs, finish_page, merge_pairs,
+                     page_candidates, process_page, process_page_fast)
 
 KERNEL_VERSION = "1.2.0"
 
-_METRIC_COLS = ("span_count_in", "span_count_out", "malformed",
-                "merged_away", "dedup_removed", "filtered")
-
-_OUT_SPAN_PA = pa.struct([
-    pa.field("kind", pa.string()),
-    pa.field("text", pa.string()),
-    pa.field("media_ref", pa.string()),
-    pa.field("order", pa.int32()),
+# the output batch; the engine's Spark schema is derived from it
+OUTPUT_SCHEMA = pa.schema([
+    pa.field("doc_id", pa.string(), nullable=False),
+    pa.field("spans", pa.list_(pa.struct([
+        pa.field("kind", pa.string()),
+        pa.field("text", pa.string()),
+        pa.field("media_ref", pa.string()),
+        pa.field("order", pa.int32()),
+    ]))),
+    *(pa.field(c, pa.int64()) for c in (
+        "span_count_in", "span_count_out", "malformed", "merged_away",
+        "dedup_removed", "filtered")),
 ])
+_METRIC_COLS = OUTPUT_SCHEMA.names[2:]
 
 
 def extract_record_batch(rb: pa.RecordBatch) -> pa.RecordBatch:
@@ -76,35 +84,45 @@ def extract_record_batch(rb: pa.RecordBatch) -> pa.RecordBatch:
 
         # The O(n^2) merge (J3) and dedupe (J2) PREDICATES are pure
         # float math, evaluated for the whole batch over sort-sweep
-        # candidates.  Only the order-dependent greedy STATE MACHINES
-        # stay per page (process_page_fast), walking the candidate
-        # pairs; pairs whose geometry the merge stage changed are
-        # recomputed there around the merged blocks only.
-        merge, m_at, dedupe, d_at = page_candidates(
-            starts, x0, y0, x1, y1, okind == "text",
+        # candidates: merge over arrival geometry, dedupe over the
+        # sorted post-merge blocks.  Only the order-dependent greedy
+        # STATE MACHINES stay per page, walking the candidate pairs.
+        merge, m_at = page_candidates(
+            starts, merge_pairs, x0, y0, x1, y1, okind == "text",
             pd.factorize(direction)[0])
 
-        # one pre-zipped block-tuple list for the whole batch (tuple
-        # field 9 = batch-global index, keyed by the dedupe pairs);
-        # per page the state machine gets ONE list slice instead of nine
+        # one pre-zipped block-tuple list for the whole batch; per page
+        # the state machine gets ONE list slice instead of nine
         all_blocks = list(zip(
             x0.tolist(), y0.tolist(), x1.tolist(), y1.tolist(),
             conf.tolist(), direction.tolist(), okind.tolist(),
-            content.tolist(), oref.tolist(), range(len(x0))))
+            content.tolist(), oref.tolist()))
 
+        page_doc = d_doc[starts].tolist()
+        finals = []
         for g, (s, e) in enumerate(zip(starts.tolist(), ends.tolist())):
-            di = int(d_doc[s])
             page = process_page_fast if e - s <= SMALL_PAGE else process_page
-            ks, ts, rs, orders, st = page(
-                all_blocks[s:e], merge[m_at[g]:m_at[g + 1]],
-                dedupe[d_at[g]:d_at[g + 1]])
+            final, merged_away = page(all_blocks[s:e],
+                                      merge[m_at[g]:m_at[g + 1]])
+            finals.append(final)
+            metrics["merged_away"][page_doc[g]] += merged_away
+
+        flat = list(chain.from_iterable(finals))
+        dedupe, d_at = page_candidates(
+            np.cumsum([0, *map(len, finals[:-1])]), dedupe_pairs,
+            *(np.fromiter(map(itemgetter(k), flat), np.float64, len(flat))
+              for k in range(4)))
+        for g, final in enumerate(finals):
+            di = page_doc[g]
+            ks, ts, rs, orders, removed, filtered = finish_page(
+                final, dedupe[d_at[g]:d_at[g + 1]])
             out_counts[di] += len(ks)
             out_kind.extend(ks)
             out_text.extend(ts)
             out_ref.extend(rs)
             out_order.extend(orders)
-            for key in ("merged_away", "dedup_removed", "filtered"):
-                metrics[key][di] += st[key]
+            metrics["dedup_removed"][di] += removed
+            metrics["filtered"][di] += filtered
 
     metrics["span_count_out"] = out_counts
 
@@ -115,11 +133,10 @@ def extract_record_batch(rb: pa.RecordBatch) -> pa.RecordBatch:
          pa.array(out_text, type=pa.string()),
          pa.array(out_ref, type=pa.string()),
          pa.array(out_order, type=pa.int32())],
-        fields=list(_OUT_SPAN_PA))
+        fields=list(OUTPUT_SCHEMA.field("spans").type.value_type))
     offsets = pa.array(np.concatenate(([0], np.cumsum(out_counts))),
                        type=pa.int32())
-    spans_out = pa.ListArray.from_arrays(offsets, struct)
-    cols = [rb.column("doc_id"), spans_out] + \
-        [pa.array(metrics[c], type=pa.int64()) for c in _METRIC_COLS]
+    cols = [rb.column("doc_id"), pa.ListArray.from_arrays(offsets, struct)]
     return pa.RecordBatch.from_arrays(
-        cols, names=["doc_id", "spans", *_METRIC_COLS])
+        cols + [pa.array(metrics[c]) for c in _METRIC_COLS],
+        schema=OUTPUT_SCHEMA)

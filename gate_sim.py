@@ -1,33 +1,17 @@
 """Driver-gate simulation: run EVERY registered query on Spark AND its
 DuckDB oracle at the given SF, compare rows/schema/values after the
 driver's normalization (columns sorted by name, rows sorted, floats
-rounded to 9)."""
+rounded to 9), the same comparison as ``tests/test_queries.py``."""
 import json
-import math
 import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 import duckdb
 
+from tests.test_queries import TABLES, _norm_rows as norm_rows
+
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings")
-
-
-def norm_rows(cols, rows):
-    idx = sorted(range(len(cols)), key=lambda i: cols[i])
-
-    def norm(v):
-        if isinstance(v, float):
-            if math.isnan(v):
-                return "nan"
-            return round(v, 9)
-        return v
-
-    out = [tuple(norm(r[i]) for i in idx) for r in rows]
-    return sorted(out, key=lambda r: tuple((x is None, str(type(x)), str(x))
-                                           for x in r))
 
 
 def main():
@@ -79,4 +63,5 @@ def main():
     print(json.dumps({"sf": SF_DIR, "ok": ok, "bad": bad}, default=str))
 
 
-main()
+if __name__ == "__main__":
+    main()

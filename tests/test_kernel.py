@@ -97,8 +97,7 @@ def _assert_corpus_equal(docs: list[dict]):
 
 
 # a merge group whose direction the reading-order split drops has no
-# position in the sorted page; the dedupe rescan around merged blocks
-# must skip it
+# position in the sorted page, so dedupe must never pair it
 _MERGED_DROPPED = {"doc_id": "merged-dropped", "spans": [
     {"kind": "raw_text", "text": t, "media_ref": None, "offset": i}
     for i, t in enumerate(["1;0,0,100,50;0.9;diagonal|aa",
@@ -158,6 +157,35 @@ def test_empty_and_all_malformed_docs():
     assert out.loc["allbad", "malformed"] == 2
     assert out.loc["allbad", "span_count_in"] == 2
     assert out.loc["empty", "span_count_out"] == 0
+
+
+def _text_doc(doc_id: str, payloads: list[str]) -> dict:
+    return {"doc_id": doc_id, "spans": [
+        {"kind": "raw_text", "text": t, "media_ref": None, "offset": i}
+        for i, t in enumerate(payloads)]}
+
+
+# page 1 holds a dedupe pair, page 3 a merge pair; page 2 is all
+# ``diagonal`` blocks (one merge pair among them), which the
+# reading-order split drops, leaving the dedupe sweep an empty page
+_PAGE1 = ["1;0,0,100,50|kept", "1;10,10,60,40|dup"]
+_PAGE2 = ["2;0,0,100,50;0.9;diagonal|a", "2;5,0,105,50;0.8;diagonal|bb",
+          "2;0,60,40,80;;diagonal|c"]
+_PAGE3 = ["3;0,0,100,50|x", "3;5,0,105,50|yy"]
+
+
+def test_pages_left_empty_by_the_direction_split():
+    page5 = [p.replace("2;", "5;", 1) for p in _PAGE2]
+    for docs in (
+            # an empty page between two normal pages
+            [_text_doc("between", _PAGE1 + _PAGE2 + _PAGE3),
+             _text_doc("after", _PAGE1)],
+            # every page of the batch empty
+            [_text_doc("only", _PAGE2), _text_doc("two", _PAGE2 + page5)],
+            # the empty page last in the batch
+            [_text_doc("first", _PAGE1 + _PAGE3),
+             _text_doc("last", _PAGE1 + _PAGE2)]):
+        _assert_corpus_equal(docs)
 
 
 def test_metrics_consistency():
